@@ -25,7 +25,7 @@ from presto_on_ray_spark.functions.registry import (
     register_function,
     register_presto_functions,
 )
-from presto_on_ray_spark.session import apply_session_defaults
+from presto_on_ray_spark.session import apply_session_defaults, local_relation
 from presto_on_ray_spark.sources.tables import load_table, register_tables
 from presto_on_ray_spark.type_names import presto_type_name as _presto_type
 
@@ -677,9 +677,7 @@ class Engine:
             if m.group(1) is not None:
                 rx = re.compile(self._like_to_regex(m.group(1)))
                 names = [n for n in names if rx.match(n)]
-            return self.spark.createDataFrame(
-                [(n,) for n in names] or [], "Catalog STRING"
-            )
+            return local_relation(self.spark, [(n,) for n in names], "Catalog STRING")
         if m := _SHOW_SCHEMAS_RE.match(text):
             cat, like = m.group(1), m.group(2)
             if cat is not None and cat.lower() in self._catalogs:
@@ -700,9 +698,7 @@ class Engine:
             if like is not None:
                 rx = re.compile(self._like_to_regex(like))
                 names = [n for n in names if rx.match(n)]
-            return self.spark.createDataFrame(
-                [(n,) for n in names] or [], "Schema STRING"
-            )
+            return local_relation(self.spark, [(n,) for n in names], "Schema STRING")
         if m := _SHOW_TABLES_RE.match(text):
             sch, like = m.group(1), m.group(2)
             attached = {s for ss in self._catalogs.values() for s in ss}
@@ -725,7 +721,7 @@ class Engine:
             if like is not None:
                 rx = re.compile(self._like_to_regex(like))
                 rows = [r for r in rows if rx.match(r[0])]
-            return self.spark.createDataFrame(sorted(rows) or [], "Table STRING")
+            return local_relation(self.spark, sorted(rows), "Table STRING")
         if m := _SHOW_FUNCTIONS_RE.match(text):
             df = self.spark.sql("SHOW FUNCTIONS")
             if m.group(1) is not None:
@@ -739,8 +735,9 @@ class Engine:
                 (f.name, _presto_type(f.dataType), "", "")
                 for f in self.table(name).schema.fields
             ]
-            return self.spark.createDataFrame(
-                rows, "Column STRING, Type STRING, Extra STRING, Comment STRING"
+            return local_relation(
+                self.spark, rows,
+                "Column STRING, Type STRING, Extra STRING, Comment STRING",
             )
         if m := _SHOW_CREATE_RE.match(text):
 
@@ -750,7 +747,7 @@ class Engine:
                 for f in self.table(name).schema.fields
             )
             ddl = f"CREATE TABLE {name} (\n{fields}\n)"
-            return self.spark.createDataFrame([(ddl,)], "`Create Table` STRING")
+            return local_relation(self.spark, [(ddl,)], "`Create Table` STRING")
         if m := _CREATE_VIEW_RE.match(text):
             or_replace, name, cols, query_text = m.groups()
             parts = name.split(".")
@@ -884,7 +881,7 @@ class Engine:
             self.spark.sql(f"ALTER TABLE {old} RENAME TO {name}")
             raise
         self.spark.sql(f"DROP TABLE {old}")
-        return self.spark.createDataFrame([(before - after,)], "rows BIGINT")
+        return local_relation(self.spark, [(before - after,)], "rows BIGINT")
 
     # -- introspection (Presto EXPLAIN / SHOW STATS / ANALYZE) ---------
     def _introspection_statement(self, text: str):
@@ -904,7 +901,7 @@ class Engine:
             rows = _stats.table_stats(self.table(name))
             self._table_stats[name.lower()] = rows
             n = rows[-1][4]  # summary row carries row_count
-            return self.spark.createDataFrame([(float(n),)], "rows DOUBLE")
+            return local_relation(self.spark, [(float(n),)], "rows DOUBLE")
         if m := _SHOW_STATS_RE.match(text):
             target = m.group(1).strip()
             if target.startswith("("):
@@ -991,7 +988,8 @@ class Engine:
                     # Presto's IO plan carries the outputTable alongside
                     # the input tables — render it as a final row
                     out = out.unionAll(
-                        self.spark.createDataFrame(
+                        local_relation(
+                            self.spark,
                             [(f"output-table: {target}", None, None,
                               None, None, "")],
                             out.schema,
@@ -1029,7 +1027,7 @@ class Engine:
         elif etype == "VALIDATE":
             # analysis already succeeded in self.sql(); mirror Presto's
             # single-row boolean result
-            return self.spark.createDataFrame([(True,)], "Valid BOOLEAN")
+            return local_relation(self.spark, [(True,)], "Valid BOOLEAN")
         elif etype == "IO":
             # input locations, one per distinct parent directory — the
             # engine's rendering of Presto's IO plan (input tables),
@@ -1101,8 +1099,8 @@ class Engine:
                         for c, (lo, hi) in sorted(ranges.items())
                     ),
                 ))
-            return self.spark.createDataFrame(
-                rows or [],
+            return local_relation(
+                self.spark, rows,
                 "input_location STRING, files INT, row_groups INT, "
                 "rows BIGINT, row_groups_pruned INT, pushed_ranges STRING",
             )
@@ -1110,7 +1108,7 @@ class Engine:
             plan = qe.optimizedPlan().toString()
         else:  # DISTRIBUTED (Presto's physical plan) — the default
             plan = explain_formatted(df)
-        return self.spark.createDataFrame([(plan,)], "`Query Plan` STRING")
+        return local_relation(self.spark, [(plan,)], "`Query Plan` STRING")
 
     # -- session properties (Presto SET/RESET/SHOW SESSION) -----------
     def _session_statement(self, text: str):
@@ -1143,7 +1141,7 @@ class Engine:
             return None
         if _SHOW_SESSION_RE.match(text):
             rows = sorted(self._session_props.items())
-            return self.spark.createDataFrame(rows or [], "name STRING, value STRING")
+            return local_relation(self.spark, rows, "name STRING, value STRING")
         if m := _USE_RE.match(text):
             first, second = m.group(1).lower(), m.group(2)
             if second is not None:
@@ -1191,7 +1189,7 @@ class Engine:
             # full type inference every position is `unknown` (the
             # value Presto itself uses for undeterminable parameters).
             rows = [(i + 1, "unknown") for i in range(shielded.count("?"))]
-            return self.spark.createDataFrame(rows or [], "position INT, type STRING")
+            return local_relation(self.spark, rows, "position INT, type STRING")
         if m := _DESC_OUTPUT_RE.match(text):
 
             stmt = self._lookup_prepared(m.group(1))
@@ -1199,7 +1197,7 @@ class Engine:
             analyzed = dialect._restore_literals(shielded.replace("?", "NULL"), lits)
             schema = self.spark.sql(dialect.translate(analyzed)).schema
             rows = [(f.name, _presto_type(f.dataType)) for f in schema.fields]
-            return self.spark.createDataFrame(rows, "column_name STRING, type STRING")
+            return local_relation(self.spark, rows, "column_name STRING, type STRING")
         return NotImplemented
 
     def _lookup_prepared(self, name: str) -> str:

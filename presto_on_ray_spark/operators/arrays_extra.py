@@ -7,6 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 
@@ -166,8 +167,8 @@ def lateral_subquery_sql(spark, sf_dir):
 def date_sequence(spark, sf_dir):
     """sequence(date, date, interval) (SURVEY §2.8 array family) —
     month series rendered as YYYY-MM strings."""
-    rows = spark.createDataFrame(
-        [("1997-01",), ("1997-04",), ("1997-06",)], ["start_month"]
+    rows = local_relation(
+        spark, [("1997-01",), ("1997-04",), ("1997-06",)], "start_month string"
     )
     seq = F.sequence(
         F.to_date(F.concat(F.col("start_month"), F.lit("-01"))),

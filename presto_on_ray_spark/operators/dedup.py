@@ -1948,8 +1948,8 @@ def merge_into_base_index(
         affected docs — base docs sharing >= 1 shingle with the batch
         — under the merged df, keep everyone else's rows untouched
         (their shingles' dfs are unchanged, so their per-doc (df, sh)
-        order is provably identical). The merged index is
-        RELATION-FOR-RELATION equal to a from-scratch rebuild
+        order is provably identical). Over a fresh index the merged
+        index is RELATION-FOR-RELATION equal to a from-scratch rebuild
         (pinned in tests/test_dedup.py), so the AllPairs prefix
         guarantee holds exactly. Work is bounded by the postings of
         the batch's shingles, not the corpus. (On adversarially
@@ -1964,9 +1964,13 @@ def merge_into_base_index(
         df snapshots break the single-total-order premise of the
         prefix-filter theorem: the near tier may MISS pairs involving
         stale-ranked docs (the exact tier is digest-joined and
-        unaffected). The contract is periodic rebuild: staleness is
-        bounded by sum(df drift) since the last build/strict-merge,
-        and build_base_index/save_base_index is the compaction.
+        unaffected). A later strict merge does NOT repair them: its
+        delta re-rank (_delta_prefix) touches only docs sharing a
+        shingle with ITS batch, so a stale doc outside that set keeps
+        its stale rows. The contract is periodic rebuild: staleness is
+        bounded by sum(df drift) since the last build, and only
+        build_base_index (compact_saved_index for a saved index)
+        cures it.
 
     Lifecycle mirrors build_base_index: tracked=True registers the
     merged relations with the session cache registry; tracked=False
@@ -2114,9 +2118,11 @@ def _delta_prefix(index: BaseIndex, new_sho, df_delta, df_rel, tn: int, td: int)
     the batch's docs, and keep everyone else's saved prefix rows
     untouched. The window's input is bounded by the postings of the
     batch's shingles rather than the corpus (guide §2.3: shuffle fewer
-    bytes into the rank sort). The result is row-for-row equal to
-    _ranked_prefix over ALL shingles under the merged df (pinned by
-    the merge-equals-rebuild tests). On saturated vocabularies
+    bytes into the rank sort). Over a fresh ``index.prefix`` the
+    result is row-for-row equal to _ranked_prefix over ALL shingles
+    under the merged df (pinned by the merge-equals-rebuild tests);
+    untouched rows left stale by an earlier rerank=False merge stay
+    stale. On saturated vocabularies
     "affected" can approach every doc and this degenerates to the
     wholesale re-rank plus two bounded semi/anti joins."""
     affected = (
@@ -2459,8 +2465,9 @@ def merge_into_saved_index(
       (ingest_batch_lsh's check= guard passes across admissions).
     - ``prefix`` with rerank=False: append the new docs' prefix rows
       ranked under the merged df (the stale policy — near-tier recall
-      for drifted base docs degrades until the next strict merge or
-      rebuild; exact tier is rank-free and unaffected).
+      for drifted base docs degrades until compact_saved_index or a
+      rebuild — a later strict merge does not repair it, see below;
+      exact tier is rank-free and unaffected).
     - ``digests`` / ``df``: aggregates keyed by digest/shingle — one
       row per distinct value, the small relations — re-aggregated and
       swapped in as a new generation (plain parquet cannot merge rows
@@ -2469,7 +2476,8 @@ def merge_into_saved_index(
       new generation under the merged df, as the DELTA re-rank the
       in-session merge runs (shared _delta_prefix): only docs sharing
       a shingle with the batch enter the rank window, everyone else's
-      saved prefix rows are copied forward — and the corpus is NEVER
+      saved prefix rows are copied forward, including rows left stale
+      by earlier rerank=False merges — and the corpus is NEVER
       re-shingled: the rank reads the existing shingles parquet
       instead of re-running the explode + distinct over all document
       text, which is the dominant stage of build_base_index.

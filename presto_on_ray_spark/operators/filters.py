@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 
@@ -118,7 +119,7 @@ def cast_try_cast(spark, sf_dir):
     inline VALUES source (SURVEY §2.1). Note: string→int of '1.25'
     is NULL under both Spark try_cast and... differs in DuckDB (rounds);
     so only clean ints vs garbage are compared for as_int."""
-    rows = spark.createDataFrame([("42",), ("1.25",), ("abc",), ("-7",)], ["d"])
+    rows = local_relation(spark, [("42",), ("1.25",), ("abc",), ("-7",)], "d string")
     return rows.select(
         F.col("d").alias("raw"),
         F.expr("try_cast(CASE WHEN d RLIKE '^-?[0-9]+$' THEN d END AS int)").alias("as_int"),
@@ -188,5 +189,8 @@ def readme_parity_sum(spark, sf_dir):
     """The reference demo's second query: ``select sum(income) from
     user`` (reference README.md:102-110), over the same 1-row inline
     table (README.md:93-96)."""
-    user = spark.createDataFrame([(1, "bob", 30, 100000)], ["id", "name", "age", "income"])
+    user = local_relation(
+        spark, [(1, "bob", 30, 100000)],
+        "id long, name string, age long, income long",
+    )
     return user.agg(F.sum("income").cast("long").alias("total_income"))

@@ -36,6 +36,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 # Knuth multiplicative hash: id · 2654435761 mod 2³²; ids ≤ ~2³⁰ keep
@@ -767,9 +768,7 @@ def corpus_mix_sources(spark, sf_dir):
     d = t(spark, sf_dir, "documents").filter(
         F.col("source").isin(*_MIX_WEIGHTS)
     )
-    w = spark.createDataFrame(
-        list(_MIX_WEIGHTS.items()), "source STRING, w INT"
-    )
+    w = local_relation(spark, _MIX_WEIGHTS.items(), "source STRING, w INT")
     okey = _portable_h60(F.lit(_MIX_SEED), F.col("doc_id"))
     # persisted FIRST so the source counts, the bucket histogram and
     # the ranking pass all read the cached 4-narrow-column relation —

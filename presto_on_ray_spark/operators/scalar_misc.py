@@ -6,6 +6,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 _URLS = [
@@ -37,7 +38,7 @@ def url_functions(spark, sf_dir):
     path_with_host column canonicalizes the one representational
     difference (parse_url PATH excludes host, the string oracle keeps
     it — both sides build host+path explicitly)."""
-    rows = spark.createDataFrame(_URLS, ["url", "id"])
+    rows = local_relation(spark, _URLS, "url string, id long")
     return rows.select(
         "id",
         F.split(F.col("url"), "://")[0].alias("protocol"),
@@ -190,9 +191,10 @@ def uuid_ip_functions(spark, sf_dir):
     functions per §1.3 mapping): v4 validation, octet extraction,
     RFC1918 check. uuid() itself is nondeterministic → exercised in
     tests, not the oracle."""
-    ips = spark.createDataFrame(
+    ips = local_relation(
+        spark,
         [("10.0.0.1",), ("192.168.1.77",), ("8.8.8.8",), ("999.1.2.3",), ("not-an-ip",)],
-        ["ip"],
+        "ip string",
     )
     v4 = r"^((25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])\.){3}(25[0-5]|2[0-4][0-9]|[01]?[0-9]?[0-9])$"
     return ips.select(

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 
@@ -336,7 +337,9 @@ def ivf_topk(
         d = ((centers - qn) ** 2).sum(axis=1)
         for cell in np.argsort(d)[:nprobe]:
             probe_rows.append((r.qid, int(cell), [float(x) for x in qv]))
-    probes = spark.createDataFrame(probe_rows, ["qid", "cell", "q_emb"])
+    probes = local_relation(
+        spark, probe_rows, "qid long, cell long, q_emb array<double>"
+    )
 
     cand = assigned.join(F.broadcast(probes), "cell").filter(
         F.col("vec_id") != F.col("qid")
@@ -852,7 +855,8 @@ def pq_codebook(
     cb = {(r["j"], r["c"]): [int(x) for x in r["cw"]] for r in init}
 
     def cb_df():
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [(j, c, cw) for (j, c), cw in sorted(cb.items())],
             "j int, c int, cw array<bigint>",
         )
@@ -2425,7 +2429,7 @@ def merge_into_saved_ann_index(
             if committed:
                 batch_v = batch_v.join(
                     F.broadcast(
-                        spark.createDataFrame(committed, "vec_id long")
+                        local_relation(spark, committed, "vec_id long")
                     ),
                     "vec_id",
                     "left_anti",
@@ -2715,7 +2719,8 @@ def refine_cells(v, n_cells: int = _SEM_CELLS, iters: int = 3):
     dim = len(next(iter(cents.values())))
 
     def cents_df():
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [(c, cv) for c, cv in sorted(cents.items())],
             "cell long, cv array<bigint>",
         )
@@ -3563,7 +3568,7 @@ def kcenter_seeds(v, k: int = _KCENTER_K):
         prev.unpersist()
     cur.unpersist()
     spark = v.sparkSession
-    return spark.createDataFrame(seeds, "seed_rank int, vec_id long, mind long")
+    return local_relation(spark, seeds, "seed_rank int, vec_id long, mind long")
 
 
 def _kcenter_oracle(k: int = _KCENTER_K) -> str:

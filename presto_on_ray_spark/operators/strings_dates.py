@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 
@@ -258,9 +259,10 @@ def string_distance_functions(spark, sf_dir):
     registered shim (same-length pairs only, unit-tested). jaccard is
     asserted defined-only: DuckDB's is bigram-based, Spark has no
     builtin — the engine's n-gram Jaccard lives in operators/dedup.py."""
-    pairs = spark.createDataFrame(
+    pairs = local_relation(
+        spark,
         [("kitten", "sitting"), ("flaw", "lawn"), ("spark", "spark"), ("abc", "xyz")],
-        ["a", "b"],
+        "a string, b string",
     )
     return pairs.select(
         "a",

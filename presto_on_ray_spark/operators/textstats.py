@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.suite import query
 
 _STOPWORDS = ["the", "a", "of", "and", "to"]
@@ -344,7 +345,7 @@ def text_bm25_topk(spark, sf_dir):
     before it ever joins the per-doc lengths. One shuffle for tf, one
     for dl, one for the per-(qid, doc) sum."""
     d = t(spark, sf_dir, "documents")
-    qterms = spark.createDataFrame(_BM25_QUERIES, "qid long, term string")
+    qterms = local_relation(spark, _BM25_QUERIES, "qid long, term string")
     return bm25_topk(d, qterms)
 
 
@@ -731,9 +732,7 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
     zin = F.sum(F.col("tf") * F.col("wnum")).over(Window.partitionBy("doc_id"))
     for epoch in range(1, epochs + 1):
         wdf = F.broadcast(
-            spark.createDataFrame(
-                list(enumerate(w)), "bucket long, wnum long"
-            )
+            local_relation(spark, enumerate(w), "bucket long, wnum long")
         )
         # one job: mistakes' per-bucket gradient + per-bucket row count
         # (bounded collect, <= 4097 rows); err = the bias bucket's row
@@ -784,9 +783,7 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
             break
         for r in g:
             w[int(r["bucket"])] += int(r["g"])
-    return spark.createDataFrame(
-        list(enumerate(best_w)), "bucket long, wnum long"
-    )
+    return local_relation(spark, enumerate(best_w), "bucket long, wnum long")
 
 
 def _train_ctes(
@@ -973,7 +970,8 @@ def text_classifier_train_trace(spark, sf_dir):
     tr: list = []
     classifier_train(d, langid_labels(d), trace=tr)
     best_e = min(tr, key=lambda r: (r["err"], r["e"]))["e"]
-    return spark.createDataFrame(
+    return local_relation(
+        spark,
         [(r["e"], r["err"], r["wsum"], r["wdot"], r["e"] == best_e)
          for r in tr],
         "e long, err long, wsum long, wdot long, best boolean",

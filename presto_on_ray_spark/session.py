@@ -19,7 +19,37 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
+
+
+def local_relation(
+    spark: SparkSession, rows, schema: str | StructType
+) -> DataFrame:
+    """A driver-built relation (``rows`` of positional tuples typed by
+    ``schema``, a DDL string or StructType) as a ``LocalRelation``.
+
+    ``spark.createDataFrame(rows, schema)`` over a Python list plans as
+    a ``LogicalRDD`` over a pickled Python RDD, so every scan of it —
+    each broadcast of a per-epoch weight table, say — runs tasks that
+    wait on Python workers. The same rows handed over as an Arrow table
+    plan as a ``LocalRelation``: a broadcast of it is a driver-local
+    ``LocalTableScan`` and no task starts a Python worker. Schema and
+    rows are those of the list path; a naive ``datetime`` in a
+    TIMESTAMP column is read as UTC, the engine's session time zone.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, schema)
 
 
 def get_spark(

@@ -38,6 +38,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from presto_on_ray_spark.session import local_relation
+
 _STATS_SCHEMA = (
     "column_name STRING, data_size DOUBLE, distinct_values_count DOUBLE, "
     "nulls_fraction DOUBLE, row_count DOUBLE, low_value STRING, high_value STRING"
@@ -103,7 +105,7 @@ def table_stats(df: DataFrame) -> list[tuple]:
 
 def stats_df(spark: SparkSession, rows: list[tuple]) -> DataFrame:
     """Wrap precomputed stats rows in Presto's SHOW STATS schema."""
-    return spark.createDataFrame(rows, _STATS_SCHEMA)
+    return local_relation(spark, rows, _STATS_SCHEMA)
 
 
 def show_stats(spark: SparkSession, df: DataFrame) -> DataFrame:

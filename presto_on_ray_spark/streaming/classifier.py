@@ -19,8 +19,10 @@ from __future__ import annotations
 from typing import Callable
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators.textstats import classifier_score_biased
+from presto_on_ray_spark.session import local_relation
 from presto_on_ray_spark.streaming.ingest import _start
 
 
@@ -54,10 +56,18 @@ def _unique_batch_docs(batch_df: DataFrame) -> DataFrame:
     carries a doubled n_tokens (keep/logit are scale-invariant) and a
     batch-trained retrain double-weights its gradient —
     biased_features assumes unique doc_ids per its docstring (ADVICE
-    r15). O(batch) work, keyed the same way as the featurize
-    aggregation that follows."""
-    return batch_df.filter(batch_df["text"].isNotNull()).dropDuplicates(
-        ["doc_id"]
+    r15). The kept row is the max (text, other columns...) per doc_id,
+    so a trigger carrying one doc_id with DIFFERENT payloads scores the
+    same way however its rows are ordered or partitioned. O(batch)
+    work, keyed the same way as the featurize aggregation that
+    follows."""
+    docs = batch_df.filter(batch_df["text"].isNotNull())
+    rest = [c for c in docs.columns if c not in ("doc_id", "text")]
+    return (
+        docs.groupBy("doc_id")
+        .agg(F.max(F.struct("text", *rest)).alias("_row"))
+        .select("doc_id", "_row.*")
+        .select(*docs.columns)
     )
 
 
@@ -73,7 +83,7 @@ def _score_or_empty(batch_docs: DataFrame, weights_path: str, sink, batch_id):
         w = load_classifier_weights(spark, weights_path)
         sink(classifier_score_biased(batch_docs, w), batch_id)
     else:
-        sink(spark.createDataFrame([], _SCORED_SCHEMA), batch_id)
+        sink(local_relation(spark, [], _SCORED_SCHEMA), batch_id)
 
 
 def _require_live_weights(path: str, caller: str) -> None:
@@ -199,7 +209,6 @@ def stream_classifier_retrain_on_drift(
         load_classifier_weights,
         save_classifier_weights,
     )
-    from pyspark.sql import functions as F
 
     if retrain is None:
         def retrain(batch_docs: DataFrame) -> DataFrame:  # noqa: F811
@@ -295,8 +304,6 @@ def stream_classifier_retrain_windowed(
     to classifier_train over the same union of batches."""
     import json
     import os
-
-    from pyspark.sql import functions as F
 
     from presto_on_ray_spark.operators.drift import psi_against_reference
     from presto_on_ray_spark.operators.textstats import (

@@ -663,6 +663,71 @@ def test_delta_prefix_equals_wholesale_rerank(spark):
         idx.release()
 
 
+def test_strict_saved_merge_keeps_earlier_stale_prefix(spark, tmp_path):
+    """rerank=False, then rerank=True on the saved index: the strict
+    merge's delta re-rank only touches docs sharing a shingle with ITS
+    batch, so a base doc ranked stale by the earlier merge keeps its
+    stale prefix rows — only compact_saved_index (or a rebuild) cures
+    the drift."""
+    from presto_on_ray_spark.operators.dedup import (
+        BaseIndex,
+        build_base_index,
+        compact_saved_index,
+        load_base_index,
+        merge_into_saved_index,
+        save_base_index,
+    )
+
+    ten, base, admitted, batch = _merge_fixture(spark)
+    p = str(tmp_path / "bidx")
+    idx = build_base_index(base, tracked=False)
+    save_base_index(idx, p)
+    idx.release()
+    # admitted doc 4 shares shingles with base doc 1: doc 1 goes stale
+    merge_into_saved_index(spark, p, admitted, rerank=False)
+
+    def doc1_prefix():
+        return sorted(
+            map(
+                tuple,
+                load_base_index(spark, p)
+                .prefix.filter(F.col("doc_id") == 1)
+                .collect(),
+            )
+        )
+
+    stale_doc1 = doc1_prefix()
+    # shares no shingle with doc 1, so the strict merge leaves it alone
+    later = spark.createDataFrame(
+        [(8, "late arriving words nobody else used")],
+        "doc_id int, text string",
+    )
+    merge_into_saved_index(spark, p, later, rerank=True)
+
+    full_rows = (
+        base.collect()
+        + [r for r in admitted.collect() if r["text"]]
+        + later.collect()
+    )
+    rebuilt = build_base_index(
+        spark.createDataFrame(full_rows, base.schema), tracked=False
+    )
+    try:
+        want_doc1 = sorted(
+            map(tuple, rebuilt.prefix.filter(F.col("doc_id") == 1).collect())
+        )
+        assert stale_doc1 != want_doc1  # the stale merge drifted doc 1
+        assert doc1_prefix() == stale_doc1  # the strict merge kept it
+        compact_saved_index(spark, p)
+        compacted = load_base_index(spark, p)
+        for name in BaseIndex._fields:
+            got = sorted(map(tuple, getattr(compacted, name).collect()))
+            want = sorted(map(tuple, getattr(rebuilt, name).collect()))
+            assert got == want, f"compacted.{name} != rebuilt.{name}"
+    finally:
+        rebuilt.release()
+
+
 def test_merge_into_saved_index_strict_equals_rebuild(spark, tmp_path):
     """The parquet-backed merge (the production form): after
     merge_into_saved_index the on-disk index is relation-for-relation

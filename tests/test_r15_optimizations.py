@@ -18,6 +18,7 @@ import sys
 from pyspark.sql import functions as F, Window
 
 from presto_on_ray_spark.caching import release_cached, tracked_persist
+from presto_on_ray_spark.session import local_relation
 
 
 def _formatted_plan(df) -> str:
@@ -43,7 +44,8 @@ def test_classifier_epoch_job_is_one_windowed_pass(spark, sf_dir):
     try:
         fl.count()  # materialize the cache the epochs scan
         wdf = F.broadcast(
-            spark.createDataFrame(
+            local_relation(
+                spark,
                 [(b, 1) for b in range(_CLF_BUCKETS + 1)],
                 "bucket long, wnum long",
             )

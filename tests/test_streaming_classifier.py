@@ -99,6 +99,44 @@ def test_duplicate_doc_ids_in_one_trigger_collapse(spark, tmp_path):
         weights.unpersist()
 
 
+def test_conflicting_redelivery_scores_deterministically(spark, tmp_path):
+    """One trigger carrying the same doc_id with DIFFERENT text keeps
+    the max text, whatever the row order: the same batch delivered
+    twice, its rows in opposite orders, scores identically."""
+    weights = (
+        spark.range(4097)
+        .selectExpr("id AS bucket", "CAST(1 AS LONG) AS wnum")
+        .persist()
+    )
+    rows = [(1, "a b"), (1, "z y x w"), (3, "dog")]
+    src = tmp_path / "arrivals"
+    for name, order in (("f1", rows), ("f2", rows[::-1])):
+        spark.createDataFrame(order, "doc_id long, text string").coalesce(
+            1
+        ).write.parquet(str(src / name))
+    got = {}
+
+    def sink(df, batch_id):
+        got[batch_id] = {
+            r.doc_id: (r.n_tokens, r.logit, r.keep) for r in df.collect()
+        }
+
+    try:
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .option("maxFilesPerTrigger", "1")
+            .option("recursiveFileLookup", "true")
+            .parquet(str(src))
+        )
+        stream_classifier_score(
+            stream, weights, sink, checkpoint_dir=str(tmp_path / "ckpt")
+        )
+        assert got[0] == got[1]
+        assert {d: v[0] for d, v in got[0].items()} == {1: 4, 3: 1}
+    finally:
+        weights.unpersist()
+
+
 def test_null_text_rows_dropped_like_batch(spark, tmp_path):
     weights = (
         spark.range(4097)
