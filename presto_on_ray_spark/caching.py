@@ -11,18 +11,48 @@ paths do not collide). The contract:
 - whoever consumes the query's result calls ``release_cached()`` when
   done (bench.py does so after each query; tests via fixture).
 
-``release_cached`` is safe to call at any time: unpersist(blockingized
-False) only drops cache entries, never changes results — the plan
-recomputes if re-used.
+``release_cached`` is safe to call at any time:
+``unpersist(blocking=False)`` only drops cache entries, never changes
+results — the plan recomputes if re-used.
+
+Reuse registry: ``tracked_reuse(tag, key, build)`` keeps a derived
+value (a DataFrame whose build ran eager jobs, e.g. the near-dup
+component relation after its connected-components rounds) so later
+queries of the same session get it without re-running those jobs. An
+entry is found again when its tag is equal, its ``key`` DataFrame's
+analyzed plan ``sameResult``-matches the caller's in the same
+SparkSession, and the session confs that shape the physical plan
+(``_PLAN_CONFS``) are unchanged; a query re-run under another
+shuffle-partition count builds afresh. It lives until the next
+``release_cached()``, which clears the registry, and it follows the
+staleness rule of a persisted plan: CacheManager serves a persisted
+plan over a parquet path even if the files under that path changed,
+and so does the registry; ``release_cached()`` is the refresh for
+both. The registry is guarded by the same lock as the persist list,
+so REST/thrift serving threads and streaming workers may call it
+concurrently. ``build`` runs outside the lock: two racing first calls
+may both build (each gets its own value, with the same rows), and a
+build that a ``release_cached()`` overtook returns its value without
+recording it.
 """
 
 from __future__ import annotations
 
 import threading
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame
 
+V = TypeVar("V")
+
 _TRACKED: list[DataFrame] = []
+# (tag, key DataFrame, plan confs, value) per tracked_reuse build
+_REUSED: list[tuple[str, DataFrame, tuple, object]] = []
+# session confs that change how a key's plan executes
+_PLAN_CONFS = ("spark.sql.shuffle.partitions",)
+# bumped by release_cached(); a build that started before a release
+# does not record its value after it
+_GENERATION = 0
 # registry mutations are lock-guarded: statement-serving threads
 # (REST/thrift) and streaming worker threads can reach tracked_persist
 # or release_cached concurrently with the main thread, and an
@@ -38,9 +68,35 @@ def tracked_persist(df: DataFrame) -> DataFrame:
     return df
 
 
+def tracked_reuse(tag: str, key: DataFrame, build: Callable[[], V]) -> V:
+    """The value an earlier call built under ``tag`` for a ``key``
+    whose plan has the same result as this one under the same plan
+    confs; otherwise ``build()``, recorded until the next
+    ``release_cached()``."""
+    plan = key._jdf.queryExecution().analyzed()
+    confs = tuple(key.sparkSession.conf.get(c) for c in _PLAN_CONFS)
+    with _LOCK:
+        for t, k, c, value in _REUSED:
+            if (t == tag and c == confs
+                    and k.sparkSession is key.sparkSession
+                    and k._jdf.queryExecution().analyzed().sameResult(plan)):
+                return value
+        generation = _GENERATION
+    value = build()
+    with _LOCK:
+        if generation == _GENERATION:
+            _REUSED.append((tag, key, confs, value))
+    return value
+
+
 def release_cached() -> int:
-    """Unpersist every tracked DataFrame; returns how many were
-    released. Idempotent — the tracking list is drained."""
+    """Unpersist every tracked DataFrame and clear the reuse registry;
+    returns how many DataFrames were unpersisted. Idempotent — the
+    tracking list is drained."""
+    global _GENERATION
+    with _LOCK:
+        _REUSED.clear()
+        _GENERATION += 1
     n = 0
     while True:
         with _LOCK:

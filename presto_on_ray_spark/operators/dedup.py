@@ -22,7 +22,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from presto_on_ray_spark.caching import tracked_persist
+from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.suite import query
 
@@ -242,10 +242,15 @@ def dedup_ngram_jaccard(spark, sf_dir):
     runs that form), but the join explodes only prefix shingles -- the
     rare ones -- so the 100 TB skew hazard of stop-shingles is filtered
     out by construction, and measured ~25% faster even at sf0.1."""
+    return _ngram_jaccard_pairs(t(spark, sf_dir, "documents"))
+
+
+def _ngram_jaccard_pairs(d: DataFrame) -> DataFrame:
+    """dedup_ngram_jaccard's pair relation over the (doc_id, text)
+    relation ``d``."""
     from pyspark.sql import Window
 
     t_thresh = 0.6
-    d = t(spark, sf_dir, "documents")
     # shingles carried as xxhash64 i64, not strings: every downstream
     # join/groupBy shuffles 8-byte keys instead of ~20-byte text.
     # Set semantics are unchanged barring a 64-bit collision (~1e-10 at
@@ -540,6 +545,17 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     return labels.select("node", F.col("label").alias("component_id"))
 
 
+def _keepers(pairs: DataFrame) -> DataFrame:
+    """Connected components over ``pairs`` → (doc_id, component_id,
+    is_keeper) with the min-id member of each component the keeper."""
+    comp = connected_components(pairs)
+    return comp.select(
+        F.col("node").alias("doc_id"),
+        "component_id",
+        (F.col("node") == F.col("component_id")).alias("is_keeper"),
+    )
+
+
 # Exact near-dup keeper oracle: 3-gram Jaccard >= 0.6 pairs, transitive
 # closure via recursive CTE, keeper = min doc_id per component. Shared by
 # dedup_neardup_clusters (ngram-prefix-filter path) and dedup_lsh_keepers
@@ -597,13 +613,21 @@ def dedup_neardup_clusters(spark, sf_dir):
     connected components → deterministic keeper (min doc_id per
     cluster). The oracle computes the same components via a recursive
     transitive-closure CTE — exact agreement pins both the pair
-    relation and the clustering."""
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component_id",
-        (F.col("node") == F.col("component_id")).alias("is_keeper"),
+    relation and the clustering. The component relation is built once
+    per session for a given documents relation (see _neardup_exact)."""
+    return _neardup_exact(t(spark, sf_dir, "documents"))
+
+
+def _neardup_exact(d: DataFrame) -> DataFrame:
+    """dedup_neardup_clusters over the documents relation ``d``. The
+    pair join, exact verify and connected-components rounds run once
+    per ``d`` plan until the next release_cached() (tracked_reuse), so
+    every consumer of the exact tier in a session — this key, the
+    adaptive dispatch, dedup_keep_best, split_leakage_safe — shares one
+    component relation."""
+    return tracked_reuse(
+        "neardup_exact", d,
+        lambda: _keepers(_ngram_jaccard_pairs(d).select("doc_a", "doc_b")),
     )
 
 
@@ -655,13 +679,7 @@ def dedup_lsh_keepers(spark, sf_dir):
     # same persisted shingle relation shape as dedup_ngram_jaccard; the
     # CacheManager dedupes by analyzed-plan equality across invocations
     sh = tracked_persist(d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh")))
-    verified = verify_jaccard(cand, sh, t_thresh)
-    comp = connected_components(verified)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component_id",
-        (F.col("node") == F.col("component_id")).alias("is_keeper"),
-    )
+    return _keepers(verify_jaccard(cand, sh, t_thresh))
 
 
 @query("dedup_minhash_clusters")
@@ -671,13 +689,7 @@ def dedup_minhash_clusters(spark, sf_dir):
     Rows-only driver check (LSH candidates are engine-internal);
     tests/test_dedup.py asserts exact duplicates always land in one
     cluster and keepers are cluster minima."""
-    pairs = dedup_minhash_lsh(spark, sf_dir)
-    comp = connected_components(pairs)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component_id",
-        (F.col("node") == F.col("component_id")).alias("is_keeper"),
-    )
+    return _keepers(dedup_minhash_lsh(spark, sf_dir))
 
 
 # -- adaptive tier selection (round 7) ---------------------------------
@@ -812,27 +824,25 @@ def lsh_dial(
     return best
 
 
-def _lsh_keepers_dialed(spark, sf_dir, j: float, target_recall: float):
-    """dedup_lsh_keepers with the recall-bounded dial: lsh_dial-chosen
-    banded candidates → exact-Jaccard verify (precision exact by
-    construction) → connected components → min-id keeper. Per-pair
-    candidate recall at the threshold is >= target_recall by the
-    S-curve bound; keeper recall through connected components is
-    higher still (a cluster is lost only if EVERY pair linking it is
-    missed)."""
+def _lsh_keepers_dialed(d: DataFrame, j: float, target_recall: float):
+    """dedup_lsh_keepers over the documents relation ``d`` with the
+    recall-bounded dial: lsh_dial-chosen banded candidates →
+    exact-Jaccard verify (precision exact by construction) → connected
+    components → min-id keeper. Per-pair candidate recall at the
+    threshold is >= target_recall by the S-curve bound; keeper recall
+    through connected components is higher still (a cluster is lost
+    only if EVERY pair linking it is missed). Built once per session
+    for each (dial, ``d`` plan), like _neardup_exact."""
     n_bands, rows = lsh_dial(j, target_recall)
-    d = t(spark, sf_dir, "documents")
-    cand = lsh_candidates(d, n_bands, rows)
-    sh = tracked_persist(
-        d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
-    )
-    verified = verify_jaccard(cand, sh, j)
-    comp = connected_components(verified)
-    return comp.select(
-        F.col("node").alias("doc_id"),
-        "component_id",
-        (F.col("node") == F.col("component_id")).alias("is_keeper"),
-    )
+
+    def build():
+        cand = lsh_candidates(d, n_bands, rows)
+        sh = tracked_persist(
+            d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
+        )
+        return _keepers(verify_jaccard(cand, sh, j))
+
+    return tracked_reuse(f"lsh_keepers:{n_bands}x{rows}@{j}", d, build)
 
 
 @query("dedup_lsh_keepers_bounded", oracle=_KEEPER_CC_ORACLE)
@@ -851,7 +861,7 @@ def dedup_lsh_keepers_bounded(spark, sf_dir):
     (test_lsh_candidates_cover_all_true_pairs, re-pinned for the dial
     in test_lsh_dial.py). Precision is exact via the verify stage, so
     the output equals the recursive-CTE oracle's keeper relation."""
-    return _lsh_keepers_dialed(spark, sf_dir, j=0.6,
+    return _lsh_keepers_dialed(t(spark, sf_dir, "documents"), j=0.6,
                                target_recall=_LSH_TARGET_RECALL)
 
 
@@ -883,7 +893,13 @@ def dedup_neardup_adaptive(spark, sf_dir, target_recall: float = _LSH_TARGET_REC
     1.0 (pinned precondition — the dialed candidates are a SUPERSET of
     the frozen 8x4 set, see dedup_lsh_keepers_bounded), so the
     recursive-CTE oracle holds. Consumers (dedup_keep_best,
-    split_leakage_safe) thread ``target_recall`` through."""
+    split_leakage_safe) thread ``target_recall`` through.
+
+    Either tier's component relation is shared within a session: it is
+    built once per documents relation (and, in the LSH tier, per dial)
+    until the next release_cached(), so this key, dedup_keep_best,
+    split_leakage_safe and dedup_neardup_clusters reuse one build
+    instead of re-running the pair join and connected components."""
     d = t(spark, sf_dir, "documents")
     # the same persisted shingle relation both tiers build (the
     # CacheManager dedupes by analyzed-plan equality, so the stat pass
@@ -892,9 +908,8 @@ def dedup_neardup_adaptive(spark, sf_dir, target_recall: float = _LSH_TARGET_REC
         d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
     )
     if shingle_saturation(sh) < _SATURATION_AVG_DF:
-        return dedup_neardup_clusters(spark, sf_dir)
-    return _lsh_keepers_dialed(spark, sf_dir, j=0.6,
-                               target_recall=target_recall)
+        return _neardup_exact(d)
+    return _lsh_keepers_dialed(d, j=0.6, target_recall=target_recall)
 
 
 @query(

@@ -1278,7 +1278,12 @@ def split_leakage_safe(spark, sf_dir, target_recall: float | None = None):
     statistic dispatches to the exact tier, so the recursive-CTE
     oracle holds verbatim. The split itself adds one left join against
     the component relation (which carries only docs that HAVE a
-    near-duplicate) and a map-side bucket expression."""
+    near-duplicate) and a map-side bucket expression. The component
+    relation is shared within a session: after dedup_neardup_clusters,
+    dedup_neardup_adaptive or dedup_keep_best has built it for the
+    same documents relation (and the same tier and dial), this key
+    reuses it until the next release_cached() and runs no pair join or
+    connected-components round of its own."""
     from presto_on_ray_spark.operators.dedup import (
         _LSH_TARGET_RECALL,
         dedup_neardup_adaptive,
