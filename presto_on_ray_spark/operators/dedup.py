@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.store import local_paths
 from presto_on_ray_spark.suite import query
 
 # Deterministic MinHash permutation parameters h_i(x) = (a_i*x + b_i) mod p.
@@ -1754,13 +1755,7 @@ def save_base_index(
     import os
     import shutil
 
-    try:
-        path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        os_path = None
-
+    path, os_path = local_paths(path) or (path, None)
     if os_path is None:
         _write_index_relations(index, path, with_bands)
         return
@@ -1857,12 +1852,7 @@ def load_base_index(spark, path: str) -> BaseIndex:
     store the caller owns that invariant."""
     import os
 
-    try:
-        path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        os_path = None
+    path, os_path = local_paths(path) or (path, None)
     if os_path and os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
         raise ValueError(
             f"saved index at {path!r} has a _MERGE_MUTATING marker: a "
@@ -1904,12 +1894,7 @@ def load_saved_bands(spark, path: str):
     exactly as untrustworthy as its other appends."""
     import os
 
-    try:
-        spark_path, os_path = _index_paths(path)
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        spark_path, os_path = path, None
+    spark_path, os_path = local_paths(path) or (path, None)
     if os_path is not None:
         if os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
             raise ValueError(
@@ -2361,8 +2346,8 @@ def _saved_index_mutation(path: str):
     import shutil
 
     # Spark and the os-level guard/swap must act on the byte-exact
-    # same directory; _index_paths yields the canonical local pair.
-    spark_path, os_path = _index_paths(path)
+    # same directory; local_paths yields the canonical local pair.
+    spark_path, os_path = local_paths(path, _INDEX_NOT_LOCAL)
     mutating = os.path.join(os_path, "_MERGE_MUTATING")
     if os.path.exists(mutating):
         raise ValueError(
@@ -2677,61 +2662,12 @@ def compact_saved_index(spark, path: str) -> None:
         mut.swap()
 
 
-class AmbiguousIndexPath(ValueError):
-    """A saved-index URI that urlparse would silently truncate
-    ('?'/'#' present): never downgraded to best-effort handling."""
-
-
-def _index_paths(path: str) -> tuple:
-    """(spark_path, os_path) for a local saved-index location, or a
-    loud ValueError for non-local URIs. Accepts plain paths, Windows
-    drive paths (single-letter 'schemes'), and the file:/x /
-    file:///x / file://localhost/x URI forms.
-
-    NO percent-decoding happens anywhere: Hadoop treats %XX in a
-    file: URI literally (verified against pyspark 4.1.2 — writing to
-    'file:/x%20y' creates a directory literally named 'x%20y'), so
-    the os-level side must use the byte-exact same path or every
-    guard silently checks a different directory than Spark mutates.
-    The Spark side gets the canonical 'file:<path>' form: Hadoop
-    rejects the file://localhost authority spelling ('Wrong FS'),
-    and keeping an explicit file: scheme stops a non-file
-    fs.defaultFS from capturing the writes. Plain schemeless paths
-    pass through verbatim for both sides (their defaultFS semantics
-    are the caller's choice, exactly as in save/load)."""
-    import re as _re
-    from urllib.parse import urlparse
-
-    parsed = urlparse(path)
-    if len(parsed.scheme) <= 1:  # plain path or Windows drive letter
-        return path, path
-    if parsed.scheme != "file" or parsed.netloc not in ("", "localhost"):
-        raise ValueError(
-            f"saved-index mutation (merge_into_saved_index / "
-            f"compact_saved_index) uses local filesystem renames; "
-            f"{path!r} is not a local path. On a shared store, write a "
-            f"new generation (build_base_index + save_base_index) or "
-            f"keep the index in a transactional table format."
-        )
-    if parsed.query or parsed.fragment:
-        # urlparse truncates at '?'/'#', but Hadoop treats both
-        # literally in paths — silently operating on the truncated
-        # directory would redirect the whole index. A DISTINCT class:
-        # save/load downgrade generic non-local ValueErrors to
-        # "skip the os-level extras", but this one must surface there
-        # too (swallowing it would skip the crash-marker guard for
-        # exactly the URIs it deems dangerous).
-        raise AmbiguousIndexPath(
-            f"saved-index URI {path!r} contains '?' or '#'; these are "
-            f"literal path bytes to Hadoop but URI separators to this "
-            f"parser — pass the location as a plain path instead"
-        )
-    p = parsed.path
-    if _re.match(r"^/[A-Za-z]:[/\\]", p):  # file:///C:/x
-        # keep the explicit scheme on the Spark side here too (a bare
-        # 'C:/x' re-resolves against fs.defaultFS); os side gets C:/x
-        return "file:" + p, p[1:]
-    return "file:" + p, p
+_INDEX_NOT_LOCAL = (
+    "saved-index mutation (merge_into_saved_index / compact_saved_index) "
+    "uses local filesystem renames. On a shared store, write a new "
+    "generation (build_base_index + save_base_index) or keep the index "
+    "in a transactional table format."
+)
 
 
 def _ingest_exact_tier(batch, index: BaseIndex):

@@ -19,6 +19,7 @@ from typing import NamedTuple
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from presto_on_ray_spark import store
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import local_relation
@@ -1859,7 +1860,7 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
     n = v.count()
     init_n = n // 5
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:12]
-    store = os.path.join(
+    store_dir = os.path.join(
         tempfile.gettempdir(),
         f"por_spark_ann_lifecycle_{getpass.getuser()}_{tag}",
     )
@@ -1868,11 +1869,11 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
         initial = v.filter(F.col("vec_id") < init_n)
         save_ann_index(
             build_ann_index(initial, n_cells=auto_ivf_cells(init_n)),
-            store,
+            store_dir,
             force=True,
         )
-        _, os_path, _ = _ann_paths(store)
-        gen_before = _ann_current_gen(os_path)
+        _, os_path = store.local_paths(store_dir)
+        gen_before = store.live_generation(os_path)
         # (4a) the rebuild's index relations depend only on the corpus
         # relation v — never on the store the merge mutates — so they
         # materialize CONCURRENTLY with the growth episode (guide §2.6
@@ -1886,10 +1887,10 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
             # (2) the growth episode: admit the remaining 80% under the
             # frozen quantizers
             merge_into_saved_ann_index(
-                spark, store, v.filter(F.col("vec_id") >= init_n)
+                spark, store_dir, v.filter(F.col("vec_id") >= init_n)
             )
             # (3) the advisory must fire on the grown index
-            advice = ann_rebuild_advice(load_ann_index(spark, store))
+            advice = ann_rebuild_advice(load_ann_index(spark, store_dir))
             fwarm.result()
         if not advice["rebuild_due"]:
             raise AssertionError(
@@ -1897,14 +1898,14 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
                 f"growth: {advice}"
             )
         # (4) rebuild at the corpus's own auto sizing; publish = new gen
-        save_ann_index(rebuilt_ix, store, force=True)
-        gen_after = _ann_current_gen(os_path)
+        save_ann_index(rebuilt_ix, store_dir, force=True)
+        gen_after = store.live_generation(os_path)
         if gen_after == gen_before:
             raise AssertionError(
                 f"lifecycle: rebuild did not flip the generation "
                 f"({gen_before!r})"
             )
-        rebuilt = load_ann_index(spark, store)
+        rebuilt = load_ann_index(spark, store_dir)
         # (5) the rebuilt index is correctly sized — the advice is quiet
         post = ann_rebuild_advice(rebuilt)
         if post["rebuild_due"]:
@@ -1969,32 +1970,21 @@ def similarity_ivfpq_refined_topk(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Saved ANN index: the IVF-PQ relations maintained on disk — the
 # production form at 100 TB (codes are a table alongside the vector
-# store, not a session cache). Layout on local paths is GENERATIONAL:
-#
-#     {path}/_CURRENT            one line naming the live generation
-#     {path}/gen-K/{cents,codebook,codes}
-#     {path}/_ANN_WRITING        exclusive single-writer marker
-#
-# Every save and compact writes a COMPLETE new generation and then
-# atomically repoints _CURRENT (os.replace) — the live generation is
-# never mutated in place, so there is no mixed-generation state, no
-# multi-directory swap window, and recovery never has to reconstruct a
-# half-swapped index: a crash before the flip leaves the old pointer
-# valid (the orphan directory is swept by the next writer), a crash
-# after the flip leaves the new generation complete. The ONLY in-place
-# mutation is merge's codes APPEND inside the current generation, which
-# is why readers refuse while the writer marker is up. Failures before
-# any byte is committed release the marker cleanly; failures that may
-# have committed bytes strand it — torn states are loud, never silently
-# readable. The lifecycle mirrors the dedup side's saved index where
-# semantics match (single-writer lock, loud stranding, scheduled
-# verify) and is deliberately lighter where they don't: ANN quantizers
-# are frozen sample-trained artifacts, so append is the only
-# incremental mutation — no re-rank analogue, no staleness dial.
+# store, not a session cache). Local paths use the generation-pointer
+# protocol of presto_on_ray_spark/store.py (gen-K/{cents,codebook,
+# codes}, marker _ANN_WRITING, only the live generation kept); save and
+# compact commit a complete new generation. What is specific to this
+# store: the ONLY in-place mutation is merge's codes APPEND inside the
+# live generation, which is why readers refuse while the marker is up.
+# Failures before any byte is committed release the marker cleanly;
+# failures that may have committed bytes strand it — torn states are
+# loud, never silently readable. Non-local paths get a flat relation
+# layout with no marker or generations. ANN quantizers are frozen
+# sample-trained artifacts, so append is the only incremental mutation
+# — no re-rank analogue, no staleness dial.
 # ---------------------------------------------------------------------------
 _ANN_RELATIONS = ("cents", "codebook", "codes")
 _ANN_WRITING = "_ANN_WRITING"
-_ANN_CURRENT = "_CURRENT"
 
 
 class TornAnnCodes(ValueError):
@@ -2008,77 +1998,18 @@ class TornAnnCodes(ValueError):
     dispatches on instead of a bare ValueError match."""
 
 
-def _ann_paths(path: str):
-    """(spark_path, os_path, locked) — local paths get the full
-    generational protocol; non-local stores get (path, None, False):
-    a flat relation layout written with plain overwrites, no marker,
-    no generations (there is no os-level atomic pointer there), and
-    the caller owns single-writer discipline. merge/compact require
-    the local protocol, same as the dedup side's mutation paths."""
-    from presto_on_ray_spark.operators.dedup import (
-        AmbiguousIndexPath,
-        _index_paths,
+def _ann_held(os_path: str, what: str) -> str:
+    """The writer-marker refusal text, with the one-call recovery."""
+    return (
+        f"saved ANN index at {os_path!r}: {_ANN_WRITING} is held — "
+        f"a writer is live or crashed mid-{what}. If no writer is "
+        f"live, the one-call recovery is compact_saved_ann_index("
+        f"force=True, drop_torn=True): it writes a complete new "
+        f"generation (dropping torn vectors if any — a no-op on a "
+        f"clean index) and flips atomically, then sweeps the "
+        f"orphans. save_ann_index(force=True) with a rebuilt index "
+        f"is the full-rebuild alternative."
     )
-
-    try:
-        spark_path, os_path = _index_paths(path)
-        return spark_path, os_path, True
-    except AmbiguousIndexPath:
-        raise
-    except ValueError:
-        return path, None, False
-
-
-def _ann_marker(os_path: str):
-    import os
-
-    return os.path.join(os_path, _ANN_WRITING)
-
-
-def _ann_acquire(os_path: str, what: str, force: bool = False):
-    """Exclusive-create the writer marker; loud when already held.
-    ``force=True`` removes a pre-existing marker first — the takeover
-    path for a STRANDED marker (crashed writer), valid only when the
-    caller has established no writer is live."""
-    import os
-
-    os.makedirs(os_path, exist_ok=True)
-    if force:
-        try:
-            os.remove(_ann_marker(os_path))
-        except FileNotFoundError:
-            pass
-    try:
-        fd = os.open(_ann_marker(os_path), os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        os.close(fd)
-    except FileExistsError:
-        raise ValueError(
-            f"saved ANN index at {os_path!r}: {_ANN_WRITING} is held — "
-            f"a writer is live or crashed mid-{what}. If no writer is "
-            f"live, the one-call recovery is compact_saved_ann_index("
-            f"force=True, drop_torn=True): it writes a complete new "
-            f"generation (dropping torn vectors if any — a no-op on a "
-            f"clean index) and flips atomically, then sweeps the "
-            f"orphans. save_ann_index(force=True) with a rebuilt index "
-            f"is the full-rebuild alternative."
-        )
-
-
-def _ann_release(os_path: str):
-    import os
-
-    os.remove(_ann_marker(os_path))
-
-
-def _ann_current_gen(os_path: str):
-    """The live generation name, or None when no flip has happened."""
-    import os
-
-    try:
-        with open(os.path.join(os_path, _ANN_CURRENT)) as f:
-            return f.read().strip()
-    except FileNotFoundError:
-        return None
 
 
 def _ann_resolve_gen(os_path: str, path: str) -> str:
@@ -2089,7 +2020,7 @@ def _ann_resolve_gen(os_path: str, path: str) -> str:
     missing index."""
     import os
 
-    gen = _ann_current_gen(os_path)
+    gen = store.live_generation(os_path)
     if gen is not None:
         return gen
     if all(
@@ -2097,94 +2028,15 @@ def _ann_resolve_gen(os_path: str, path: str) -> str:
     ):
         raise ValueError(
             f"saved ANN index at {path!r} uses the flat relation "
-            f"layout ({_ANN_CURRENT} missing but cents/codebook/"
+            f"layout ({store.POINTER} missing but cents/codebook/"
             f"codes directories present) — read the relations "
             f"directly with spark.read.parquet and re-save with "
             f"save_ann_index to adopt the generational protocol."
         )
     raise ValueError(
-        f"no saved ANN index at {path!r}: {_ANN_CURRENT} is missing "
+        f"no saved ANN index at {path!r}: {store.POINTER} is missing "
         f"(no save ever completed its atomic flip here)."
     )
-
-
-def _ann_flip(os_path: str, gen: str):
-    """Atomically repoint _CURRENT at ``gen``: write-aside, fsync the
-    tmp file, os.replace, fsync the directory — readers see the old
-    complete generation or the new complete generation, never anything
-    else, and the pointer survives a power loss at any step (an
-    unflushed replace could otherwise surface empty or stale after
-    reboot). Durability caveat, stated once: the parquet DATA files
-    are flushed by Spark/OS page-cache policy, not fsynced here — full
-    power-loss durability for the data needs the filesystem's
-    guarantees (or a transactional table format), same as every other
-    parquet sink in this engine."""
-    import os
-
-    tmp = os.path.join(os_path, _ANN_CURRENT + "__tmp")
-    with open(tmp, "w") as f:
-        f.write(gen)
-        f.flush()
-        os.fsync(f.fileno())
-    os.replace(tmp, os.path.join(os_path, _ANN_CURRENT))
-    try:
-        # directory fsync is best-effort ONLY for portability: opening
-        # a directory read-only is not universal (PermissionError on
-        # Windows, ENOTSUP/EINVAL on some filesystems), and the flip
-        # itself already committed — failing the save for that would
-        # report a completed commit as a failure. A REAL fsync error
-        # (EIO: the rename may not be durable) is not silently
-        # swallowed: it degrades the power-loss guarantee and says so.
-        dfd = os.open(os_path, os.O_RDONLY)
-        try:
-            os.fsync(dfd)
-        finally:
-            os.close(dfd)
-    except OSError as exc:
-        import errno
-        import warnings
-
-        if exc.errno not in (errno.ENOTSUP, errno.EINVAL, errno.EACCES,
-                             errno.EPERM, errno.EISDIR):
-            warnings.warn(
-                f"saved ANN index at {os_path!r}: directory fsync after "
-                f"the pointer flip failed ({exc}) — the flip committed "
-                f"but may not survive an immediate power loss",
-                stacklevel=2,
-            )
-
-
-def _ann_next_gen(os_path: str) -> str:
-    """Next generation directory name: one past the highest existing
-    gen-K (orphans from crashed writers count — reusing their number
-    would write into a dirty directory)."""
-    import os
-    import re
-
-    best = 0
-    for name in os.listdir(os_path) if os.path.isdir(os_path) else []:
-        m = re.fullmatch(r"gen-(\d+)", name)
-        if m:
-            best = max(best, int(m.group(1)))
-    return f"gen-{best + 1}"
-
-
-def _ann_sweep_orphans(os_path: str, keep: str):
-    """Remove every gen-* directory except ``keep`` (crashed writers'
-    litter and superseded generations) and any _CURRENT__tmp. Runs
-    only under the writer marker and only AFTER a successful flip, so
-    the swept directories are provably unreferenced."""
-    import os
-    import re
-    import shutil
-
-    for name in os.listdir(os_path):
-        if name != keep and re.fullmatch(r"gen-\d+", name):
-            shutil.rmtree(os.path.join(os_path, name))
-    try:
-        os.remove(os.path.join(os_path, _ANN_CURRENT + "__tmp"))
-    except FileNotFoundError:
-        pass
 
 
 def _load_ann_relations(spark, rel_root: str) -> AnnIndex:
@@ -2218,34 +2070,6 @@ def _ann_write_relations(index: AnnIndex, base: str) -> None:
             f.result()
 
 
-def _ann_commit_generation(index: AnnIndex, spark_path: str, os_path: str):
-    """THE generation-commit sequence, shared by save and compact so
-    their crash semantics can never drift: write every relation into a
-    fresh gen directory, flip _CURRENT atomically, sweep superseded/
-    orphan generations. The caller owns the marker and the
-    release-vs-strand decision around this call; a failure BEFORE the
-    flip leaves the pointer on the old generation (the partial gen
-    directory is unreferenced litter the next successful commit
-    sweeps). The post-flip orphan sweep is BEST-EFFORT: once the flip
-    committed, a sweep failure (EBUSY, NFS silly-rename, permissions)
-    must not report the committed generation as a failed write — the
-    litter waits for the next successful commit instead."""
-    import warnings
-
-    gen = _ann_next_gen(os_path)
-    _ann_write_relations(index, f"{spark_path}/{gen}")
-    _ann_flip(os_path, gen)
-    try:
-        _ann_sweep_orphans(os_path, keep=gen)
-    except OSError as exc:
-        warnings.warn(
-            f"saved ANN index at {os_path!r}: generation {gen} committed "
-            f"but the orphan sweep failed ({exc}) — superseded gen-* "
-            f"directories remain until the next successful commit",
-            stacklevel=3,
-        )
-
-
 def save_ann_index(index: AnnIndex, path: str, force: bool = False) -> None:
     """Materialize the three AnnIndex relations under ``path``. Local
     paths get the generational protocol: the relations are written
@@ -2258,20 +2082,22 @@ def save_ann_index(index: AnnIndex, path: str, force: bool = False) -> None:
     takeover). Non-local paths get plain flat overwrite writes with no
     marker or generations: the store's atomicity and the caller's
     single-writer discipline apply."""
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
-        _ann_write_relations(index, spark_path)
+    paths = store.local_paths(path)
+    if paths is None:
+        _ann_write_relations(index, path)
         return
-    _ann_acquire(os_path, "save", force=force)
+    spark_path, os_path = paths
+    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "save"), force)
     try:
-        _ann_commit_generation(index, spark_path, os_path)
-    except BaseException:
-        # the pointer never moved: the old generation (if any) is
-        # intact, and the partial gen directory is unreferenced litter
-        # the next writer sweeps
-        _ann_release(os_path)
-        raise
-    _ann_release(os_path)
+        store.commit(
+            os_path,
+            lambda gen: _ann_write_relations(index, f"{spark_path}/{gen}"),
+            keep_predecessor=False,
+        )
+    finally:
+        # a failure before the flip left the old generation (if any)
+        # live; the partial gen directory is litter the next commit sweeps
+        store.release(os_path, _ANN_WRITING)
 
 
 def load_ann_index(spark, path: str) -> AnnIndex:
@@ -2289,12 +2115,11 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     index. Lazy reads: the file listing snapshots at load, so codes
     appended later need a reload to become visible. Non-local paths
     read the flat layout (see save_ann_index)."""
-    import os
-
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
-        return _load_ann_relations(spark, spark_path)
-    if os.path.exists(_ann_marker(os_path)):
+    paths = store.local_paths(path)
+    if paths is None:
+        return _load_ann_relations(spark, path)
+    spark_path, os_path = paths
+    if store.held(os_path, _ANN_WRITING):
         raise ValueError(
             f"saved ANN index at {path!r}: {_ANN_WRITING} is held — a "
             f"writer is live or crashed. If no writer is live, the "
@@ -2389,16 +2214,14 @@ def merge_into_saved_ann_index(
     trip the duplicate guard on them)."""
     import os
 
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
-        raise ValueError(
-            f"merge_into_saved_ann_index requires the local generational "
-            f"protocol; {path!r} is not a local path — encode with "
-            f"encode_into_ann_index and manage the append (and its "
-            f"single-writer discipline) in the store's own transaction "
-            f"layer, or save a new generation with save_ann_index."
-        )
-    _ann_acquire(os_path, "merge")
+    spark_path, os_path = store.local_paths(
+        path,
+        "merge_into_saved_ann_index requires the local generational "
+        "protocol — encode with encode_into_ann_index and manage the "
+        "append (and its single-writer discipline) in the store's own "
+        "transaction layer, or save a new generation with save_ann_index.",
+    )
+    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "merge"))
     codes_os = None
     try:
         gen = _ann_resolve_gen(os_path, path)
@@ -2437,7 +2260,7 @@ def merge_into_saved_ann_index(
         _ann_batch_guard(index, batch_v, path, skip_hit=resume)
         new_codes = encode_into_ann_index(batch_v, index)
     except BaseException:
-        _ann_release(os_path)  # nothing written: clean release
+        store.release(os_path, _ANN_WRITING)  # nothing written
         raise
     before = _ann_data_files(codes_os)
     try:
@@ -2447,7 +2270,7 @@ def merge_into_saved_ann_index(
         # exception surfaced; confirm via the listing and release —
         # a cleanly-aborted job commits nothing
         if _ann_data_files(codes_os) == before:
-            _ann_release(os_path)
+            store.release(os_path, _ANN_WRITING)
         # else: data files appeared — genuinely torn, strand the marker
         raise
     except BaseException:
@@ -2457,7 +2280,7 @@ def merge_into_saved_ann_index(
         # strand the marker (recovery: compact(force=True,
         # drop_torn=True) once the job is known dead)
         raise
-    _ann_release(os_path)
+    store.release(os_path, _ANN_WRITING)
 
 
 def _ann_data_files(codes_os: str):
@@ -2634,14 +2457,12 @@ def compact_saved_ann_index(
     marker releases and the old generation stays live, exactly as it
     was). Failures before the flip always leave the old generation
     untouched."""
-    spark_path, os_path, locked = _ann_paths(path)
-    if not locked:
-        raise ValueError(
-            f"compact_saved_ann_index requires the local generational "
-            f"protocol; {path!r} is not a local path — rewrite a new "
-            f"generation with save_ann_index instead."
-        )
-    _ann_acquire(os_path, "compact", force=force)
+    spark_path, os_path = store.local_paths(
+        path,
+        "compact_saved_ann_index requires the local generational "
+        "protocol — rewrite a new generation with save_ann_index instead.",
+    )
+    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "compact"), force)
     try:
         gen = _ann_resolve_gen(os_path, path)
         index = _load_ann_relations(spark, f"{spark_path}/{gen}")
@@ -2660,7 +2481,11 @@ def compact_saved_ann_index(
                 index.cents, index.codebook, index.codes.join(good, "vec_id")
             )
             verify_ann_index(keep)  # non-droppable corruption still raises
-        _ann_commit_generation(keep, spark_path, os_path)
+        store.commit(
+            os_path,
+            lambda gen: _ann_write_relations(keep, f"{spark_path}/{gen}"),
+            keep_predecessor=False,
+        )
     except TornAnnCodes:
         # refused a torn index (drop_torn=False): the marker STAYS —
         # it is the only thing keeping the torn state loud
@@ -2669,9 +2494,9 @@ def compact_saved_ann_index(
         # the pointer never moved: old generation intact, partial
         # new-generation litter is unreferenced and swept by the next
         # successful writer
-        _ann_release(os_path)
+        store.release(os_path, _ANN_WRITING)
         raise
-    _ann_release(os_path)
+    store.release(os_path, _ANN_WRITING)
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,12 @@ from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.store import (
+    load_relation_generation,
+    relation_generation,
+    relation_paths,
+    save_relation_generation,
+)
 from presto_on_ray_spark.suite import query
 
 _STOPWORDS = ["the", "a", "of", "and", "to"]
@@ -1060,9 +1066,8 @@ def text_classifier_distilled(spark, sf_dir):
 
 # -- published-weights store (round 14) -----------------------------------
 # VERDICT r13 #4 + What's-wrong #5: a deployment reads PUBLISHED
-# weights, it does not retrain per query. The store is the counts/ANN
-# generation-flip protocol (pipeline_prep.save_relation_generation):
-# train → publish flips _CURRENT onto a fresh numbered generation;
+# weights, it does not retrain per query. The store is a single-relation
+# generation store (presto_on_ray_spark/store.py, relname "weights"):
 # scorers read the live generation (streaming: per trigger, so a
 # mid-stream publish changes verdicts exactly at a trigger boundary —
 # pinned in tests/test_classifier_store.py) or pin one for
@@ -1076,10 +1081,6 @@ def save_classifier_weights(weights, path: str, force: bool = False) -> None:
     of the weights store at ``path`` (atomic _CURRENT flip,
     single-writer marker, predecessor kept for the reader grace
     window)."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        save_relation_generation,
-    )
-
     save_relation_generation(weights, path, _WEIGHTS_REL, force=force)
 
 
@@ -1087,10 +1088,6 @@ def load_classifier_weights(spark, path: str, generation: str | None = None):
     """Read the live generation's weights (or a pinned ``generation``
     directly — the TOCTOU-free read for callers that captured
     weights_live_generation())."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        load_relation_generation,
-    )
-
     return load_relation_generation(spark, path, _WEIGHTS_REL, generation)
 
 
@@ -1098,11 +1095,8 @@ def weights_live_generation(path: str) -> str:
     """The live generation id of a weights store (the _CURRENT
     pointer's value) — capture it when deriving anything from the
     store; a later save flips it."""
-    from presto_on_ray_spark.operators.pipeline_prep import (
-        counts_live_generation,
-    )
-
-    return counts_live_generation(path)
+    _, os_path = relation_paths(path, _WEIGHTS_REL)
+    return relation_generation(os_path, _WEIGHTS_REL)
 
 
 @query("text_classifier_published", oracle=_DISTILLED_ORACLE)

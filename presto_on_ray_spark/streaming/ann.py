@@ -30,6 +30,7 @@ from presto_on_ray_spark.operators.similarity import (
     semantic_cells,
     semantic_ingest_verdicts,
 )
+from presto_on_ray_spark.store import local_paths, write_atomic
 from presto_on_ray_spark.streaming.ingest import _start
 
 
@@ -142,7 +143,6 @@ def stream_ann_ingest_with_rebuild(
     import os
 
     from presto_on_ray_spark.operators.similarity import (
-        _ann_paths,
         ann_rebuild_advice,
         auto_ivf_cells,
         build_ann_index,
@@ -150,13 +150,11 @@ def stream_ann_ingest_with_rebuild(
         save_ann_index,
     )
 
-    _, os_path, locked = _ann_paths(index_path)
-    if not locked:
-        raise ValueError(
-            "stream_ann_ingest_with_rebuild requires the local "
-            "generational protocol (rebuilds publish generations); "
-            f"{index_path!r} is not a local path"
-        )
+    _, os_path = local_paths(
+        index_path,
+        "stream_ann_ingest_with_rebuild requires the local generational "
+        "protocol (rebuilds publish generations)",
+    )
     state_file = os.path.join(os_path, "_REBUILD_STATE")
 
     def _read_since() -> int | None:
@@ -166,10 +164,7 @@ def stream_ann_ingest_with_rebuild(
         return None
 
     def _write_since(n: int | None) -> None:
-        tmp = state_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"since_rebuild": n}, fh)
-        os.replace(tmp, state_file)
+        write_atomic(state_file, json.dumps({"since_rebuild": n}))
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
@@ -530,28 +525,24 @@ def rebuild_semantic_cells(
             store, tau=tau, target_recall=target_recall,
             cents=spark.read.parquet(cents_path),
         )
-        tmp = probe_os + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump({"nprobe": dial["nprobe"],
-                       "target_recall": target_recall}, fh)
-        os.replace(tmp, probe_os)
+        write_atomic(probe_os, json.dumps(
+            {"nprobe": dial["nprobe"], "target_recall": target_recall}
+        ))
         out = dict(out, probe_dial=dial)
     return out
 
 
 def _probe_os_path(store_path: str) -> str | None:
     """OS-level path of the ``_probe`` sidecar, via the same
-    local-vs-remote mapping as the saved indexes (_ann_paths handles
+    local-vs-remote mapping as the saved indexes (local_paths handles
     file:-URI spellings); None for non-local stores, where the
     sidecar protocol (atomic rename) does not exist."""
     import os
 
-    from presto_on_ray_spark.operators.similarity import _ann_paths
-
-    _, os_path, locked = _ann_paths(store_path)
-    if not locked:
+    paths = local_paths(store_path)
+    if paths is None:
         return None
-    return os.path.join(os_path, "_probe")
+    return os.path.join(paths[1], "_probe")
 
 
 def _read_probe_sidecar(store_path: str) -> int | None:

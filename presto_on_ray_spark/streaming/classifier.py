@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators.textstats import classifier_score_biased
 from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.store import write_atomic
 from presto_on_ray_spark.streaming.ingest import _start
 
 
@@ -327,10 +328,7 @@ def stream_classifier_retrain_windowed(
 
     def _write_state(st: dict) -> None:
         os.makedirs(window_path, exist_ok=True)
-        tmp = state_file + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as fh:
-            json.dump(st, fh)
-        os.replace(tmp, state_file)
+        write_atomic(state_file, json.dumps(st))
 
     def _tick(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -24,13 +24,14 @@ from pyspark.sql import DataFrame, functions as F
 
 from presto_on_ray_spark.operators.dedup import (
     BaseIndex,
+    _INDEX_NOT_LOCAL,
     _admit_receipt,
-    _index_paths,
     ingest_batch,
     load_base_index,
     merge_into_saved_index,
     shingle_saturation_from_df,
 )
+from presto_on_ray_spark.store import local_paths
 
 
 def stream_ingest_dedup(
@@ -213,7 +214,7 @@ def stream_ingest_admit(
     import inspect
     import os
 
-    index_spark_path, index_os_path = _index_paths(index_path)
+    index_spark_path, index_os_path = local_paths(index_path, _INDEX_NOT_LOCAL)
     tokens = admit_log if admit_log is not None else os.path.join(
         index_os_path, "_ADMITTED"
     )

@@ -237,7 +237,7 @@ def test_saved_counts_crash_before_flip_leaves_old_generation(
     def boom(os_path, gen):
         raise OSError("simulated crash before flip")
 
-    monkeypatch.setattr(pp, "_counts_flip", boom)
+    monkeypatch.setattr("presto_on_ray_spark.store.flip", boom)
     with pytest.raises(OSError, match="simulated crash"):
         pp.merge_into_saved_segment_counts(spark, p, df_b, 4)
     monkeypatch.undo()
