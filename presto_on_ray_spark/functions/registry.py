@@ -230,33 +230,6 @@ def split_to_multimap(col, entry_delim, kv_delim):
     return multimap_from_entries(pairs)
 
 
-def dot_product_maps(m1, m2):
-    """Sparse-vector dot product over map<K, double> (the Presto
-    cosine_similarity representation): Σ_k m1[k]·m2[k] over m1's keys,
-    missing keys contribute 0. Pure HOFs (try_element_at is the
-    NULL-on-absent lookup under ANSI mode)."""
-    a = F.col(m1) if isinstance(m1, str) else m1
-    b = F.col(m2) if isinstance(m2, str) else m2
-    return F.aggregate(
-        F.map_keys(a),
-        F.lit(0.0),
-        lambda acc, k: acc
-        + F.element_at(a, k) * F.coalesce(F.try_element_at(b, k), F.lit(0.0)),
-    )
-
-
-def cosine_similarity_maps(m1, m2):
-    """Presto cosine_similarity(map<varchar,double>, map<varchar,double>)."""
-    a = F.col(m1) if isinstance(m1, str) else m1
-    b = F.col(m2) if isinstance(m2, str) else m2
-    norm = lambda m: F.sqrt(  # noqa: E731
-        F.aggregate(
-            F.map_values(m), F.lit(0.0), lambda acc, v: acc + v * v
-        )
-    )
-    return dot_product_maps(a, b) / (norm(a) * norm(b))
-
-
 def to_base64url(col):
     """Presto to_base64url: RFC-4648 URL-safe alphabet ('+/' → '-_');
     pure expression over Spark's base64."""

@@ -260,23 +260,6 @@ def qsketch_merge(a: Column, b: Column) -> Column:
     return F.zip_with(a, b, lambda x, y: x + y)
 
 
-def qsketch_merge_agg(col: Column | str) -> Column:
-    """Merge across rows: one SUM aggregate per bucket (same
-    partial-aggregation-friendly shape as hll_merge_agg — no
-    collect_list, per-group state is a single sketch). Same plan-size
-    caveat as hll_merge_agg: prefer ``qsketch_merge_grouped`` for
-    DataFrame-level rollups."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.array(
-        *[
-            F.coalesce(F.sum(F.element_at(c, i + 1)), F.lit(0).cast("long")).cast(
-                "long"
-            )
-            for i in range(_QBUCKETS)
-        ]
-    )
-
-
 def qsketch_merge_grouped(
     df: DataFrame, group_cols: list[str], sketch_col: str, out_col: str = "merged"
 ) -> DataFrame:

@@ -18,13 +18,14 @@ Four tiers, all scale-first designs:
 from __future__ import annotations
 
 import contextlib
+import os
 from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
+from presto_on_ray_spark import store
 from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
-from presto_on_ray_spark.store import local_paths
 from presto_on_ray_spark.suite import query
 
 # Deterministic MinHash permutation parameters h_i(x) = (a_i*x + b_i) mod p.
@@ -1620,14 +1621,6 @@ class BaseIndex(NamedTuple):
             rel.unpersist()
 
 
-# Every relation a SAVED index directory may contain: the five
-# BaseIndex fields plus the optional per-doc LSH ``bands`` relation
-# (save_index_bands) — directory sweeps, leftover diagnosis, and
-# generation swaps must cover all of them, or a crashed writer's
-# bands__new litter (for one) would survive every recovery path.
-_SAVED_RELATIONS = BaseIndex._fields + ("bands",)
-
-
 def _ranked_prefix(sh_df, df_rel, tn: int, td: int):
     """Keep each doc's n - ceil(t*n) + 1 rarest shingles under the
     shared (df, sh) order (integer ceil: (tn*n + td - 1) div td).
@@ -1671,42 +1664,115 @@ def build_base_index(base, tracked: bool = True) -> BaseIndex:
     return BaseIndex(digests, sho, df_rel, counts, prefix)
 
 
-def _write_index_relations(
-    index: BaseIndex, path: str, with_bands: bool
-) -> None:
-    """Write every index relation (and optionally bands) as parquet:
-    shingles FIRST — every other relation (and bands) derives from the
-    shared persisted shingle relation, so its write warms that cache
-    exactly once — then the rest CONCURRENTLY from worker threads
-    (independent Spark actions over the warm cache; measured 6.0 s →
-    ~3 s for the sf0.1 save). Any failure propagates to the caller,
-    which leaves the mutation markers stranded — relation write ORDER
-    carries no crash-contract meaning during a rebuild because readers
-    refuse on _MERGE_MUTATING for the whole write phase."""
-    import concurrent.futures
-    import os
+# -- saved index -----------------------------------------------------------
+# The parquet form of a BaseIndex, on the generation protocol of
+# presto_on_ray_spark/store.py: gen-K/{digests,shingles,df,counts,prefix
+# [,bands]}, marker _INDEX_WRITING, live generation + predecessor kept;
+# readers never refuse. What is specific to this store: a merge carries
+# the live generation's append-only relations into the next one by hard
+# links and appends the batch's rows, so admission stays O(batch) I/O;
+# and a merge with a commit token records the token inside the
+# generation (_ADMIT_TOKEN), so a crash between the flip and the receipt
+# heals on replay. The default admit log {path}/_ADMITTED lives outside
+# the generations. Non-local paths get a flat layout for save and load.
 
-    index.shingles.write.mode("overwrite").parquet(
-        os.path.join(path, "shingles")
+_INDEX_WRITING = "_INDEX_WRITING"
+_ADMIT_TOKEN = "_ADMIT_TOKEN"
+_INDEX_NOT_LOCAL = (
+    "merge_into_saved_index, compact_saved_index and save_index_bands "
+    "commit generations with local filesystem links and renames. On a "
+    "shared store, write a new index (build_base_index + save_base_index) "
+    "or keep the index in a transactional table format."
+)
+
+
+@contextlib.contextmanager
+def _index_writer(path: str, force: bool = False):
+    """Hold the saved index's writer marker for the ``with`` body;
+    yields (spark_path, os_path). Released on any exit: a commit never
+    touches the live generation, so a failed writer leaves the previous
+    generation live and readable."""
+    spark_path, os_path = store.local_paths(path, _INDEX_NOT_LOCAL)
+    store.acquire(
+        os_path,
+        _INDEX_WRITING,
+        f"saved index at {os_path!r}: {_INDEX_WRITING} is held — a writer "
+        f"is live or crashed. The live generation is intact; once no "
+        f"writer is live, remove {_INDEX_WRITING} or re-save with "
+        f"save_base_index(force=True), then retry.",
+        force,
     )
-    jobs = [
-        (name, getattr(index, name))
+    try:
+        yield spark_path, os_path
+    finally:
+        store.release(os_path, _INDEX_WRITING)
+
+
+def _index_generation(os_path: str, path: str) -> str:
+    return store.resolve_generation(
+        os_path, path, BaseIndex._fields, "saved index", "save_base_index"
+    )
+
+
+def _read_index(spark, root: str) -> BaseIndex:
+    return BaseIndex(
+        *[spark.read.parquet(f"{root}/{name}") for name in BaseIndex._fields]
+    )
+
+
+def _link(os_path: str, live: str, gen: str, names) -> None:
+    for name in names:
+        store.link_relation(
+            os.path.join(os_path, live, name), os.path.join(os_path, gen, name)
+        )
+
+
+def _recorded_token(os_path: str, gen: str) -> str | None:
+    """The commit token of the admission that produced ``gen``."""
+    try:
+        with open(os.path.join(os_path, gen, _ADMIT_TOKEN), encoding="utf-8") as fh:
+            return fh.read()
+    except FileNotFoundError:
+        return None
+
+
+def _record_token(os_path: str, gen: str, token: str | None) -> None:
+    if token is not None:
+        with open(os.path.join(os_path, gen, _ADMIT_TOKEN), "w",
+                  encoding="utf-8") as fh:
+            fh.write(token)
+
+
+def _write_concurrently(writes) -> None:
+    """Run (relation, mode, target) parquet writes as concurrent Spark
+    actions: writes into a generation (or a flat save) have no ordering
+    contract — the flip, or the store's own atomicity, publishes them."""
+    import concurrent.futures
+
+    with concurrent.futures.ThreadPoolExecutor(max_workers=len(writes)) as ex:
+        futures = [
+            ex.submit(lambda r=rel, m=mode, dst=target: r.write.mode(m).parquet(dst))
+            for rel, mode, target in writes
+        ]
+        for f in futures:
+            f.result()
+
+
+def _write_index_relations(index: BaseIndex, root: str, with_bands: bool) -> None:
+    """Write every index relation (and optionally bands) under
+    ``root``: shingles FIRST — every other relation (and bands) derives
+    from the shared persisted shingle relation, so its write warms that
+    cache exactly once — then the rest concurrently (measured 6.0 s →
+    ~3 s for the sf0.1 save)."""
+    index.shingles.write.mode("overwrite").parquet(f"{root}/shingles")
+    writes = [
+        (getattr(index, name), "overwrite", f"{root}/{name}")
         for name in BaseIndex._fields
         if name != "shingles"
     ]
     if with_bands:
-        jobs.append(("bands", lsh_bands(index.shingles)))
-    with concurrent.futures.ThreadPoolExecutor(max_workers=len(jobs)) as ex:
-        futures = [
-            ex.submit(
-                lambda df=df, name=name: df.write.mode("overwrite").parquet(
-                    os.path.join(path, name)
-                )
-            )
-            for name, df in jobs
-        ]
-        for f in futures:
-            f.result()
+        writes.append((lsh_bands(index.shingles), "overwrite", f"{root}/bands"))
+    _write_concurrently(writes)
 
 
 def save_base_index(
@@ -1714,201 +1780,91 @@ def save_base_index(
 ) -> None:
     """Materialize every index relation as parquet under ``path`` —
     the production form at 100 TB: the index is a set of tables
-    maintained alongside the corpus, not a session cache. Layout is
-    one subdirectory per BaseIndex field.
+    maintained alongside the corpus, not a session cache. Local paths
+    get one fresh generation with one subdirectory per BaseIndex field.
 
     ``with_bands=True`` additionally materializes the optional sixth
     relation, ``bands`` = lsh_bands(index.shingles) — the per-doc
     banded-MinHash rows the LSH ingest tier joins against. Saved
-    bands are maintained by merge_into_saved_index (append inside the
-    same mutation window, so the lockstep guard passes by
-    construction) and rewritten by compact_saved_index; the streaming
-    admit loop picks them up automatically, paying O(batch) band
-    derivation per micro-batch instead of re-deriving the whole
-    index's bands in-plan. A save WITHOUT with_bands onto a location
-    that has a bands relation REMOVES it (local paths): a rebuild is
-    a new doc-set generation, and bands not regenerated with it would
-    silently drop recall for every doc the rebuild added. Attach
+    bands are maintained by every merge_into_saved_index and rewritten
+    by compact_saved_index; the streaming admit loop picks them up
+    automatically, paying O(batch) band derivation per micro-batch
+    instead of re-deriving the whole index's bands in-plan. A save
+    WITHOUT with_bands produces a generation without bands: a rebuild
+    is a new doc-set generation, and bands not regenerated with it
+    would silently drop recall for every doc the rebuild added. Attach
     bands to an existing saved index with save_index_bands.
 
-    Concurrency + failure contract (local paths): the save holds the
-    SAME _MERGE_INPROGRESS lock the mutation protocol uses, so a
-    rebuild can never interleave its relation overwrites with a live
-    merge's generation writes — and because the overwrites mutate the
-    LIVE directories in place (not rename-aside generations), the
-    save also raises _MERGE_MUTATING for the whole write phase:
-    readers refuse while a rebuild is in flight (load_base_index's
-    "lock alone does not block readers" contract stays true — the
-    lock alone never accompanies in-place mutation), and a save that
-    FAILS mid-write strands both markers, leaving the torn index loud
-    instead of silently readable. The marker comes off only after
-    every relation (and the crash-leftover sweep) has completed.
-
-    If merge markers are already present the save REFUSES by default:
-    a held lock may be a merge that is actively running. Pass
-    ``force=True`` once certain no writer is live — the forced save
-    is the prescribed rebuild recovery for a stranded marker: it
-    keeps the location marked through its own writes and clears the
-    markers and crash leftovers (*__new / *__old generation dirs)
-    only on success. On a shared store (no os-level view of the
-    location) save to a fresh generation directory instead."""
-    import os
-    import shutil
-
-    path, os_path = local_paths(path) or (path, None)
-    if os_path is None:
+    Refuses while the writer marker is held; ``force=True`` is the
+    takeover for a crashed writer's stranded marker (safe: the pointer
+    only ever names a complete generation). On a shared store (no
+    os-level view of the location) the relations are written flat,
+    with the store's own atomicity and the caller's single-writer
+    discipline."""
+    if store.local_paths(path) is None:
         _write_index_relations(index, path, with_bands)
         return
-
-    markers = [
-        m
-        for m in ("_MERGE_MUTATING", "_MERGE_INPROGRESS")
-        if os.path.exists(os.path.join(os_path, m))
-    ]
-    if markers and not force:
-        raise ValueError(
-            f"saved index at {path!r} has merge markers "
-            f"({', '.join(markers)}): a merge may be RUNNING there, and a "
-            f"rebuild racing a live merge would silently interleave "
-            f"writes. Once certain no writer is running, pass force=True "
-            f"— the forced save is the prescribed rebuild recovery: it "
-            f"keeps the location marked through its own writes and clears "
-            f"the markers and crash leftovers on success"
+    with _index_writer(path, force) as (spark_path, os_path):
+        store.commit(
+            os_path,
+            lambda gen: _write_index_relations(
+                index, f"{spark_path}/{gen}", with_bands
+            ),
+            keep_predecessor=True,
         )
-    if force and "_MERGE_INPROGRESS" in markers:
-        # the caller certified no writer is live: the stale lock comes
-        # off so we can acquire a fresh one. A stranded _MERGE_MUTATING
-        # deliberately STAYS through the writes — the index is
-        # inconsistent until this rebuild completes, and removing it
-        # early would make a failed recovery silently readable.
-        os.remove(os.path.join(os_path, "_MERGE_INPROGRESS"))
-    os.makedirs(os_path, exist_ok=True)
-    inprog = os.path.join(os_path, "_MERGE_INPROGRESS")
-    try:
-        lock = open(inprog, "x", encoding="utf-8")
-    except FileExistsError:
-        raise ValueError(
-            f"saved index at {path!r}: _MERGE_INPROGRESS appeared while "
-            f"acquiring the save lock — a concurrent writer is live; "
-            f"retry once it finishes"
-        ) from None
-    try:
-        with lock:
-            lock.write("rebuild (save_base_index) in progress\n")
-    except BaseException:
-        with contextlib.suppress(OSError):
-            os.remove(inprog)
-        raise
-    # the write phase mutates the LIVE directories: mark the location
-    # mutating so readers refuse mid-rebuild and a failure here leaves
-    # the torn index LOUD (both markers stranded), never readable. A
-    # failure CREATING the marker mutated nothing — release the lock
-    # (like the merge protocol's pre-window abort) instead of forcing
-    # a needless force=True recovery on an intact index.
-    mutating = os.path.join(os_path, "_MERGE_MUTATING")
-    if not os.path.exists(mutating):
-        try:
-            with open(mutating, "w", encoding="utf-8") as fh:
-                fh.write("rebuild in progress; if this file survives, "
-                         "re-run save_base_index(force=True)\n")
-        except BaseException:
-            with contextlib.suppress(OSError):
-                os.remove(mutating)
-            with contextlib.suppress(OSError):
-                os.remove(inprog)
-            raise
-    _write_index_relations(index, path, with_bands)
-    bands_dir = os.path.join(os_path, "bands")
-    if os.path.exists(bands_dir) and not with_bands:
-        # the rebuild changed the doc-set generation; bands not
-        # regenerated with it would silently lose LSH recall for
-        # every doc the rebuild added — remove, never keep stale
-        shutil.rmtree(bands_dir)
-    for name in _SAVED_RELATIONS:
-        for suffix in ("__new", "__old"):
-            leftover = os.path.join(os_path, name + suffix)
-            if os.path.exists(leftover):
-                shutil.rmtree(leftover)
-    # success: unmark, then release the lock (same order the mutation
-    # protocol uses — a crash between the two leaves an intact index
-    # with a stale lock, the already-diagnosed recoverable state)
-    os.remove(mutating)
-    os.remove(inprog)
 
 
 def load_base_index(spark, path: str) -> BaseIndex:
-    """Reload a saved index. The relations stay parquet-backed (no
-    persist): repeated ingests re-read columnar files with pushdown
-    instead of holding executor memory — the right trade once the
-    base outgrows the cache. round-trip == in-session equality is
-    pinned in tests/test_dedup.py.
-
-    Refuses an index whose _MERGE_MUTATING marker is present — a
-    merge is mid-mutation or crashed there, and reading would
-    classify against partially admitted relations with no error
-    anywhere. (The _MERGE_INPROGRESS lock alone is fine for readers:
-    a lock-holding merge has not touched the index before it raises
-    the mutating marker.) Best-effort for local paths; on a shared
-    store the caller owns that invariant."""
-    import os
-
-    path, os_path = local_paths(path) or (path, None)
-    if os_path and os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
-        raise ValueError(
-            f"saved index at {path!r} has a _MERGE_MUTATING marker: a "
-            f"merge is mid-mutation or crashed there, and the relations "
-            f"may be mutually inconsistent. If no merge is running, "
-            f"rebuild the index (build_base_index + save_base_index over "
-            f"the corpus)"
-        )
-    return BaseIndex(
-        **{
-            name: spark.read.parquet(os.path.join(path, name))
-            for name in BaseIndex._fields
-        }
-    )
+    """Reload a saved index's live generation. The relations stay
+    parquet-backed (no persist): repeated ingests re-read columnar
+    files with pushdown instead of holding executor memory — the right
+    trade once the base outgrows the cache. round-trip == in-session
+    equality is pinned in tests/test_dedup.py. Never refuses on the
+    writer marker (a writer never touches the live generation); lazy
+    reads stay valid through one later commit (predecessor
+    retention)."""
+    paths = store.local_paths(path)
+    if paths is None:
+        return _read_index(spark, path)
+    spark_path, os_path = paths
+    return _read_index(spark, f"{spark_path}/{_index_generation(os_path, path)}")
 
 
 def save_index_bands(spark, path: str) -> None:
     """Attach (or regenerate) the optional ``bands`` relation of a
-    saved index: lsh_bands over its stored shingles, written as a new
-    generation under the same single-writer mutation protocol the
-    merge and compaction use — so attaching bands to a live index
-    location cannot interleave with an admission. One pass over the
+    saved index: a new generation linking the five existing relations
+    plus lsh_bands over the stored shingles — one pass over the
     shingle relation, no document text read. After this, every
-    merge_into_saved_index appends the admitted docs' band rows inside
-    its mutation window and compact_saved_index rewrites them, so the
-    bands stay in lockstep with the index by construction — the
-    property ingest_batch_lsh's check= guard verifies per ingest."""
-    with _saved_index_mutation(path) as mut:
-        index = load_base_index(spark, mut.path)
-        mut.write_new("bands", lsh_bands(index.shingles))
-        mut.enter_mutation_window()
-        mut.swap()
+    merge_into_saved_index appends the admitted docs' band rows and
+    compact_saved_index rewrites them, so the bands stay in lockstep
+    with the index by construction — the property ingest_batch_lsh's
+    check= guard verifies per ingest."""
+    with _index_writer(path) as (spark_path, os_path):
+        live = _index_generation(os_path, path)
+        sho = spark.read.parquet(f"{spark_path}/{live}/shingles")
+
+        def write(gen):
+            _link(os_path, live, gen, BaseIndex._fields)
+            lsh_bands(sho).write.parquet(f"{spark_path}/{gen}/bands")
+            _record_token(os_path, gen, _recorded_token(os_path, live))
+
+        store.commit(os_path, write, keep_predecessor=True)
 
 
 def load_saved_bands(spark, path: str):
-    """The saved ``bands`` relation of a save_base_index layout, or
-    None when the index was saved without one. Same _MERGE_MUTATING
-    refusal as load_base_index — bands appended by a crashed merge are
-    exactly as untrustworthy as its other appends."""
-    import os
-
-    spark_path, os_path = local_paths(path) or (path, None)
-    if os_path is not None:
-        if os.path.exists(os.path.join(os_path, "_MERGE_MUTATING")):
-            raise ValueError(
-                f"saved index at {spark_path!r} has a _MERGE_MUTATING "
-                f"marker: a merge is mid-mutation or crashed there. "
-                f"Rebuild the index before reading its bands"
-            )
-        if not os.path.isdir(os.path.join(os_path, "bands")):
+    """The live generation's ``bands`` relation, or None when the index
+    was saved without one."""
+    paths = store.local_paths(path)
+    if paths is not None:
+        spark_path, os_path = paths
+        gen = _index_generation(os_path, path)
+        if not os.path.isdir(os.path.join(os_path, gen, "bands")):
             return None
-        return spark.read.parquet(os.path.join(spark_path, "bands"))
+        return spark.read.parquet(f"{spark_path}/{gen}/bands")
     # shared store: no os-level existence probe — try the read and map
     # only the path-missing failure to None
     try:
-        return spark.read.parquet(os.path.join(spark_path, "bands"))
+        return spark.read.parquet(f"{path}/bands")
     except Exception as e:  # AnalysisException: PATH_NOT_FOUND
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
@@ -2029,21 +1985,22 @@ def merge_into_base_index(
 def verify_index_consistency(index: BaseIndex) -> None:
     """One explicit job asserting the index's internal invariant:
     every doc_id in counts has shingle rows. counts is derived from
-    shingles, so a counts row with no shingle rows is the
-    half-appended crash state of a saved merge (counts is written
-    before shingles) — the doc would silently never be a near-tier
-    candidate again. Raises ValueError with the rebuild prescription.
+    shingles, so a counts row with no shingle rows is the torn state
+    of an append that landed in one relation only (a crashed writer
+    on a flat shared-store index, or tampering) — the doc would
+    silently never be a near-tier candidate again. Raises ValueError
+    with the rebuild prescription.
 
     Where this invariant is enforced: automatically at merge time
     (_check_new_doc_ids runs it when diagnosing an already-indexed
-    doc_id) and at load time for local paths (the _MERGE_MUTATING
-    marker check in load_base_index). Per-ingest guards — notably
+    doc_id); on local paths every generation is complete by
+    construction (store.py). Per-ingest guards — notably
     ingest_batch_lsh's check= — deliberately do NOT rescan the
     shingle relation every call (that would make checked ingests
     shingle-scan-sized, not batch-sized), so an ingest-only workload
-    over an index on a SHARED store, where the marker check cannot
-    run, should call this on a schedule (it is one shingle-scan-sized
-    job, the same cost as one cold classify)."""
+    over an index on a SHARED store should call this on a schedule
+    (it is one shingle-scan-sized job, the same cost as one cold
+    classify)."""
     orphaned = (
         index.counts.join(index.shingles.select("doc_id"), "doc_id", "left_anti")
         .limit(1)
@@ -2091,10 +2048,9 @@ def _check_new_doc_ids(index: BaseIndex, new_docs) -> None:
             f"silently corrupt near-tier verdicts — deduplicate the admit "
             f"set (e.g. exact_dedup keepers) first"
         )
-    # distinguish a clean re-delivery from a half-appended crash: the
-    # saved merge appends counts BEFORE shingles, so a crash between
-    # them leaves counts rows with no shingle rows — a state only a
-    # rebuild repairs (the doc would otherwise never be a near-tier
+    # distinguish a clean re-delivery from a torn index: counts rows
+    # with no shingle rows (see verify_index_consistency) — a state
+    # only a rebuild repairs (the doc would otherwise never be a near-tier
     # candidate again). Re-prefix with the raising operation, like
     # every other error this guard emits.
     try:
@@ -2157,21 +2113,16 @@ def _merged_aggregates(index: BaseIndex, new_docs, new_sho):
 
 class DuplicateAdmitToken(ValueError):
     """A commit token that already exists: the delivery was committed
-    by a previous admission. A dedicated class because commit()'s
-    release-vs-strand decision dispatches on it — a generic
-    ValueError from open/makedirs (e.g. NUL byte in the path) means
-    NO token was written and must strand, not release."""
+    by a previous admission."""
 
 
 def _admit_receipt(token: str) -> None:
     """Create an exactly-once admission receipt by exclusive create
-    (shared by _SavedIndexMutation.commit and the streaming admit
-    loop's empty-admit branch, so the two cannot drift). A
-    pre-existing token is a caller protocol violation — deliveries
-    whose token exists must be skipped BEFORE admitting — and raises
-    the same explanatory DuplicateAdmitToken from both paths."""
-    import os
-
+    (shared by merge_into_saved_index and the streaming admit loop, so
+    the two cannot drift). A pre-existing token is a caller protocol
+    violation — deliveries whose token exists must be skipped BEFORE
+    admitting — and raises the same explanatory DuplicateAdmitToken
+    from both paths."""
     parent = os.path.dirname(token)
     if parent:
         os.makedirs(parent, exist_ok=True)
@@ -2189,255 +2140,13 @@ def _admit_receipt(token: str) -> None:
         fh.write("admission committed\n")
 
 
-class _SavedIndexMutation:
-    """One writer's handle on a saved-index directory, yielded by
-    _saved_index_mutation: phase-1 generation writes (write_new),
-    the mutation-window marker (enter_mutation_window), the
-    rename-aside swap, and the exactly-once commit token. The
-    ordering the protocol's guarantees rest on is ENFORCED, not
-    assumed: generations are written only before the window opens,
-    the swap and the commit token only inside it — a future writer
-    that mis-sequences fails here instead of mutating unmarked."""
-
-    def __init__(self, path: str, os_path: str, mutating: str):
-        self.path, self.os_path = path, os_path
-        self._mutating = mutating
-        self.swaps: list = []
-        self.mutated = False
-        # True once the on-disk index is fully consistent again
-        # (post-swap): failures after this point are bookkeeping, and
-        # the protocol releases its markers instead of demanding a
-        # rebuild of an index that is provably fine
-        self.consistent = False
-
-    def write_new(self, name: str, rel) -> None:
-        """Phase 1: write ``name``'s next generation to ``name__new``,
-        reading only existing directories. Recorded BEFORE the write,
-        so an abort cleans a partially-written generation too."""
-        import os
-
-        if self.mutated:
-            raise RuntimeError(
-                "saved-index protocol violation: write_new() inside the "
-                "mutation window — generations must be written (reading "
-                "only old directories) before enter_mutation_window()"
-            )
-        self.swaps.append(name)
-        rel.write.mode("overwrite").parquet(os.path.join(self.path, name + "__new"))
-
-    def enter_mutation_window(self) -> None:
-        """Raise the _MERGE_MUTATING marker: from here until the swap
-        completes, a crash strands the marker and both the next
-        writer and load_base_index refuse with a rebuild
-        instruction."""
-        import os
-
-        if self.mutated:
-            raise RuntimeError(
-                "saved-index protocol violation: the mutation window was "
-                "already entered"
-            )
-        try:
-            with open(self._mutating, "x", encoding="utf-8") as fh:
-                fh.write("mutation in progress; if this file survives, rebuild\n")
-        except FileExistsError:
-            # not ours to remove: the file predates this writer
-            raise
-        except BaseException:
-            # write/flush failed AFTER the exclusive create: nothing
-            # was mutated yet, so unlink our marker or an intact index
-            # would falsely demand a rebuild
-            with contextlib.suppress(OSError):
-                os.remove(self._mutating)
-            raise
-        self.mutated = True
-
-    def swap(self) -> None:
-        """Phase 3: rename-aside swap of every generation written with
-        write_new (``name`` -> ``name__old``, ``name__new`` ->
-        ``name``, drop ``__old``) — two renames per relation, not a
-        recursive delete, inside the marked window. A FIRST generation
-        (the live directory does not exist yet — e.g. attaching the
-        optional bands relation to an existing index) is one rename.
-        After the last rename the index is consistent again; post-swap
-        failures release the markers rather than stranding them."""
-        import os
-        import shutil
-
-        if not self.mutated:
-            raise RuntimeError(
-                "saved-index protocol violation: swap() outside the "
-                "mutation window — an unmarked crash mid-swap would be "
-                "silent corruption; call enter_mutation_window() first"
-            )
-        for name in self.swaps:
-            old = os.path.join(self.os_path, name)
-            had_old = os.path.exists(old)
-            if had_old:
-                os.rename(old, old + "__old")
-            os.rename(old + "__new", old)
-            if had_old:
-                shutil.rmtree(old + "__old")
-        self.consistent = True
-
-    def commit(self, token: str) -> None:
-        """Create the exactly-once receipt INSIDE the mutation window,
-        after swap(): token present means the admission committed in
-        full. A failure here (duplicate token, unwritable log) leaves
-        a CONSISTENT index — the swap already applied — so the
-        protocol releases its markers and surfaces the error loudly;
-        a replayed delivery then either skips (token exists) or fails
-        the admission guard (docs already indexed), never silently
-        double-admits."""
-        if not self.consistent:
-            raise RuntimeError(
-                "saved-index protocol violation: commit() before swap() — "
-                "the receipt must attest a completed admission"
-            )
-        try:
-            _admit_receipt(token)
-        except DuplicateAdmitToken:
-            # the PRE-EXISTING token already skips replays, so
-            # releasing the markers is safe — the index and the
-            # replay contract are both intact
-            raise
-        except BaseException:
-            # receipt write failed. If a token file nonetheless exists
-            # (exclusive create succeeded, payload write failed),
-            # replays are already skipped and release is safe. If NO
-            # token exists, a replay would re-classify the batch
-            # against the post-admission index — every doc its own
-            # exact dup, silently — so strand the markers: that
-            # window stays loud, exactly like a crash here.
-            import os
-
-            token_on_disk = False
-            with contextlib.suppress(Exception):
-                token_on_disk = os.path.exists(token)
-            if not token_on_disk:
-                self.consistent = False
-            raise
-
-
-@contextlib.contextmanager
-def _saved_index_mutation(path: str):
-    """Single-writer mutation protocol for a saved-index directory,
-    shared by merge_into_saved_index and compact_saved_index so the
-    two writers cannot drift (plain parquet has no transactions;
-    concurrency control is pessimistic and every bad state is
-    detected LOUDLY rather than silently misclassifying):
-
-    1. ``_MERGE_INPROGRESS`` is the writer LOCK, acquired by exclusive
-       create before ANYTHING runs — a concurrent writer fails at
-       acquisition having computed and written nothing, so no two
-       writers can interleave generation writes or derive generations
-       from each other's pre-mutation snapshots.
-    2. Under the lock, the body writes new generations reading only
-       the old directories. Any failure before the mutation window
-       aborts cleanly: the writer removes its own ``__new`` output
-       and releases the lock — the index was never touched.
-    3. ``_MERGE_MUTATING`` brackets the actual mutation (appends and
-       the rename-aside swap). A crash inside it strands the marker,
-       and both the next writer and load_base_index refuse with a
-       rebuild instruction. A stranded lock WITHOUT the mutating
-       marker means the index is intact: the error says so, and says
-       removal is safe once no writer is running."""
-    import os
-    import shutil
-
-    # Spark and the os-level guard/swap must act on the byte-exact
-    # same directory; local_paths yields the canonical local pair.
-    spark_path, os_path = local_paths(path, _INDEX_NOT_LOCAL)
-    mutating = os.path.join(os_path, "_MERGE_MUTATING")
-    if os.path.exists(mutating):
-        raise ValueError(
-            f"saved index at {spark_path!r} has a _MERGE_MUTATING marker: a "
-            f"merge crashed inside its mutation window (appends or swap "
-            f"may be partial). The index is inconsistent; rebuild it "
-            f"(build_base_index + save_base_index over the corpus)"
-        )
-    inprog = os.path.join(os_path, "_MERGE_INPROGRESS")
-    try:
-        lock = open(inprog, "x", encoding="utf-8")
-    except FileExistsError:
-        raise ValueError(
-            f"saved index at {spark_path!r}: _MERGE_INPROGRESS is held — a "
-            f"concurrent merge is running, or one crashed before reaching "
-            f"its mutation window. Nothing from this merge was applied, "
-            f"and the index itself is intact; once no merge is running, "
-            f"remove _MERGE_INPROGRESS and any *__new directories, then "
-            f"retry"
-        ) from None
-    try:
-        with lock:
-            lock.write("merge lock; stale + no _MERGE_MUTATING => index intact\n")
-    except BaseException:
-        # an I/O failure on the informational write must not strand
-        # the freshly-acquired lock
-        with contextlib.suppress(OSError):
-            os.remove(inprog)
-        raise
-
-    def _sweep_new_generations():
-        # any __new directory under the lock is dead output (this
-        # writer's abort, or an older writer killed pre-window):
-        # full-size copies of the largest relations — remove them
-        # rather than leaving unbounded litter for the NEXT writer
-        # that happens to rewrite the same relation
-        for name in _SAVED_RELATIONS:
-            with contextlib.suppress(OSError):
-                shutil.rmtree(os.path.join(os_path, name + "__new"))
-
-    mut = _SavedIndexMutation(spark_path, os_path, mutating)
-    try:
-        # under the lock: leftover diagnosis and every generation
-        # write are race-free against other writers
-        for name in _SAVED_RELATIONS:
-            if os.path.exists(os.path.join(os_path, name + "__old")):
-                raise ValueError(
-                    f"saved index at {spark_path!r} has a leftover {name}__old "
-                    f"directory with no mutation marker (manual tampering "
-                    f"or a pre-protocol crash); rebuild it "
-                    f"(build_base_index + save_base_index over the corpus)"
-                )
-            # stale __new from an older crash: overwritten or swept
-        yield mut
-        if mut.mutated and not mut.consistent:
-            # the writer entered its mutation window, may have appended,
-            # and returned WITHOUT swap(): the keyed generations were
-            # never swapped in, so the on-disk relations can be mutually
-            # inconsistent. The class docstring promises the ordering is
-            # ENFORCED — honor it: raise, and let the exception path
-            # below strand both markers (mutated and not consistent), so
-            # the next writer and every reader refuse loudly.
-            raise RuntimeError(
-                "saved-index protocol violation: the writer entered its "
-                "mutation window but returned without swap() — appends may "
-                "have landed while the keyed generations were never "
-                "swapped in. The markers stay stranded; rebuild the index "
-                "(build_base_index + save_base_index(force=True) over the "
-                "corpus)"
-            )
-        if mut.mutated:
-            os.remove(mutating)
-        _sweep_new_generations()
-        os.remove(inprog)
-    except BaseException:
-        if not mut.mutated or mut.consistent:
-            # the index was never touched (pre-window failure), or the
-            # swap completed and only post-swap bookkeeping failed —
-            # either way the on-disk index is consistent: clean up and
-            # release so the caller can retry / keep reading, keeping
-            # the real exception loud (cleanup failures never mask it)
-            _sweep_new_generations()
-            if mut.consistent:
-                with contextlib.suppress(OSError):
-                    os.remove(mutating)
-            with contextlib.suppress(OSError):
-                os.remove(inprog)
-        # a crash INSIDE the window (mutated, not yet consistent)
-        # strands both markers — that IS the loud signal
-        raise
+def _admitted_by_live_generation(os_path: str, token: str) -> bool:
+    """True when the live generation was committed by the admission
+    ``token`` names — its flip landed but its receipt may not have."""
+    gen = store.live_generation(os_path)
+    return gen is not None and _recorded_token(os_path, gen) == os.path.abspath(
+        token
+    )
 
 
 def merge_into_saved_index(
@@ -2449,144 +2158,96 @@ def merge_into_saved_index(
     commit_token: str | None = None,
 ) -> None:
     """Admit ``new_docs`` into a parquet-materialized index (the
-    save_base_index layout) IN PLACE — the production form of
-    merge_into_base_index, where incremental really means incremental
-    I/O. The in-session form can only union persisted frames, so
-    "appending" still materializes a full new cache generation; here
-    the per-doc relations are parquet APPENDS (new files only, the
-    base's files untouched — O(batch) data written):
+    save_base_index layout) as its next generation — the production
+    form of merge_into_base_index, where incremental really means
+    incremental I/O. The in-session form can only union persisted
+    frames, so "appending" still materializes a full new cache
+    generation; here the per-doc relations are hard links to the live
+    generation's files plus parquet APPENDS of the batch's rows
+    (O(batch) data written, the live generation untouched):
 
-    - ``shingles`` / ``counts``: append the batch's rows.
+    - ``shingles`` / ``counts``: linked, then the batch's rows appended.
     - ``bands`` (optional sixth relation — save_base_index
-      with_bands=True or save_index_bands): append the batch's band
-      rows. Band rows depend only on a doc's own shingles, so the
-      append IS exact maintenance; doing it inside this mutation
-      window keeps bands in lockstep with the index by construction
+      with_bands=True or save_index_bands): linked and appended. Band
+      rows depend only on a doc's own shingles, so the append IS exact
+      maintenance, in lockstep with the index by construction
       (ingest_batch_lsh's check= guard passes across admissions).
-    - ``prefix`` with rerank=False: append the new docs' prefix rows
-      ranked under the merged df (the stale policy — near-tier recall
-      for drifted base docs degrades until compact_saved_index or a
-      rebuild — a later strict merge does not repair it, see below;
-      exact tier is rank-free and unaffected).
+    - ``prefix`` with rerank=False: linked, then the new docs' prefix
+      rows ranked under the merged df appended (the stale policy —
+      near-tier recall for drifted base docs degrades until
+      compact_saved_index or a rebuild — a later strict merge does not
+      repair it, see below; exact tier is rank-free and unaffected).
     - ``digests`` / ``df``: aggregates keyed by digest/shingle — one
       row per distinct value, the small relations — re-aggregated and
-      swapped in as a new generation (plain parquet cannot merge rows
-      in place; with a table format these are MERGE INTOs).
-    - ``prefix`` with rerank=True (default, strict): rewritten as a
-      new generation under the merged df, as the DELTA re-rank the
-      in-session merge runs (shared _delta_prefix): only docs sharing
-      a shingle with the batch enter the rank window, everyone else's
-      saved prefix rows are copied forward, including rows left stale
-      by earlier rerank=False merges — and the corpus is NEVER
-      re-shingled: the rank reads the existing shingles parquet
-      instead of re-running the explode + distinct over all document
-      text, which is the dominant stage of build_base_index.
+      written fresh (plain parquet cannot merge rows in place; with a
+      table format these are MERGE INTOs).
+    - ``prefix`` with rerank=True (default, strict): written fresh
+      under the merged df, as the DELTA re-rank the in-session merge
+      runs (shared _delta_prefix): only docs sharing a shingle with the
+      batch enter the rank window, everyone else's saved prefix rows
+      are carried forward, including rows left stale by earlier
+      rerank=False merges — and the corpus is NEVER re-shingled: the
+      rank reads the existing shingles parquet instead of re-running
+      the explode + distinct over all document text, which is the
+      dominant stage of build_base_index.
 
-    Concurrency + failure contract: the _saved_index_mutation
-    single-writer protocol (SINGLE-WRITER lock, clean pre-mutation
-    abort, loud _MERGE_MUTATING strand on a mid-mutation crash —
-    see its docstring). This merge's mutation window runs the
-    appends COUNTS FIRST (the re-admission guard's sentinel, so a
-    partially-appended batch makes any retry fail loudly instead of
-    double-counting), then the rename-aside swap.
-
-    ``commit_token``: optional path of a receipt file created inside
-    the mutation window, AFTER the swap — the exactly-once admission
-    handshake for at-least-once callers (the streaming admit loop,
-    streaming/ingest.py): a replayed delivery whose token exists was
-    fully admitted and must be skipped; a CRASH between swap and
-    token strands _MERGE_MUTATING, so that gap is loud, never
-    silently re-admitted. A non-crash failure there (duplicate
-    token, unwritable log) leaves a consistent index — the swap
-    already applied — so the protocol releases its markers and
-    raises: a replay then either skips (token exists) or fails the
-    admission guard (docs already indexed).
+    ``commit_token``: optional path of a receipt file — the
+    exactly-once admission handshake for at-least-once callers (the
+    streaming admit loop, streaming/ingest.py). The token is recorded
+    inside the new generation before the flip and the receipt created
+    after it, so a replayed delivery whose receipt exists OR whose
+    token the live generation records was fully admitted and must be
+    skipped (stream_ingest_admit creates the missing receipt). A
+    receipt failure after the flip (duplicate token, unwritable log)
+    raises with the admission standing.
 
     Re-admitting doc_ids already in the index raises (see
     _check_new_doc_ids; check=False skips the guard job for callers
-    with structural disjointness). Only local paths are supported — the swap
-    uses filesystem renames; on an object store, write a fresh
-    generation (build + save) or use a transactional table format,
-    where digests/df become MERGE INTOs and the swap is a commit."""
-    import os
-
+    with structural disjointness). Only local paths are supported: on
+    an object store, write a fresh index (build + save) or use a
+    transactional table format, where digests/df become MERGE INTOs
+    and the flip is a commit."""
     tn, td = _INGEST_T_NUM, _INGEST_T_DEN
     new_docs = new_docs.filter(F.col("text").isNotNull())
-    with _saved_index_mutation(path) as mut:
-        path = mut.path  # canonical spark-side form of the location
+    with _index_writer(path) as (spark_path, os_path):
+        live = _index_generation(os_path, path)
+        index = _read_index(spark, f"{spark_path}/{live}")
         new_sho = new_docs.select(
             "doc_id", F.explode(shingles(F.col("text"))).alias("sh")
         ).persist()
         try:
-            index = load_base_index(spark, path)
             if check:
                 _check_new_doc_ids(index, new_docs)
-
-            # phase 1: write every new generation, reading ONLY the old
-            # directories (the strict prefix's delta re-rank reads the
-            # saved shingles/prefix plus the batch — not the appended
-            # files — so no step here depends on a mutation having
-            # happened). Generation writes
-            # have no ordering contract before the window (the swap
-            # publishes them), so they run as concurrent Spark actions.
-            import concurrent.futures
-
             digests, df_rel, df_delta = _merged_aggregates(index, new_docs, new_sho)
-            gens = [("digests", digests), ("df", df_rel)]
+            fresh = {"digests": digests, "df": df_rel}
+            appended = {
+                "counts": new_sho.groupBy("doc_id").agg(F.count("*").alias("n_o")),
+                "shingles": new_sho,
+            }
+            if os.path.isdir(os.path.join(os_path, live, "bands")):
+                appended["bands"] = lsh_bands(new_sho)
             if rerank:
-                # strict: order-dependent, so a new generation — but from
-                # the saved shingles, never by re-shingling document text,
-                # and as the DELTA re-rank (only affected docs enter the
-                # rank window; everyone else's saved prefix rows are
-                # copied forward) — the same policy as the in-session
-                # merge via the shared _delta_prefix
-                gens.append(
-                    ("prefix", _delta_prefix(index, new_sho, df_delta, df_rel, tn, td))
+                fresh["prefix"] = _delta_prefix(
+                    index, new_sho, df_delta, df_rel, tn, td
                 )
-            with concurrent.futures.ThreadPoolExecutor(
-                max_workers=len(gens)
-            ) as ex:
-                for f in [
-                    ex.submit(lambda n=n, rel=rel: mut.write_new(n, rel))
-                    for n, rel in gens
-                ]:
-                    f.result()
+            else:
+                appended["prefix"] = _ranked_prefix(new_sho, df_rel, tn, td)
 
-            # the optional bands relation is maintained in the SAME
-            # mutation window as everything else, so ingest_batch_lsh's
-            # lockstep guard passes by construction across admissions
-            # (probed before the window: reading only old directories)
-            has_bands = os.path.isdir(os.path.join(mut.os_path, "bands"))
-
-            # phases 2-3 are the mutation window
-            mut.enter_mutation_window()
-
-            # phase 2: appends — counts first
-            new_sho.groupBy("doc_id").agg(F.count("*").alias("n_o")).write.mode(
-                "append"
-            ).parquet(os.path.join(path, "counts"))
-            new_sho.write.mode("append").parquet(os.path.join(path, "shingles"))
-            if has_bands:
-                # band rows depend only on a doc's OWN shingles (see
-                # merge_lsh_bands): appending the batch's rows IS the
-                # exact maintenance — O(batch), no existing row changes
-                lsh_bands(new_sho).write.mode("append").parquet(
-                    os.path.join(path, "bands")
+            def write(gen):
+                _link(os_path, live, gen, appended)
+                root = f"{spark_path}/{gen}"
+                _write_concurrently(
+                    [(rel, "overwrite", f"{root}/{n}") for n, rel in fresh.items()]
+                    + [(rel, "append", f"{root}/{n}") for n, rel in appended.items()]
                 )
-            if not rerank:
-                # stale: append only the new docs' prefix rows, ranked
-                # under the merged df (df_rel still reads the old df
-                # directory — the swap has not happened yet)
-                _ranked_prefix(new_sho, df_rel, tn, td).write.mode(
-                    "append"
-                ).parquet(os.path.join(path, "prefix"))
+                if commit_token is not None:
+                    _record_token(os_path, gen, os.path.abspath(commit_token))
 
-            # phase 3: rename-aside swap, then the admission receipt
-            mut.swap()
-            if commit_token is not None:
-                mut.commit(commit_token)
+            store.commit(os_path, write, keep_predecessor=True)
         finally:
             new_sho.unpersist()
+        if commit_token is not None:
+            _admit_receipt(commit_token)
 
 
 def compact_saved_index(spark, path: str) -> None:
@@ -2603,71 +2264,51 @@ def compact_saved_index(spark, path: str) -> None:
     tests/test_dedup.py) — except that build's dominant stage,
     re-shingling all document text, never runs. ``digests`` cannot be
     derived from shingles (it needs text) but needs no cure: merges
-    maintain it exactly (union + re-aggregate), so it is rewritten
-    as-is. Total cost is one pass over the index's own relations —
-    O(index), not O(corpus text); at 100 TB this is the scheduled
-    maintenance job between which rerank=False admissions are free to
-    let prefix ranks drift.
+    maintain it exactly and always write it whole, so it is linked.
+    Total cost is one pass over the index's own relations — O(index),
+    not O(corpus text); at 100 TB this is the scheduled maintenance
+    job between which rerank=False admissions are free to let prefix
+    ranks drift.
 
     The optional ``bands`` relation, when present, is rewritten from
     the same shingle snapshot (it stays VALID across compaction — the
     doc set never changes — but rewriting collapses its per-admission
-    small files too).
-
-    Same _saved_index_mutation single-writer protocol as the merge;
-    compaction's mutation window contains ONLY the relation renames
-    (all generations are written before the window opens), so its
-    crash-demands-rebuild exposure is a few syscalls wide."""
-    import os
+    small files too)."""
+    import concurrent.futures
 
     tn, td = _INGEST_T_NUM, _INGEST_T_DEN
-    with _saved_index_mutation(path) as mut:
-        index = load_base_index(spark, mut.path)
-        # snapshot shingles first; every recomputation below reads the
-        # written __new generation, not the live directory, so one
-        # file listing defines the whole compaction
-        mut.write_new("shingles", index.shingles)
-        sho = spark.read.parquet(os.path.join(mut.path, "shingles__new"))
-        # generation writes before the mutation window have NO ordering
-        # contract (the swap at the end is what publishes them), so the
-        # independent relations — counts, digests, bands — run as
-        # concurrent Spark actions beside the df -> prefix chain, which
-        # alone is order-dependent (prefix reads the written df__new)
-        import concurrent.futures
+    with _index_writer(path) as (spark_path, os_path):
+        live = _index_generation(os_path, path)
+        index = _read_index(spark, f"{spark_path}/{live}")
+        has_bands = os.path.isdir(os.path.join(os_path, live, "bands"))
 
-        side = [
-            (
-                "counts",
-                sho.groupBy("doc_id").agg(F.count("*").alias("n_o")),
-            ),
-            ("digests", index.digests),
-        ]
-        if os.path.isdir(os.path.join(mut.os_path, "bands")):
-            # bands stay VALID across compaction (the doc set and the
-            # shingles themselves never change — merge_lsh_bands'
-            # contract), but rewriting them from the snapshot collapses
-            # the per-admission small files exactly like the others
-            side.append(("bands", lsh_bands(sho)))
-        with concurrent.futures.ThreadPoolExecutor(max_workers=len(side)) as ex:
-            futures = [
-                ex.submit(lambda n=n, df=df: mut.write_new(n, df))
-                for n, df in side
-            ]
-            mut.write_new("df", sho.groupBy("sh").agg(F.count("*").alias("df")))
-            df_rel = spark.read.parquet(os.path.join(mut.path, "df__new"))
-            mut.write_new("prefix", _ranked_prefix(sho, df_rel, tn, td))
-            for f in futures:
-                f.result()
-        mut.enter_mutation_window()
-        mut.swap()
+        def write(gen):
+            root = f"{spark_path}/{gen}"
+            _link(os_path, live, gen, ["digests"])
+            # every recomputation reads the compacted shingles (few
+            # files), not the live directory's per-admission appends
+            index.shingles.write.parquet(f"{root}/shingles")
+            sho = spark.read.parquet(f"{root}/shingles")
+            side = [(sho.groupBy("doc_id").agg(F.count("*").alias("n_o")), "counts")]
+            if has_bands:
+                side.append((lsh_bands(sho), "bands"))
+            # the side relations run beside the df -> prefix chain,
+            # which alone is order-dependent (prefix reads the written df)
+            with concurrent.futures.ThreadPoolExecutor(max_workers=len(side)) as ex:
+                futures = [
+                    ex.submit(lambda r=rel, n=name: r.write.parquet(f"{root}/{n}"))
+                    for rel, name in side
+                ]
+                sho.groupBy("sh").agg(F.count("*").alias("df")).write.parquet(
+                    f"{root}/df"
+                )
+                df_rel = spark.read.parquet(f"{root}/df")
+                _ranked_prefix(sho, df_rel, tn, td).write.parquet(f"{root}/prefix")
+                for f in futures:
+                    f.result()
+            _record_token(os_path, gen, _recorded_token(os_path, live))
 
-
-_INDEX_NOT_LOCAL = (
-    "saved-index mutation (merge_into_saved_index / compact_saved_index) "
-    "uses local filesystem renames. On a shared store, write a new "
-    "generation (build_base_index + save_base_index) or keep the index "
-    "in a transactional table format."
-)
+        store.commit(os_path, write, keep_predecessor=True)
 
 
 def _ingest_exact_tier(batch, index: BaseIndex):
@@ -2907,9 +2548,9 @@ def ingest_batch_lsh(
     bands-vs-index LOCKSTEP drift through the counts proxy; it does
     NOT re-verify the index's own counts/shingles consistency each
     call — that invariant is enforced at merge time
-    (_check_new_doc_ids), at load time (_MERGE_MUTATING), and on
-    demand via verify_index_consistency for shared-store ingest-only
-    workloads where neither runs. A high-rate caller whose lockstep
+    (_check_new_doc_ids), by the complete generations of a local
+    saved index, and on demand via verify_index_consistency for
+    shared-store ingest-only workloads. A high-rate caller whose lockstep
     is structural (e.g. the same code path always merges both) may
     pass check=False and own the invariant."""
     if bands is not None and check:
@@ -3168,7 +2809,6 @@ def dedup_ingest_chain_stale(spark, sf_dir):
     fresh tempdir (removed at interpreter exit — the result plan
     reads its parquet lazily, so it cannot be removed in-query)."""
     import atexit
-    import os
     import shutil
     import tempfile
 

@@ -2012,30 +2012,9 @@ def _ann_held(os_path: str, what: str) -> str:
     )
 
 
-def _ann_resolve_gen(os_path: str, path: str) -> str:
-    """The live generation, or a loud diagnosis shared by every entry
-    point (load/merge/compact must agree on what a missing pointer
-    means): a directory holding the three relations WITHOUT _CURRENT
-    is a pre-generational flat layout needing migration, not a
-    missing index."""
-    import os
-
-    gen = store.live_generation(os_path)
-    if gen is not None:
-        return gen
-    if all(
-        os.path.isdir(os.path.join(os_path, name)) for name in _ANN_RELATIONS
-    ):
-        raise ValueError(
-            f"saved ANN index at {path!r} uses the flat relation "
-            f"layout ({store.POINTER} missing but cents/codebook/"
-            f"codes directories present) — read the relations "
-            f"directly with spark.read.parquet and re-save with "
-            f"save_ann_index to adopt the generational protocol."
-        )
-    raise ValueError(
-        f"no saved ANN index at {path!r}: {store.POINTER} is missing "
-        f"(no save ever completed its atomic flip here)."
+def _ann_generation(os_path: str, path: str) -> str:
+    return store.resolve_generation(
+        os_path, path, _ANN_RELATIONS, "saved ANN index", "save_ann_index"
     )
 
 
@@ -2128,7 +2107,7 @@ def load_ann_index(spark, path: str) -> AnnIndex:
             f"until the recovery's atomic flip."
         )
     return _load_ann_relations(
-        spark, f"{spark_path}/{_ann_resolve_gen(os_path, path)}"
+        spark, f"{spark_path}/{_ann_generation(os_path, path)}"
     )
 
 
@@ -2224,7 +2203,7 @@ def merge_into_saved_ann_index(
     store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "merge"))
     codes_os = None
     try:
-        gen = _ann_resolve_gen(os_path, path)
+        gen = _ann_generation(os_path, path)
         rel_root = f"{spark_path}/{gen}"
         codes_os = os.path.join(os_path, gen, "codes")
         index = _load_ann_relations(spark, rel_root)
@@ -2464,7 +2443,7 @@ def compact_saved_ann_index(
     )
     store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "compact"), force)
     try:
-        gen = _ann_resolve_gen(os_path, path)
+        gen = _ann_generation(os_path, path)
         index = _load_ann_relations(spark, f"{spark_path}/{gen}")
         try:
             verify_ann_index(index)

@@ -96,21 +96,6 @@ def read_events_stream(
     return decode_event_records(raw)
 
 
-def read_events_batch(
-    spark: SparkSession, bootstrap_servers: str, topic: str
-) -> DataFrame:
-    """Batch read of a whole topic (the reference's Kafka connector is
-    a batch table scan over topics)."""
-    _require_kafka(spark)
-    raw = (
-        spark.read.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap_servers)
-        .option("subscribe", topic)
-        .load()
-    )
-    return decode_event_records(raw)
-
-
 def decode_event_records(raw: DataFrame) -> DataFrame:
     """Kafka wire format → typed events rows. Pure column expressions,
     source-agnostic: testable on any DataFrame with binary `value` +

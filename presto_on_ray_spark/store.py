@@ -1,6 +1,7 @@
 """The saved-store protocol: one local generation-pointer format shared
 by every maintained store that needs crash semantics — the saved ANN
-index (``operators/similarity.py``), the segment-counts store
+index (``operators/similarity.py``), the dedup saved index
+(``operators/dedup.py``), the segment-counts store
 (``operators/pipeline_prep.py``) and the classifier-weights store
 (``operators/textstats.py``).
 
@@ -9,8 +10,9 @@ On-disk layout of a store at ``path``::
     {path}/_CURRENT          one line naming the live generation
     {path}/gen-K/...         one complete generation per commit
     {path}/<marker>          exclusive single-writer marker
-                             (_ANN_WRITING, or _COUNTS_WRITING for the
-                             counts and weights stores)
+                             (_ANN_WRITING, _INDEX_WRITING for the dedup
+                             index, _COUNTS_WRITING for the counts and
+                             weights stores)
 
 Commit sequence (``commit``): the writer holds its marker, writes a
 COMPLETE fresh generation numbered one past the highest ``gen-K`` on
@@ -22,7 +24,10 @@ leaves the old pointer valid (the partial directory is unreferenced
 litter the next commit sweeps) and a crash after it leaves the new
 generation complete. The sweep is best-effort: once the flip has
 committed, a sweep failure warns instead of reporting the committed
-generation as a failed write.
+generation as a failed write. A generation may carry an append-only
+relation forward by hard links (``link_relation``) and append to the
+linked directory: the appended files are new names, so the live
+generation still sees only its own files.
 
 Durability: the pointer is written aside, fsynced, renamed over
 ``_CURRENT`` and the directory fsynced (``write_atomic``, also used by
@@ -33,13 +38,14 @@ guarantees or a transactional table format, as for every other parquet
 sink in this engine.
 
 Retention: the ANN store keeps only the live generation (its readers
-refuse while the marker is up). The counts and weights stores keep the
-live generation and its immediate predecessor — a one-mutation grace
-window for lazy readers and pinned-generation reads.
+refuse while the marker is up). The dedup index and the counts and
+weights stores keep the live generation and its immediate predecessor
+— a one-mutation grace window for lazy readers and pinned-generation
+reads; with links, a dedup merge's predecessor costs only the
+relations the merge rewrote.
 
 Only local paths (plain, Windows drive, ``file:`` URIs) get the
-protocol: an object store has no atomic rename. The dedup saved index
-keeps its own rename-aside protocol and shares only ``local_paths``."""
+protocol: an object store has no atomic rename."""
 
 from __future__ import annotations
 
@@ -200,6 +206,45 @@ def sweep(os_path: str, keep: set):
             shutil.rmtree(os.path.join(os_path, name))
     with contextlib.suppress(FileNotFoundError):
         os.remove(os.path.join(os_path, POINTER + ".tmp"))
+
+
+def resolve_generation(
+    os_path: str, path: str, relations, what: str, resave: str
+) -> str:
+    """The live generation, or one loud diagnosis every entry point of
+    a store shares (load and the writers must agree on what a missing
+    pointer means): a directory holding ``relations`` WITHOUT _CURRENT
+    is a pre-generational flat layout needing a re-save with
+    ``resave``, not a missing store."""
+    gen = live_generation(os_path)
+    if gen is not None:
+        return gen
+    if all(os.path.isdir(os.path.join(os_path, n)) for n in relations):
+        raise ValueError(
+            f"{what} at {path!r} uses the flat relation layout "
+            f"({POINTER} missing but {'/'.join(relations)} directories "
+            f"present) — read the relations directly with "
+            f"spark.read.parquet and re-save with {resave} to adopt the "
+            f"generational protocol."
+        )
+    raise ValueError(
+        f"no {what} at {path!r}: {POINTER} is missing (no save ever "
+        f"completed its atomic flip here)."
+    )
+
+
+def link_relation(src: str, dst: str) -> None:
+    """Carry the parquet relation directory ``src`` into the fresh
+    directory ``dst`` by hard-linking its data files and their ``.crc``
+    checksums — O(files), no bytes copied. Names starting with ``_`` or
+    ``._`` are skipped: Spark's committer rewrites ``_SUCCESS`` (and its
+    checksum) in place on an append, which through a shared inode would
+    change ``src``. No copy fallback: a filesystem without hard links
+    fails the commit before its flip."""
+    os.makedirs(dst)
+    for name in os.listdir(src):
+        if not name.startswith(("_", "._")):
+            os.link(os.path.join(src, name), os.path.join(dst, name))
 
 
 def commit(os_path: str, write, keep_predecessor: bool) -> str:

@@ -26,8 +26,10 @@ from presto_on_ray_spark.operators.dedup import (
     BaseIndex,
     _INDEX_NOT_LOCAL,
     _admit_receipt,
+    _admitted_by_live_generation,
     ingest_batch,
     load_base_index,
+    load_saved_bands,
     merge_into_saved_index,
     shingle_saturation_from_df,
 )
@@ -146,21 +148,21 @@ def stream_ingest_admit(
     deliberately leaves to its caller).
 
     Exactly-once admission under at-least-once foreachBatch delivery:
-    each batch's merge writes a commit token (``admit_log/batch-<id>``,
-    default ``<index>/_ADMITTED/``) INSIDE the merge's mutation
-    window, after the swap. A re-delivered batch whose token exists
-    was fully admitted and is skipped outright — re-running it would
-    classify its docs against an index that now CONTAINS them (every
-    doc its own exact dup), so the skip also keeps sink deliveries
-    semantically stable: a batch's classification is always computed
-    against the pre-admission state. A crash between swap and token
-    strands the merge's _MERGE_MUTATING marker, which fails the next
-    batch loudly instead of guessing. Batches with nothing to admit
-    write the token directly, so their replays are skipped exactly
-    like admitting ones: the sink sees each COMMITTED batch once —
+    each batch's merge records its commit token
+    (``admit_log/batch-<id>``, default ``<index>/_ADMITTED/``) inside
+    the generation it commits and creates the receipt after the flip.
+    A re-delivered batch whose receipt exists, or whose token the live
+    generation records (a crash between the flip and the receipt —
+    the missing receipt is created first), was fully admitted and is
+    skipped outright — re-running it would classify its docs against
+    an index that now CONTAINS them (every doc its own exact dup), so
+    the skip also keeps sink deliveries semantically stable: a
+    batch's classification is always computed against the
+    pre-admission state. Batches with nothing to admit write the
+    receipt directly, so their replays are skipped exactly like
+    admitting ones: the sink sees each COMMITTED batch once —
     re-delivery only happens for the crash window between sink and
-    token, where classify-then-sink repeats (ordinary
-    at-least-once).
+    flip, where classify-then-sink repeats (ordinary at-least-once).
 
     Couplings the caller owns: token names are ``batch-<batch_id>``,
     and batch ids restart at 0 with a fresh checkpoint — reusing an
@@ -173,8 +175,7 @@ def stream_ingest_admit(
     log already holds batch receipts, this run's batch ids would
     collide with them and its batches would be silently skipped (no
     sink delivery, no admission, no error). One stream per index:
-    the merge's single-writer lock refuses concurrent admitters
-    loudly.
+    the merge's writer marker refuses concurrent admitters loudly.
 
     rerank=False (the default) is deliberate: strict re-ranking
     inside every micro-batch re-ranks all base docs sharing a shingle
@@ -194,7 +195,7 @@ def stream_ingest_admit(
     relation (save_base_index with_bands=True / save_index_bands) and
     ``classify`` accepts a ``bands`` parameter (ingest_batch_lsh,
     ingest_batch_adaptive), each batch gets the SAVED bands injected
-    — maintained inside every merge's mutation window, so they are in
+    (load_saved_bands) — maintained by every merge, so they are in
     lockstep with the index by construction and the per-batch band
     work is O(batch) (derive the batch's rows, join against the
     maintained relation) instead of re-deriving the whole index's
@@ -214,12 +215,10 @@ def stream_ingest_admit(
     import inspect
     import os
 
-    index_spark_path, index_os_path = local_paths(index_path, _INDEX_NOT_LOCAL)
+    _, index_os_path = local_paths(index_path, _INDEX_NOT_LOCAL)
     tokens = admit_log if admit_log is not None else os.path.join(
         index_os_path, "_ADMITTED"
     )
-    bands_os_dir = os.path.join(index_os_path, "bands")
-    bands_spark_dir = os.path.join(index_spark_path, "bands")
     try:
         params = inspect.signature(classify).parameters
     except (TypeError, ValueError):  # C callables etc.: no injection
@@ -250,6 +249,9 @@ def stream_ingest_admit(
         token = os.path.join(tokens, f"batch-{batch_id}")
         if os.path.exists(token):
             return  # committed with a previous delivery's merge
+        if _admitted_by_live_generation(index_os_path, token):
+            _admit_receipt(token)  # the merge flipped, then died
+            return
         batch_persists: list[DataFrame] = []
 
         def keep(df: DataFrame) -> DataFrame:
@@ -260,14 +262,13 @@ def stream_ingest_admit(
             batch = batch_df.filter(F.col("text").isNotNull())
             index = load_base_index(batch_df.sparkSession, index_path)
             extra = {}
-            if accepts_bands and os.path.isdir(bands_os_dir):
-                # the saved bands relation — maintained inside every
-                # merge's mutation window, so lockstep with the index
+            if accepts_bands:
+                # the saved bands relation, in lockstep with the index
                 # this batch classifies against (call-time kwargs
                 # override any partial-bound stale bands=)
-                extra["bands"] = batch_df.sparkSession.read.parquet(
-                    bands_spark_dir
-                )
+                bands = load_saved_bands(batch_df.sparkSession, index_path)
+                if bands is not None:
+                    extra["bands"] = bands
             if accepts_saturation:
                 # the tier-dispatch statistic, refreshed per batch from
                 # the index's maintained (sh, df) relation — exact and

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from presto_on_ray_spark import suite
+from presto_on_ray_spark import store, suite
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.operators.dedup import exact_dedup_keep
 
@@ -753,7 +753,7 @@ def test_merge_into_saved_index_strict_equals_rebuild(spark, tmp_path):
     idx.release()
 
     def parquet_files(rel):
-        d = os.path.join(p, rel)
+        d = os.path.join(p, store.live_generation(p), rel)
         return {f for f in os.listdir(d) if f.endswith(".parquet")}
 
     before = {rel: parquet_files(rel) for rel in ("shingles", "counts")}
@@ -807,14 +807,20 @@ def test_merge_into_saved_index_stale_appends_prefix(spark, tmp_path):
 
     import os
 
-    pref_before = {
-        f for f in os.listdir(os.path.join(p, "prefix")) if f.endswith(".parquet")
-    }
+    def prefix_files():
+        d = os.path.join(p, store.live_generation(p), "prefix")
+        return {
+            f: os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+        }
+
+    pref_before = prefix_files()
     merge_into_saved_index(spark, p, admitted, rerank=False)
-    pref_after = {
-        f for f in os.listdir(os.path.join(p, "prefix")) if f.endswith(".parquet")
-    }
-    assert pref_before <= pref_after  # stale prefix is append-only
+    pref_after = prefix_files()
+    assert pref_before.keys() <= pref_after.keys()  # stale prefix is append-only
+    # O(batch) I/O: the carried prefix files are links to the
+    # predecessor generation's, not copies
+    for f, path in pref_before.items():
+        assert os.path.samefile(path, pref_after[f])
 
     merged = load_base_index(spark, p)
     stale_base_prefix = sorted(
@@ -869,53 +875,49 @@ def test_merge_guards_fail_loud(spark, tmp_path):
     merged = load_base_index(spark, p)
     assert merged.counts.filter(F.col("doc_id") == 4).count() == 1
 
-    # crash/concurrency markers: __old without a mutation marker =
-    # tampered/pre-protocol state (rebuild); a held _MERGE_INPROGRESS
-    # lock = concurrent merge or pre-mutation crash (index intact,
-    # loud, does not block readers); _MERGE_MUTATING = mid-mutation
-    # crash (rebuild; load refuses too)
-    probe = spark.createDataFrame([(99, "x y z w v")], "doc_id int, text string")
-    os.makedirs(os.path.join(p, "digests__old"))
-    with pytest.raises(ValueError, match="rebuild"):
-        merge_into_saved_index(spark, p, probe)
-    os.rmdir(os.path.join(p, "digests__old"))
-    # the aborted merge released its lock and left no __new litter
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
+    # a held writer marker (a live or crashed writer) refuses every
+    # writer but never readers: the live generation is intact
+    from presto_on_ray_spark.operators.dedup import _INDEX_WRITING
 
-    with open(os.path.join(p, "_MERGE_INPROGRESS"), "w") as fh:
-        fh.write("x\n")
+    probe = spark.createDataFrame([(99, "x y z w v")], "doc_id int, text string")
+    marker = os.path.join(p, _INDEX_WRITING)
+    open(marker, "w").close()
     with pytest.raises(ValueError, match="intact"):
         merge_into_saved_index(spark, p, probe)
-    load_base_index(spark, p)  # the lock alone does not block readers
-    os.remove(os.path.join(p, "_MERGE_INPROGRESS"))
-
-    with open(os.path.join(p, "_MERGE_MUTATING"), "w") as fh:
-        fh.write("x\n")
-    with pytest.raises(ValueError, match="rebuild"):
-        merge_into_saved_index(spark, p, probe)
-    with pytest.raises(ValueError, match="inconsistent"):
-        load_base_index(spark, p)
-    # a save over merge markers refuses by default (the markers may be
-    # a LIVE merge — racing it would silently interleave writes)...
+    load_base_index(spark, p)
+    # a save over the marker refuses by default (it may be a LIVE
+    # writer)...
     idx2 = build_base_index(base, tracked=False)
     with pytest.raises(ValueError, match="force=True"):
         save_base_index(idx2, p)
-    assert os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    # ...and with force=True it IS the prescribed rebuild recovery
+    assert os.path.exists(marker)
+    # ...and with force=True takes it over, releasing it on success
     save_base_index(idx2, p, force=True)
     idx2.release()
-    assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    load_base_index(spark, p)  # no longer refuses
+    assert not os.path.exists(marker)
+    load_base_index(spark, p)
 
-    # a stale __new generation from an aborted pre-protocol merge is
-    # consumed under the lock, not an error
-    os.makedirs(os.path.join(p, "prefix__new"))
+    # a crashed writer's partial generation is unreferenced litter:
+    # the next commit numbers past it and sweeps it
+    litter = os.path.join(p, "gen-41")
+    os.makedirs(os.path.join(litter, "prefix"))
     merge_into_saved_index(spark, p, probe)
+    assert store.live_generation(p) == "gen-42"
+    assert not os.path.exists(litter)
     assert (
         load_base_index(spark, p).counts.filter(F.col("doc_id") == 99).count()
         == 1
     )
+
+    # the flat pre-generational layout is diagnosed, not misread
+    flat = str(tmp_path / "flat")
+    for name in ("digests", "shingles", "df", "counts", "prefix"):
+        os.makedirs(os.path.join(flat, name))
+    with pytest.raises(ValueError, match="re-save with save_base_index"):
+        load_base_index(spark, flat)
+    with pytest.raises(ValueError, match="flat relation layout"):
+        merge_into_saved_index(spark, flat, probe)
+    assert not os.path.exists(os.path.join(flat, _INDEX_WRITING))
 
     with pytest.raises(ValueError, match="not a local path"):
         merge_into_saved_index(
@@ -997,7 +999,7 @@ def test_merge_saved_file_uri_and_crash_detection(spark, tmp_path):
 
     spark.createDataFrame([(777, 3)], "doc_id int, n_o long").write.mode(
         "append"
-    ).parquet(os.path.join(p, "counts"))
+    ).parquet(os.path.join(p, store.live_generation(p), "counts"))
     with pytest.raises(ValueError, match="rebuild"):
         merge_into_saved_index(
             spark,
@@ -1074,8 +1076,8 @@ def test_compact_saved_index_equals_rebuild(spark, tmp_path):
     index is relation-for-relation multiset-equal to
     save(build(base + everything admitted)) — the prefix drift the
     stale policy accumulated is provably present beforehand and cured
-    exactly — and the maintenance markers / generation directories
-    are all gone afterwards."""
+    exactly — and the writer marker is released, with only the live
+    generation and its predecessor left on disk."""
     import os
 
     from presto_on_ray_spark.operators.dedup import (
@@ -1116,11 +1118,9 @@ def test_compact_saved_index_equals_rebuild(spark, tmp_path):
         assert stale_prefix != want_prefix  # there IS drift to cure
 
         compact_saved_index(spark, p)
-        for name in BaseIndex._fields:
-            assert not os.path.exists(os.path.join(p, name + "__new"))
-            assert not os.path.exists(os.path.join(p, name + "__old"))
-        assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-        assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
+        # save gen-0, two merges gen-1/gen-2, compaction gen-3
+        assert store.live_generation(p) == "gen-3"
+        assert sorted(os.listdir(p)) == ["_CURRENT", "gen-2", "gen-3"]
 
         compacted = load_base_index(spark, p)
         for name in BaseIndex._fields:
@@ -1140,29 +1140,29 @@ def test_compact_saved_index_equals_rebuild(spark, tmp_path):
     assert via_c == via_r
     assert via_c[30] == ("near", 1)
 
-    # compaction respects the writer protocol: a held lock refuses it
-    with open(os.path.join(p, "_MERGE_INPROGRESS"), "w") as fh:
-        fh.write("x\n")
+    # compaction respects the writer protocol: a held marker refuses it
+    from presto_on_ray_spark.operators.dedup import _INDEX_WRITING
+
+    open(os.path.join(p, _INDEX_WRITING), "w").close()
     with pytest.raises(ValueError, match="intact"):
         compact_saved_index(spark, p)
-    os.remove(os.path.join(p, "_MERGE_INPROGRESS"))
+    os.remove(os.path.join(p, _INDEX_WRITING))
     compact_saved_index(spark, p)  # idempotent: compacting twice is fine
     again = load_base_index(spark, p)
     assert sorted(map(tuple, again.prefix.collect())) == want_prefix
 
 
 def test_merge_commit_token_exactly_once(spark, tmp_path):
-    """commit_token: the admission receipt is created inside the
-    mutation window AFTER the swap, so token-present == fully
-    admitted. A duplicate token (caller failed to skip a committed
-    delivery) raises loudly, but the index is CONSISTENT at that
-    point — the swap applied — so the protocol releases its markers
-    instead of demanding an O(corpus) rebuild for a bookkeeping
-    fault: the admission stands, readers keep working, and a replay
-    of the colliding delivery is skipped by the pre-existing token."""
+    """commit_token: the admission receipt is created AFTER the flip,
+    so token-present == fully admitted. A duplicate token (caller
+    failed to skip a committed delivery) raises loudly, with the
+    admission standing: the marker is released, readers keep working,
+    and a replay of the colliding delivery is skipped by the
+    pre-existing token."""
     import os
 
     from presto_on_ray_spark.operators.dedup import (
+        _INDEX_WRITING,
         build_base_index,
         load_base_index,
         merge_into_saved_index,
@@ -1178,8 +1178,8 @@ def test_merge_commit_token_exactly_once(spark, tmp_path):
     token = os.path.join(p, "_ADMITTED", "batch-0")
     merge_into_saved_index(spark, p, admitted, commit_token=token)
     assert os.path.exists(token)
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
+    marker = os.path.join(p, _INDEX_WRITING)
+    assert not os.path.exists(marker)
     assert load_base_index(spark, p).counts.filter(
         F.col("doc_id") == 4
     ).count() == 1
@@ -1189,9 +1189,8 @@ def test_merge_commit_token_exactly_once(spark, tmp_path):
     )
     with pytest.raises(ValueError, match="already exists"):
         merge_into_saved_index(spark, p, extra, commit_token=token)
-    # markers released, admission applied, index loadable
-    assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
+    # marker released, admission applied, index loadable
+    assert not os.path.exists(marker)
     merged = load_base_index(spark, p)
     assert merged.counts.filter(F.col("doc_id") == 8).count() == 1
     # and the writer lock is genuinely free: the next admission works
@@ -1207,10 +1206,9 @@ def test_merge_commit_token_exactly_once(spark, tmp_path):
         F.col("doc_id") == 9
     ).count() == 1
 
-    # tokens SURVIVE the prescribed rebuild recovery (save_base_index
-    # clears markers and generations, never the admission log): after
-    # a crash-demanded rebuild, replay-skip correctness still depends
-    # on committed batches staying committed
+    # tokens SURVIVE a rebuild (the sweep removes only gen-K
+    # directories, never the admission log): replay-skip correctness
+    # depends on committed batches staying committed
     idx2 = build_base_index(base, tracked=False)
     save_base_index(idx2, p)
     idx2.release()
@@ -1501,82 +1499,18 @@ def test_verify_index_consistency(spark):
         idx.release()
 
 
-def test_saved_mutation_protocol_enforces_swap(spark, tmp_path):
-    """ADVICE r11: the mutation protocol's ordering really is ENFORCED
-    — a writer that enters its window and returns WITHOUT swap() may
-    have appended while the keyed generations never swapped in, so the
-    clean-exit path must raise and strand the markers, not release an
-    index it cannot prove consistent. Also pins save_base_index's
-    writer-lock behavior (refuse over markers; force = recovery; hold
-    the lock while writing)."""
-    import os
-
-    from presto_on_ray_spark.operators.dedup import (
-        _saved_index_mutation,
-        build_base_index,
-        load_base_index,
-        save_base_index,
-    )
-
-    base = spark.createDataFrame(
-        [(1, "a b c d e f g h i j")], "doc_id int, text string"
-    )
-    idx = build_base_index(base, tracked=False)
-    p = str(tmp_path / "bidx")
-    save_base_index(idx, p)
-    idx.release()
-
-    with pytest.raises(RuntimeError, match="without swap"):
-        with _saved_index_mutation(p) as mut:
-            mut.enter_mutation_window()
-    # both markers stranded: writers and readers refuse loudly
-    assert os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    with pytest.raises(ValueError, match="inconsistent"):
-        load_base_index(spark, p)
-
-    # recovery path: unforced save refuses, forced save unblocks
-    idx2 = build_base_index(base, tracked=False)
-    with pytest.raises(ValueError, match="force=True"):
-        save_base_index(idx2, p)
-    save_base_index(idx2, p, force=True)
-    load_base_index(spark, p)
-
-    # a writer that never enters the window releases cleanly (no-op
-    # body), and an EMPTY swap (append-only writers) is still a valid
-    # completion — no strand either way
-    with _saved_index_mutation(p) as mut:
-        pass
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    with _saved_index_mutation(p) as mut:
-        mut.enter_mutation_window()
-        mut.swap()
-    assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-
-    # a held lock alone (no mutating marker) also refuses an unforced
-    # save — it may be a LIVE merge mid-generation-write
-    with open(os.path.join(p, "_MERGE_INPROGRESS"), "w") as fh:
-        fh.write("x\n")
-    with pytest.raises(ValueError, match="force=True"):
-        save_base_index(idx2, p)
-    save_base_index(idx2, p, force=True)
-    idx2.release()
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    load_base_index(spark, p)
-
-
 def test_saved_bands_lifecycle(spark, tmp_path):
     """VERDICT r11 #1: the optional sixth saved-index relation. Bands
     attach to an existing index (save_index_bands) or at save time
-    (with_bands=True), are appended inside every merge's mutation
-    window (lockstep by construction — the ingest_batch_lsh guard
-    passes and verdicts equal the in-plan derivation), are rewritten
-    by compaction, and a rebuild WITHOUT with_bands removes them
-    rather than leaving a silently-stale relation."""
+    (with_bands=True), are appended by every merge (lockstep by
+    construction — the ingest_batch_lsh guard passes and verdicts
+    equal the in-plan derivation), are rewritten by compaction, and a
+    rebuild WITHOUT with_bands drops them rather than leaving a
+    silently-stale relation."""
     import os
 
     from presto_on_ray_spark.operators.dedup import (
+        _INDEX_WRITING,
         build_base_index,
         compact_saved_index,
         ingest_batch_lsh,
@@ -1600,13 +1534,12 @@ def test_saved_bands_lifecycle(spark, tmp_path):
     save_base_index(idx, p)
     assert load_saved_bands(spark, p) is None  # optional: absent by default
 
-    # attach to the existing saved index (first-generation swap)
+    # attach to the existing saved index (a new generation)
     save_index_bands(spark, p)
     want = rows(lsh_bands(idx.shingles))
     assert rows(load_saved_bands(spark, p)) == want
     idx.release()
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    assert not os.path.exists(os.path.join(p, "bands__new"))
+    assert not os.path.exists(os.path.join(p, _INDEX_WRITING))
 
     # stale-policy merge appends the admitted docs' band rows
     admitted = spark.createDataFrame(
@@ -1653,19 +1586,18 @@ def test_saved_bands_lifecycle(spark, tmp_path):
 
     # compaction rewrites bands from the same shingle snapshot: equal
     # rows, per-admission small files collapsed
-    bands_dir = os.path.join(p, "bands")
-    parts_before = len(
-        [f for f in os.listdir(bands_dir) if f.endswith(".parquet")]
-    )
+    def band_parts():
+        bands_dir = os.path.join(p, store.live_generation(p), "bands")
+        return len([f for f in os.listdir(bands_dir) if f.endswith(".parquet")])
+
+    parts_before = band_parts()
     compact_saved_index(spark, p)
     loaded = load_base_index(spark, p)
     assert rows(load_saved_bands(spark, p)) == rows(lsh_bands(loaded.shingles))
-    parts_after = len(
-        [f for f in os.listdir(bands_dir) if f.endswith(".parquet")]
-    )
+    parts_after = band_parts()
     assert parts_after <= parts_before
 
-    # rebuild WITHOUT with_bands: stale bands removed, not kept
+    # rebuild WITHOUT with_bands: stale bands dropped, not kept
     idx2 = build_base_index(base, tracked=False)
     save_base_index(idx2, p)
     assert load_saved_bands(spark, p) is None
@@ -1678,14 +1610,14 @@ def test_saved_bands_lifecycle(spark, tmp_path):
     idx2.release()
 
 
-def test_save_base_index_failure_strands_markers(spark, tmp_path):
-    """Code-review r12: the rebuild mutates LIVE directories, so a
-    save that fails mid-write must leave the location LOUD (both
-    merge markers stranded, readers refuse) instead of a silently
-    readable torn index — and the forced re-save is the recovery."""
+def test_save_base_index_failure_keeps_live_generation(spark, tmp_path):
+    """A save that fails mid-write never touches the live generation:
+    the previous index stays live and readable, the writer marker is
+    released, and the next save commits over the partial directory."""
     import os
 
     from presto_on_ray_spark.operators.dedup import (
+        _INDEX_WRITING,
         build_base_index,
         load_base_index,
         save_base_index,
@@ -1697,9 +1629,10 @@ def test_save_base_index_failure_strands_markers(spark, tmp_path):
     idx = build_base_index(base, tracked=False)
     p = str(tmp_path / "bidx")
     save_base_index(idx, p)
+    gen = store.live_generation(p)
 
-    # poison the THIRD relation: digests and shingles overwrite, then
-    # the df write raises at runtime — a mid-rebuild failure
+    # poison one relation: the others write, then the df write raises
+    # at runtime — a mid-save failure
     poisoned = idx._replace(
         df=spark.createDataFrame([(1,)], "x int").select(
             F.raise_error(F.lit("boom")).cast("string").alias("sh")
@@ -1707,19 +1640,17 @@ def test_save_base_index_failure_strands_markers(spark, tmp_path):
     )
     with pytest.raises(Exception, match="boom"):
         save_base_index(poisoned, p)
-    assert os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
-    with pytest.raises(ValueError, match="inconsistent"):
-        load_base_index(spark, p)
-
-    # recovery: unforced refuses, forced rebuild clears and unblocks
-    with pytest.raises(ValueError, match="force=True"):
-        save_base_index(idx, p)
-    save_base_index(idx, p, force=True)
-    assert not os.path.exists(os.path.join(p, "_MERGE_MUTATING"))
-    assert not os.path.exists(os.path.join(p, "_MERGE_INPROGRESS"))
+    assert not os.path.exists(os.path.join(p, _INDEX_WRITING))
+    assert store.live_generation(p) == gen
     loaded = load_base_index(spark, p)
     assert loaded.counts.count() == 1
+    assert sorted(map(tuple, loaded.df.collect())) == sorted(
+        map(tuple, idx.df.collect())
+    )
+
+    save_base_index(idx, p)
+    assert store.live_generation(p) != gen
+    assert load_base_index(spark, p).counts.count() == 1
     idx.release()
 
 

@@ -1,5 +1,6 @@
 """The saved-store protocol (presto_on_ray_spark/store.py) under crash
 injection: every writer that commits generations — ANN save and
+compact, dedup index save, bands attach, stale and strict merge and
 compact, segment-counts save and merge, classifier-weights save — is
 failed at each protocol step (relation write, pointer flip, sweep).
 Before the flip the pointer, the old rows and the marker must be as
@@ -16,6 +17,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from presto_on_ray_spark import store
+from presto_on_ray_spark.operators import dedup as dd
 from presto_on_ray_spark.operators import pipeline_prep as pp
 from presto_on_ray_spark.operators import similarity as sim
 from presto_on_ray_spark.operators import textstats as ts
@@ -46,6 +48,21 @@ def _counts_rows(spark, p):
 
 def _weights_rows(spark, p):
     return _rows(ts.load_classifier_weights(spark, p))
+
+
+def _dedup_rows(spark, p):
+    bands = dd.load_saved_bands(spark, p)
+    return [_rows(rel) for rel in dd.load_base_index(spark, p)] + (
+        [] if bands is None else [_rows(bands)]
+    )
+
+
+_BASE = [(1, "a b c d e f g h"), (2, "p q r s t u v w")]
+_ADMIT = [(3, "a b c d e f x y")]
+
+
+def _dedup_index(spark, rows):
+    return dd.build_base_index(_docs(spark, rows))
 
 
 def _ann_save(spark, p):
@@ -88,9 +105,49 @@ def _weights_save(spark, p):
     )
 
 
+def _dedup_save(spark, p):
+    dd.save_base_index(_dedup_index(spark, _BASE), p)
+    return dd._INDEX_WRITING, _dedup_rows, lambda: dd.save_base_index(
+        _dedup_index(spark, _BASE + _ADMIT), p
+    )
+
+
+def _dedup_bands(spark, p):
+    dd.save_base_index(_dedup_index(spark, _BASE), p)
+    return dd._INDEX_WRITING, _dedup_rows, lambda: dd.save_index_bands(spark, p)
+
+
+def _dedup_merge_stale(spark, p):
+    dd.save_base_index(_dedup_index(spark, _BASE), p, with_bands=True)
+    return dd._INDEX_WRITING, _dedup_rows, lambda: dd.merge_into_saved_index(
+        spark, p, _docs(spark, _ADMIT), rerank=False
+    )
+
+
+def _dedup_merge_strict(spark, p):
+    dd.save_base_index(_dedup_index(spark, _BASE), p)
+    token = os.path.join(p, "_ADMITTED", "batch-0")
+    return dd._INDEX_WRITING, _dedup_rows, lambda: dd.merge_into_saved_index(
+        spark, p, _docs(spark, _ADMIT), commit_token=token
+    )
+
+
+def _dedup_compact(spark, p):
+    dd.save_base_index(_dedup_index(spark, _BASE), p, with_bands=True)
+    dd.merge_into_saved_index(spark, p, _docs(spark, _ADMIT), rerank=False)
+    return dd._INDEX_WRITING, _dedup_rows, lambda: dd.compact_saved_index(
+        spark, p
+    )
+
+
 WRITERS = {
     "ann_save": _ann_save,
     "ann_compact": _ann_compact,
+    "dedup_save": _dedup_save,
+    "dedup_bands": _dedup_bands,
+    "dedup_merge_stale": _dedup_merge_stale,
+    "dedup_merge_strict": _dedup_merge_strict,
+    "dedup_compact": _dedup_compact,
     "counts_save": _counts_save,
     "counts_merge": _counts_merge,
     "weights_save": _weights_save,
@@ -145,7 +202,7 @@ def test_crash_matrix(spark, tmp_path, monkeypatch, writer, step):
         # the flip committed: the new generation is live and complete
         newest = max(int(n[4:]) for n in os.listdir(p) if n.startswith("gen-"))
         assert store.live_generation(p) == f"gen-{newest}" != gen_before
-        if writer != "ann_compact":  # compaction keeps the rows
+        if not writer.endswith("_compact"):  # compaction keeps the rows
             assert read(spark, p) != rows_before
     else:
         assert store.live_generation(p) == gen_before

@@ -377,6 +377,80 @@ def test_stream_ingest_admit_replay_is_exactly_once(spark, tmp_path):
     assert tree_state(p) == before  # the index was not touched at all
 
 
+def test_stream_ingest_admit_heals_receipt_gap(spark, tmp_path, monkeypatch):
+    """A merge that flips its generation and then fails before its
+    receipt exists leaves the admission live with the writer marker
+    released; a replay of that delivery finds the token recorded in
+    the live generation, creates the missing receipt, and delivers
+    nothing to the sink, leaving the index tree byte-identical."""
+    import os
+
+    import pyspark.sql.functions as F
+    import pytest
+
+    from presto_on_ray_spark import store
+    from presto_on_ray_spark.operators import dedup as dd
+    from presto_on_ray_spark.streaming.ingest import stream_ingest_admit
+
+    schema = "doc_id int, text string"
+    rows = [(20, "some new words arrive here")]
+    src = tmp_path / "arrivals"
+    spark.createDataFrame(rows, schema).write.parquet(str(src / "f1"))
+    p = str(tmp_path / "bidx")
+    dd.save_base_index(
+        dd.build_base_index(
+            spark.createDataFrame([(1, "a b c d e f g h i j")], schema)
+        ),
+        p,
+    )
+    gen = store.live_generation(p)
+    log = str(tmp_path / "log")
+    token = os.path.join(log, "batch-0")
+
+    def crash(_token):
+        raise OSError("injected: crash before the receipt")
+
+    monkeypatch.setattr(dd, "_admit_receipt", crash)
+    with pytest.raises(OSError, match="before the receipt"):
+        dd.merge_into_saved_index(
+            spark,
+            p,
+            spark.createDataFrame(rows, schema),
+            rerank=False,
+            commit_token=token,
+        )
+    monkeypatch.undo()
+    assert sorted(n for n in os.listdir(p) if not n.startswith("gen-")) == [
+        store.POINTER
+    ]
+    assert store.live_generation(p) != gen
+    assert dd.load_base_index(spark, p).counts.filter(
+        F.col("doc_id") == 20
+    ).count() == 1
+    assert not os.path.exists(token)
+
+    def tree(root):
+        out = {}
+        for d, _, files in os.walk(root):
+            for f in files:
+                with open(os.path.join(d, f), "rb") as fh:
+                    out[os.path.relpath(os.path.join(d, f), root)] = fh.read()
+        return out
+
+    before = tree(p)
+    delivered = []
+    stream_ingest_admit(
+        spark.readStream.schema(schema).parquet(str(src / "f1")),
+        p,
+        lambda df, _bid: delivered.append(df.collect()),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        admit_log=log,
+    )
+    assert delivered == []
+    assert os.path.exists(token)
+    assert tree(p) == before
+
+
 def test_stream_ingest_admit_with_mid_stream_compaction(spark, tmp_path):
     """The production maintenance schedule end-to-end: admit a batch
     via the stream, compact the index between runs (the scheduled
@@ -727,6 +801,7 @@ def test_stream_ingest_admit_uses_saved_bands(spark, tmp_path):
     import functools
     import os
 
+    from presto_on_ray_spark import store
     from presto_on_ray_spark.operators.dedup import (
         build_base_index,
         ingest_batch_lsh,
@@ -763,7 +838,7 @@ def test_stream_ingest_admit_uses_saved_bands(spark, tmp_path):
     idx.release()
 
     def band_files():
-        d = os.path.join(p, "bands")
+        d = os.path.join(p, store.live_generation(p), "bands")
         return {
             f: os.path.getsize(os.path.join(d, f))
             for f in os.listdir(d)
