@@ -180,7 +180,8 @@ def final_line(full: dict) -> str:
 
 
 def aggregate_runs(runs: list[dict]) -> dict:
-    """Per-key median/min/max over N single-run ``full`` dicts.
+    """Per-key median/min/max over N single-run ``full`` dicts, plus
+    each run's own ``queries`` map (``run_queries``) for quartiles.
 
     Pure so tests can pin it. Every run carries the same key set (the
     HEADLINE list + layout pair is fixed per tree); the median is per
@@ -201,6 +202,7 @@ def aggregate_runs(runs: list[dict]) -> dict:
         "queries_min": {k: min(r["queries"][k] for r in runs) for k in keys},
         "queries_max": {k: max(r["queries"][k] for r in runs) for k in keys},
         "run_totals": [r["value"] for r in runs],
+        "run_queries": [r["queries"] for r in runs],
     }
 
 
@@ -209,7 +211,7 @@ def main_multi(n: int) -> None:
     driver's single-run methodology — fresh JVM, same warmup, same
     count() sink), aggregated to per-key medians. One JSON line out,
     same schema as the single-run contract plus a ``runs`` count; the
-    full spread (min/max per key, per-run totals) goes to
+    full spread (min/max per key, per-run totals and times) goes to
     BENCH_MEDIAN.json and stderr. Additions only: the no-flag default
     path is untouched."""
     import subprocess

@@ -1689,11 +1689,9 @@ _INDEX_NOT_LOCAL = (
 @contextlib.contextmanager
 def _index_writer(path: str, force: bool = False):
     """Hold the saved index's writer marker for the ``with`` body;
-    yields (spark_path, os_path). Released on any exit: a commit never
-    touches the live generation, so a failed writer leaves the previous
-    generation live and readable."""
+    yields (spark_path, os_path)."""
     spark_path, os_path = store.local_paths(path, _INDEX_NOT_LOCAL)
-    store.acquire(
+    with store.writer(
         os_path,
         _INDEX_WRITING,
         f"saved index at {os_path!r}: {_INDEX_WRITING} is held — a writer "
@@ -1701,11 +1699,8 @@ def _index_writer(path: str, force: bool = False):
         f"writer is live, remove {_INDEX_WRITING} or re-save with "
         f"save_base_index(force=True), then retry.",
         force,
-    )
-    try:
+    ):
         yield spark_path, os_path
-    finally:
-        store.release(os_path, _INDEX_WRITING)
 
 
 def _index_generation(os_path: str, path: str) -> str:
@@ -1718,13 +1713,6 @@ def _read_index(spark, root: str) -> BaseIndex:
     return BaseIndex(
         *[spark.read.parquet(f"{root}/{name}") for name in BaseIndex._fields]
     )
-
-
-def _link(os_path: str, live: str, gen: str, names) -> None:
-    for name in names:
-        store.link_relation(
-            os.path.join(os_path, live, name), os.path.join(os_path, gen, name)
-        )
 
 
 def _recorded_token(os_path: str, gen: str) -> str | None:
@@ -1810,7 +1798,6 @@ def save_base_index(
             lambda gen: _write_index_relations(
                 index, f"{spark_path}/{gen}", with_bands
             ),
-            keep_predecessor=True,
         )
 
 
@@ -1844,11 +1831,11 @@ def save_index_bands(spark, path: str) -> None:
         sho = spark.read.parquet(f"{spark_path}/{live}/shingles")
 
         def write(gen):
-            _link(os_path, live, gen, BaseIndex._fields)
+            store.link_relation(os_path, live, gen, BaseIndex._fields)
             lsh_bands(sho).write.parquet(f"{spark_path}/{gen}/bands")
             _record_token(os_path, gen, _recorded_token(os_path, live))
 
-        store.commit(os_path, write, keep_predecessor=True)
+        store.commit(os_path, write)
 
 
 def load_saved_bands(spark, path: str):
@@ -2234,7 +2221,7 @@ def merge_into_saved_index(
                 appended["prefix"] = _ranked_prefix(new_sho, df_rel, tn, td)
 
             def write(gen):
-                _link(os_path, live, gen, appended)
+                store.link_relation(os_path, live, gen, appended)
                 root = f"{spark_path}/{gen}"
                 _write_concurrently(
                     [(rel, "overwrite", f"{root}/{n}") for n, rel in fresh.items()]
@@ -2243,7 +2230,7 @@ def merge_into_saved_index(
                 if commit_token is not None:
                     _record_token(os_path, gen, os.path.abspath(commit_token))
 
-            store.commit(os_path, write, keep_predecessor=True)
+            store.commit(os_path, write)
         finally:
             new_sho.unpersist()
         if commit_token is not None:
@@ -2284,7 +2271,7 @@ def compact_saved_index(spark, path: str) -> None:
 
         def write(gen):
             root = f"{spark_path}/{gen}"
-            _link(os_path, live, gen, ["digests"])
+            store.link_relation(os_path, live, gen, ["digests"])
             # every recomputation reads the compacted shingles (few
             # files), not the live directory's per-admission appends
             index.shingles.write.parquet(f"{root}/shingles")
@@ -2308,7 +2295,7 @@ def compact_saved_index(spark, path: str) -> None:
                     f.result()
             _record_token(os_path, gen, _recorded_token(os_path, live))
 
-        store.commit(os_path, write, keep_predecessor=True)
+        store.commit(os_path, write)
 
 
 def _ingest_exact_tier(batch, index: BaseIndex):

@@ -1741,7 +1741,8 @@ def similarity_ivfpq_filtered_saved(spark, sf_dir):
     completing the set: every maintained-store tier now has a
     read-through-the-store oracle key). The scratch store is the
     stable per-(user, corpus) location the other saved keys use;
-    the post-flip sweep keeps only the live generation."""
+    the post-flip sweep keeps the live generation and its
+    predecessor."""
     import getpass
     import hashlib
     import os
@@ -1754,24 +1755,12 @@ def similarity_ivfpq_filtered_saved(spark, sf_dir):
         tempfile.gettempdir(),
         f"por_spark_ann_idx_{getpass.getuser()}_{tag}",
     )
-    # shared scratch store: a parallel suite run's writer marker can
-    # make load_ann_index refuse between this save and the read — the
-    # key only needs A fresh round-trip, so retry once (ADVICE r14)
-    for attempt in (0, 1):
-        save_ann_index(
-            build_ann_index(v, n_cells=_IVFPQ_CELLS), store, force=True
-        )
-        try:
-            idx = load_ann_index(spark, store)
-            break
-        except ValueError:
-            if attempt:
-                raise
+    save_ann_index(build_ann_index(v, n_cells=_IVFPQ_CELLS), store, force=True)
     return ivfpq_filtered_topk(
         spark,
         sf_dir,
         (F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
-        index=idx,
+        index=load_ann_index(spark, store),
     )
 
 
@@ -1849,7 +1838,8 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
     before the shortlist rerank. The scratch store is a stable
     per-(user, corpus) location distinct from the read-path key's, so
     the two keys can't race each other's generations in one suite
-    run; the post-flip sweep keeps only the live generation."""
+    run; the post-flip sweep keeps the live generation and its
+    predecessor."""
     import getpass
     import hashlib
     import os
@@ -1972,43 +1962,22 @@ def similarity_ivfpq_refined_topk(spark, sf_dir):
 # production form at 100 TB (codes are a table alongside the vector
 # store, not a session cache). Local paths use the generation-pointer
 # protocol of presto_on_ray_spark/store.py (gen-K/{cents,codebook,
-# codes}, marker _ANN_WRITING, only the live generation kept); save and
-# compact commit a complete new generation. What is specific to this
-# store: the ONLY in-place mutation is merge's codes APPEND inside the
-# live generation, which is why readers refuse while the marker is up.
-# Failures before any byte is committed release the marker cleanly;
-# failures that may have committed bytes strand it — torn states are
-# loud, never silently readable. Non-local paths get a flat relation
-# layout with no marker or generations. ANN quantizers are frozen
-# sample-trained artifacts, so append is the only incremental mutation
-# — no re-rank analogue, no staleness dial.
+# codes}, marker _ANN_WRITING). What is specific to this store: the
+# quantizers are frozen sample-trained artifacts, so a merge links all
+# three relations into the next generation and appends the encoded
+# batch to the linked codes — O(batch) I/O, no re-rank analogue, no
+# staleness dial. Non-local paths get a flat layout for save and load.
 # ---------------------------------------------------------------------------
 _ANN_RELATIONS = ("cents", "codebook", "codes")
 _ANN_WRITING = "_ANN_WRITING"
 
 
-class TornAnnCodes(ValueError):
-    """The codes relation violates the per-vector invariant (exactly
-    _PQ_M rows over _PQ_M distinct subspaces): a crashed append left a
-    partially-encoded vector, or a batch was merged twice. This is the
-    ONE failure class compact_saved_ann_index(drop_torn=True) can
-    repair by keeping the intact vectors — every other verify failure
-    (cardinality, orphan references) must keep raising through the
-    recovery path, so it gets a dedicated class the recovery
-    dispatches on instead of a bare ValueError match."""
-
-
-def _ann_held(os_path: str, what: str) -> str:
-    """The writer-marker refusal text, with the one-call recovery."""
+def _ann_held(os_path: str) -> str:
     return (
-        f"saved ANN index at {os_path!r}: {_ANN_WRITING} is held — "
-        f"a writer is live or crashed mid-{what}. If no writer is "
-        f"live, the one-call recovery is compact_saved_ann_index("
-        f"force=True, drop_torn=True): it writes a complete new "
-        f"generation (dropping torn vectors if any — a no-op on a "
-        f"clean index) and flips atomically, then sweeps the "
-        f"orphans. save_ann_index(force=True) with a rebuilt index "
-        f"is the full-rebuild alternative."
+        f"saved ANN index at {os_path!r}: {_ANN_WRITING} is held — a "
+        f"writer is live or crashed. The live generation is intact; once "
+        f"no writer is live, retry with force=True (save_ann_index or "
+        f"compact_saved_ann_index)."
     )
 
 
@@ -2030,8 +1999,7 @@ def _ann_write_relations(index: AnnIndex, base: str) -> None:
     ordering contract: the _CURRENT flip (or the store's own
     atomicity) is what publishes them. cents/codebook are broadcast-
     sized, so this effectively overlaps their scheduling with the
-    codes write. Any failure propagates to the caller's
-    release-vs-strand handling."""
+    codes write."""
     import concurrent.futures
 
     with concurrent.futures.ThreadPoolExecutor(
@@ -2050,62 +2018,33 @@ def _ann_write_relations(index: AnnIndex, base: str) -> None:
 
 
 def save_ann_index(index: AnnIndex, path: str, force: bool = False) -> None:
-    """Materialize the three AnnIndex relations under ``path``. Local
-    paths get the generational protocol: the relations are written
-    into a fresh gen-K directory and _CURRENT flips atomically — an
-    index loaded FROM this very path can be saved back onto it (the
-    write never touches the directories it is reading), a failure
-    before the flip releases the marker with the old generation
-    untouched, and the orphan sweep runs only after the flip. Refuses
-    while the marker is held unless ``force=True`` (the crashed-writer
-    takeover). Non-local paths get plain flat overwrite writes with no
-    marker or generations: the store's atomicity and the caller's
-    single-writer discipline apply."""
+    """Materialize the three AnnIndex relations under ``path`` as one
+    fresh generation — an index loaded FROM this very path can be saved
+    back onto it (the write never touches the directories it is
+    reading). Refuses while the marker is held unless ``force=True``
+    (the crashed-writer takeover). Non-local paths get plain flat
+    overwrite writes with no marker or generations: the store's
+    atomicity and the caller's single-writer discipline apply."""
     paths = store.local_paths(path)
     if paths is None:
         _ann_write_relations(index, path)
         return
     spark_path, os_path = paths
-    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "save"), force)
-    try:
+    with store.writer(os_path, _ANN_WRITING, _ann_held(os_path), force):
         store.commit(
             os_path,
             lambda gen: _ann_write_relations(index, f"{spark_path}/{gen}"),
-            keep_predecessor=False,
         )
-    finally:
-        # a failure before the flip left the old generation (if any)
-        # live; the partial gen directory is litter the next commit sweeps
-        store.release(os_path, _ANN_WRITING)
 
 
 def load_ann_index(spark, path: str) -> AnnIndex:
-    """Read the live generation's relations. Refuses while
-    _ANN_WRITING is up: a save/compact mid-write is harmless to read
-    past (the pointer flips atomically) but a merge mid-APPEND is not
-    — the codes listing would snapshot a half-committed batch — and a
-    reader cannot tell which writer holds the marker. The refusal is
-    BEST-EFFORT, stated honestly: the marker check and the parquet
-    listing are two filesystem operations, so a writer acquiring in
-    between can still be observed mid-append (and a concurrent
-    compact's sweep can fail this read loudly); readers needing strict
-    isolation coordinate with writers or put the index in a
-    transactional table format — the same contract as the dedup saved
-    index. Lazy reads: the file listing snapshots at load, so codes
-    appended later need a reload to become visible. Non-local paths
-    read the flat layout (see save_ann_index)."""
+    """Read the live generation's relations. Lazy reads: the file
+    listing snapshots at load, so codes merged later need a reload.
+    Non-local paths read the flat layout (see save_ann_index)."""
     paths = store.local_paths(path)
     if paths is None:
         return _load_ann_relations(spark, path)
     spark_path, os_path = paths
-    if store.held(os_path, _ANN_WRITING):
-        raise ValueError(
-            f"saved ANN index at {path!r}: {_ANN_WRITING} is held — a "
-            f"writer is live or crashed. If no writer is live, the "
-            f"one-call recovery is compact_saved_ann_index(force=True, "
-            f"drop_torn=True); the current generation stays on disk "
-            f"until the recovery's atomic flip."
-        )
     return _load_ann_relations(
         spark, f"{spark_path}/{_ann_generation(os_path, path)}"
     )
@@ -2161,8 +2100,8 @@ def _ann_batch_guard(index: AnnIndex, batch_v, where: str, skip_hit: bool = Fals
             f"already in the saved index — re-merging duplicates code "
             f"rows and silently doubles ADC scores. Deduplicate the "
             f"batch against the index first, or pass resume=True if "
-            f"this is the prescribed re-merge after a crashed append "
-            f"(it skips ids the crashed merge already committed)."
+            f"this is a replayed delivery (it skips ids an earlier "
+            f"merge already committed)."
         )
 
 
@@ -2170,29 +2109,14 @@ def merge_into_saved_ann_index(
     spark, path: str, batch_v, resume: bool = False
 ) -> None:
     """Admit new vectors into a saved index: encode under the FROZEN
-    saved quantizers and APPEND to the live generation's codes —
-    O(batch) work; the index's own codes are read only by the
-    admission guard's bounded broadcast probe. The load, the guard,
-    and the append ALL run inside the _ANN_WRITING marker (a guard
-    probed before acquiring would race a concurrent merge: both
-    probes pass, both append, scores silently double).
-
-    Failure handling distinguishes what actually committed: guard and
-    plan failures release the marker (nothing written), and an append
-    failing with an ordinary Exception releases it too when the codes
-    listing is unchanged (such an exception means the Spark job
-    ABORTED, and an aborted job commits nothing). The marker STRANDS
-    when data files actually appeared (genuinely torn) AND on
-    KeyboardInterrupt/SystemExit, which interrupt the py4j call while
-    the JVM job may still be running — it can commit AFTER any listing
-    check, so the only safe answer there is to stay loud.
-    Recovery from a torn append: compact_saved_ann_index(
-    drop_torn=True, force=True) keeps the fully-encoded vectors, then
-    re-merge the batch with ``resume=True``, which anti-joins away the
-    ids the crashed merge already committed (a plain re-merge would
-    trip the duplicate guard on them)."""
-    import os
-
+    saved quantizers and commit a new generation that links the live
+    one's relations and appends the encoded batch to the linked codes —
+    O(batch) work; the index's own codes are read only by the admission
+    guard's bounded broadcast probe. The load, the guard and the encode
+    run inside the _ANN_WRITING marker (a guard probed before acquiring
+    would race a concurrent merge: both probes pass, both commit, scores
+    silently double). ``resume=True`` skips batch ids already in the
+    index — a replayed delivery whose earlier merge committed them."""
     spark_path, os_path = store.local_paths(
         path,
         "merge_into_saved_ann_index requires the local generational "
@@ -2200,13 +2124,9 @@ def merge_into_saved_ann_index(
         "append (and its single-writer discipline) in the store's own "
         "transaction layer, or save a new generation with save_ann_index.",
     )
-    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "merge"))
-    codes_os = None
-    try:
-        gen = _ann_generation(os_path, path)
-        rel_root = f"{spark_path}/{gen}"
-        codes_os = os.path.join(os_path, gen, "codes")
-        index = _load_ann_relations(spark, rel_root)
+    with store.writer(os_path, _ANN_WRITING, _ann_held(os_path)):
+        live = _ann_generation(os_path, path)
+        index = _load_ann_relations(spark, f"{spark_path}/{live}")
         if resume:
             # ONE bounded codes scan (broadcast batch-ids semi-join),
             # COLLECTED — batch-sized by construction — so the filter
@@ -2238,52 +2158,12 @@ def merge_into_saved_ann_index(
                 )
         _ann_batch_guard(index, batch_v, path, skip_hit=resume)
         new_codes = encode_into_ann_index(batch_v, index)
-    except BaseException:
-        store.release(os_path, _ANN_WRITING)  # nothing written
-        raise
-    before = _ann_data_files(codes_os)
-    try:
-        new_codes.write.mode("append").parquet(f"{rel_root}/codes")
-    except Exception:
-        # an ordinary failure means the Spark job ABORTED before this
-        # exception surfaced; confirm via the listing and release —
-        # a cleanly-aborted job commits nothing
-        if _ann_data_files(codes_os) == before:
-            store.release(os_path, _ANN_WRITING)
-        # else: data files appeared — genuinely torn, strand the marker
-        raise
-    except BaseException:
-        # KeyboardInterrupt/SystemExit interrupt the PY4J CALL, not
-        # necessarily the JVM job — it can still be running and commit
-        # AFTER a listing check passed, so the only safe answer is to
-        # strand the marker (recovery: compact(force=True,
-        # drop_torn=True) once the job is known dead)
-        raise
-    store.release(os_path, _ANN_WRITING)
 
+        def write(gen):
+            store.link_relation(os_path, live, gen, _ANN_RELATIONS)
+            new_codes.write.mode("append").parquet(f"{spark_path}/{gen}/codes")
 
-def _ann_data_files(codes_os: str):
-    """The committed data-file names under a codes directory —
-    excludes Spark's _temporary/_SUCCESS bookkeeping and checksum
-    litter, which a cleanly-aborted job may touch without committing
-    any data."""
-    import os
-
-    return {
-        f
-        for f in os.listdir(codes_os)
-        if not f.startswith(("_", "."))
-    }
-
-
-def _ann_code_stats(codes):
-    """Per-vector integrity stats — the ONE definition of the torn/
-    duplicated predicate, shared by verify_ann_index and the
-    drop_torn recovery so the two can never drift: (vec_id, rows,
-    js) where intact means rows == js == _PQ_M."""
-    return codes.groupBy("vec_id").agg(
-        F.count("*").alias("rows"), F.count_distinct("j").alias("js")
-    )
+        store.commit(os_path, write)
 
 
 def verify_ann_index(index: AnnIndex, n_cells: int | None = None) -> dict:
@@ -2293,17 +2173,18 @@ def verify_ann_index(index: AnnIndex, n_cells: int | None = None) -> dict:
     path (one stats aggregate that also yields the returned totals,
     one broadcast-joined orphan probe) plus two tiny quantizer counts;
     the per-violation limit-1 lookups run only on the already-failing
-    cold path. Raises TornAnnCodes for the per-vector M-row invariant
-    (repairable by compact_saved_ann_index(drop_torn=True)); plain
-    ValueError for quantizer cardinality and orphan cell/codeword
-    references (NOT repairable by dropping rows — rebuild).
+    cold path. Raises ValueError for a broken per-vector M-row
+    invariant, quantizer cardinality or orphan cell/codeword
+    references; none is repaired in place — rebuild.
 
     ``n_cells``: pass the build-time cell count to enforce it; None
     (the default since r14's auto-sized builds — a loaded index's
     cell count is whatever auto_ivf_cells resolved to at build time,
     not a session constant) enforces only non-emptiness, and the
     orphan probe still catches codes referencing missing centroids."""
-    stats = _ann_code_stats(index.codes)
+    stats = index.codes.groupBy("vec_id").agg(
+        F.count("*").alias("rows"), F.count_distinct("j").alias("js")
+    )
     totals = stats.agg(
         F.count("*").alias("vectors"),
         F.sum(
@@ -2316,16 +2197,12 @@ def verify_ann_index(index: AnnIndex, n_cells: int | None = None) -> dict:
             .limit(1)
             .collect()[0]
         )
-        raise TornAnnCodes(
+        raise ValueError(
             f"ANN index codes are torn or duplicated: vec_id "
             f"{r['vec_id']} has {r['rows']} code rows over {r['js']} "
             f"distinct subspaces (want {_PQ_M}/{_PQ_M}), "
-            f"{totals['bad']} vector(s) affected — a crashed append "
-            f"leaves partially-encoded vectors "
-            f"(compact_saved_ann_index(drop_torn=True, force=True) — "
-            f"force because a torn refusal strands the writer marker — "
-            f"keeps the intact "
-            f"ones); duplicates mean a batch was merged twice (rebuild)."
+            f"{totals['bad']} vector(s) affected — rebuild the index "
+            f"(build_ann_index + save_ann_index)."
         )
     n_cents = index.cents.count()
     if n_cells is not None and n_cents != n_cells:
@@ -2410,72 +2287,27 @@ def ann_rebuild_advice(index: AnnIndex, growth_factor: float = 4.0) -> dict:
     }
 
 
-def compact_saved_ann_index(
-    spark, path: str, drop_torn: bool = False, force: bool = False
-) -> None:
+def compact_saved_ann_index(spark, path: str, force: bool = False) -> None:
     """Rewrite the index as one clean generation — the file-count
-    hygiene pass after many small appends, and the UNIVERSAL stranded-
-    state recovery (every crashed writer is cured by a complete new
-    generation + atomic flip; nothing is ever repaired in place). The
-    WHOLE operation (load, verify, rewrite, flip) runs inside the
-    _ANN_WRITING marker: verifying outside it would let a concurrent
-    merge commit between the snapshot and the flip and silently lose
-    that batch. ``force=True`` takes over a STRANDED marker (a crashed
-    merge leaves it held, and recovery must run under it). A torn
-    index REFUSES unless ``drop_torn=True`` — and the refusal leaves
-    the marker IN PLACE (even when force just removed a stranded one):
-    the marker is what keeps a torn index loud, and releasing it on
-    refusal would make the torn state silently readable. The one-call
-    recovery everywhere is therefore compact(force=True,
-    drop_torn=True), which keeps exactly the vectors satisfying
-    _ann_code_stats' intact predicate and then RE-VERIFIES the kept
-    index before the flip, so quantizer-cardinality and orphan
-    corruption hiding behind a TornAnnCodes cannot ride through the
-    recovery (they raise; that corruption class is readable-but-wrong
-    by construction, predates the compact, and needs a rebuild — the
-    marker releases and the old generation stays live, exactly as it
-    was). Failures before the flip always leave the old generation
-    untouched."""
+    hygiene pass after many small appends. The load, the verify and the
+    rewrite run inside the _ANN_WRITING marker: verifying outside it
+    would let a concurrent merge commit between the snapshot and the
+    flip and silently lose that batch. An index that fails
+    verify_ann_index raises and stays live as it was; the remedy is a
+    rebuild. ``force=True`` takes over a crashed writer's marker."""
     spark_path, os_path = store.local_paths(
         path,
         "compact_saved_ann_index requires the local generational "
         "protocol — rewrite a new generation with save_ann_index instead.",
     )
-    store.acquire(os_path, _ANN_WRITING, _ann_held(os_path, "compact"), force)
-    try:
-        gen = _ann_generation(os_path, path)
-        index = _load_ann_relations(spark, f"{spark_path}/{gen}")
-        try:
-            verify_ann_index(index)
-            keep = index
-        except TornAnnCodes:
-            if not drop_torn:
-                raise
-            good = (
-                _ann_code_stats(index.codes)
-                .filter((F.col("rows") == _PQ_M) & (F.col("js") == _PQ_M))
-                .select("vec_id")
-            )
-            keep = AnnIndex(
-                index.cents, index.codebook, index.codes.join(good, "vec_id")
-            )
-            verify_ann_index(keep)  # non-droppable corruption still raises
+    with store.writer(os_path, _ANN_WRITING, _ann_held(os_path), force):
+        live = _ann_generation(os_path, path)
+        index = _load_ann_relations(spark, f"{spark_path}/{live}")
+        verify_ann_index(index)
         store.commit(
             os_path,
-            lambda gen: _ann_write_relations(keep, f"{spark_path}/{gen}"),
-            keep_predecessor=False,
+            lambda gen: _ann_write_relations(index, f"{spark_path}/{gen}"),
         )
-    except TornAnnCodes:
-        # refused a torn index (drop_torn=False): the marker STAYS —
-        # it is the only thing keeping the torn state loud
-        raise
-    except BaseException:
-        # the pointer never moved: old generation intact, partial
-        # new-generation litter is unreferenced and swept by the next
-        # successful writer
-        store.release(os_path, _ANN_WRITING)
-        raise
-    store.release(os_path, _ANN_WRITING)
 
 
 # ---------------------------------------------------------------------------

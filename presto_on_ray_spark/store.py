@@ -18,16 +18,17 @@ Commit sequence (``commit``): the writer holds its marker, writes a
 COMPLETE fresh generation numbered one past the highest ``gen-K`` on
 disk (``gen-0`` in an empty store — a crashed writer's partial
 directory is never reused), flips ``_CURRENT`` onto it atomically, then
-sweeps superseded generations and the pointer's tmp file. The live
-generation is never mutated by a commit, so a crash before the flip
-leaves the old pointer valid (the partial directory is unreferenced
-litter the next commit sweeps) and a crash after it leaves the new
-generation complete. The sweep is best-effort: once the flip has
-committed, a sweep failure warns instead of reporting the committed
-generation as a failed write. A generation may carry an append-only
-relation forward by hard links (``link_relation``) and append to the
-linked directory: the appended files are new names, so the live
-generation still sees only its own files.
+sweeps superseded generations and the pointer's tmp file. No writer
+mutates the live generation, so a crash before the flip leaves the old
+pointer valid (the partial directory is unreferenced litter the next
+commit sweeps) and a crash after it leaves the new generation complete.
+Every writer therefore releases its marker on any exit (``writer``).
+The sweep is best-effort: once the flip has committed, a sweep failure
+warns instead of reporting the committed generation as a failed write.
+A generation may carry an append-only relation forward by hard links
+(``link_relation``) and append to the linked directory: the appended
+files are new names, so the live generation still sees only its own
+files.
 
 Durability: the pointer is written aside, fsynced, renamed over
 ``_CURRENT`` and the directory fsynced (``write_atomic``, also used by
@@ -37,12 +38,10 @@ here: full power-loss durability for the data needs the filesystem's
 guarantees or a transactional table format, as for every other parquet
 sink in this engine.
 
-Retention: the ANN store keeps only the live generation (its readers
-refuse while the marker is up). The dedup index and the counts and
-weights stores keep the live generation and its immediate predecessor
-— a one-mutation grace window for lazy readers and pinned-generation
-reads; with links, a dedup merge's predecessor costs only the
-relations the merge rewrote.
+Retention: every store keeps the live generation and its immediate
+predecessor — a one-mutation grace window for lazy readers and
+pinned-generation reads; with links, a merge's predecessor costs only
+the relations the merge rewrote.
 
 Only local paths (plain, Windows drive, ``file:`` URIs) get the
 protocol: an object store has no atomic rename."""
@@ -112,15 +111,14 @@ def local_paths(path: str, refusal: str | None = None):
     return "file:" + p, p
 
 
-def held(os_path: str, marker: str) -> bool:
-    return os.path.exists(os.path.join(os_path, marker))
-
-
-def acquire(os_path: str, marker: str, refusal: str, force: bool = False):
-    """Exclusive-create the writer marker; ValueError(``refusal``) when
-    it is already held. ``force=True`` removes a pre-existing marker
-    first — the takeover for a STRANDED marker (crashed writer), valid
-    only when the caller has established no writer is live."""
+@contextlib.contextmanager
+def writer(os_path: str, marker: str, refusal: str, force: bool = False):
+    """Hold the store's exclusive writer marker for the ``with`` body;
+    ValueError(``refusal``) when it is already held. ``force=True``
+    removes a pre-existing marker first — the takeover for a crashed
+    writer's marker, valid only when no writer is live. The marker is
+    released on any exit: no writer touches the live generation, so a
+    failed one leaves nothing a reader can see."""
     os.makedirs(os_path, exist_ok=True)
     m = os.path.join(os_path, marker)
     if force:
@@ -130,11 +128,11 @@ def acquire(os_path: str, marker: str, refusal: str, force: bool = False):
         os.close(os.open(m, os.O_CREAT | os.O_EXCL | os.O_WRONLY))
     except FileExistsError:
         raise ValueError(refusal) from None
-
-
-def release(os_path: str, marker: str):
-    with contextlib.suppress(FileNotFoundError):
-        os.remove(os.path.join(os_path, marker))
+    try:
+        yield
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(m)
 
 
 def live_generation(os_path: str) -> str | None:
@@ -233,33 +231,36 @@ def resolve_generation(
     )
 
 
-def link_relation(src: str, dst: str) -> None:
-    """Carry the parquet relation directory ``src`` into the fresh
-    directory ``dst`` by hard-linking its data files and their ``.crc``
-    checksums — O(files), no bytes copied. Names starting with ``_`` or
-    ``._`` are skipped: Spark's committer rewrites ``_SUCCESS`` (and its
-    checksum) in place on an append, which through a shared inode would
-    change ``src``. No copy fallback: a filesystem without hard links
-    fails the commit before its flip."""
-    os.makedirs(dst)
-    for name in os.listdir(src):
-        if not name.startswith(("_", "._")):
-            os.link(os.path.join(src, name), os.path.join(dst, name))
+def link_relation(os_path: str, live: str, gen: str, names) -> None:
+    """Carry each parquet relation in ``names`` from generation ``live``
+    into the fresh generation ``gen`` by hard-linking its data files
+    and their ``.crc`` checksums — O(files), no bytes copied. Names
+    starting with ``_`` or ``._`` are skipped: Spark's committer
+    rewrites ``_SUCCESS`` (and its checksum) in place on an append,
+    which through a shared inode would change the live generation. No
+    copy fallback: a filesystem without hard links fails the commit
+    before its flip."""
+    for name in names:
+        src = os.path.join(os_path, live, name)
+        dst = os.path.join(os_path, gen, name)
+        os.makedirs(dst)
+        for f in os.listdir(src):
+            if not f.startswith(("_", "._")):
+                os.link(os.path.join(src, f), os.path.join(dst, f))
 
 
-def commit(os_path: str, write, keep_predecessor: bool) -> str:
+def commit(os_path: str, write) -> str:
     """THE generation-commit sequence every store shares: ``write(gen)``
     fills a fresh generation directory, the pointer flips onto it, and
-    the sweep keeps the new generation (plus the one it superseded when
-    ``keep_predecessor``). The caller holds the marker and owns the
-    release-vs-strand decision; a failure before the flip leaves the
+    the sweep keeps the new generation and the one it superseded. The
+    caller holds the marker; a failure before the flip leaves the
     pointer on the old generation. Returns the new generation."""
     prev = live_generation(os_path)
     gen = next_generation(os_path)
     write(gen)
     flip(os_path, gen)
     try:
-        sweep(os_path, {gen, prev} if keep_predecessor else {gen})
+        sweep(os_path, {gen, prev})
     except OSError as exc:
         warnings.warn(
             f"saved store at {os_path!r}: generation {gen} committed but "
@@ -290,11 +291,9 @@ def relation_paths(path: str, relname: str) -> tuple:
 @contextlib.contextmanager
 def relation_writer(path: str, relname: str, force: bool = False):
     """Hold a relation store's writer marker for the ``with`` body;
-    yields (spark_path, os_path). The marker is released on any exit:
-    a commit never touches the live generation, so a failed writer
-    leaves nothing a reader can see."""
+    yields (spark_path, os_path)."""
     spark_path, os_path = relation_paths(path, relname)
-    acquire(
+    with writer(
         os_path,
         COUNTS_WRITING,
         f"saved {relname} store at {os_path!r}: {COUNTS_WRITING} is held "
@@ -302,11 +301,8 @@ def relation_writer(path: str, relname: str, force: bool = False):
         f"force=True (the takeover is safe: the pointer only ever "
         f"references complete generations).",
         force,
-    )
-    try:
+    ):
         yield spark_path, os_path
-    finally:
-        release(os_path, COUNTS_WRITING)
 
 
 def relation_generation(os_path: str, relname: str) -> str:
@@ -337,7 +333,7 @@ def publish_relation(
                       encoding="utf-8") as fh:
                 fh.write(text)
 
-    return commit(os_path, write, keep_predecessor=True)
+    return commit(os_path, write)
 
 
 def save_relation_generation(

@@ -13,9 +13,10 @@ read-dependent output — the encode depends only on the FROZEN
 quantizers, never on the other codes. Duplicate suppression is
 therefore sufficient: every batch merges with resume semantics
 (already-committed ids anti-joined away by one bounded broadcast
-probe), so foreachBatch's at-least-once re-delivery appends nothing on
-a full replay and exactly the missing remainder after a mid-batch
-crash. No token log, no pruning, no checkpoint-lineage coupling.
+probe). A merge commits its whole batch as one generation or nothing,
+so foreachBatch's at-least-once re-delivery appends nothing when the
+earlier merge completed, and the whole batch when it crashed. No token
+log, no pruning, no checkpoint-lineage coupling.
 """
 
 from __future__ import annotations
@@ -57,14 +58,11 @@ def stream_ann_ingest(
     stream stops (deduplicate upstream; this mirrors the dedup admit
     loop's refusal to guess).
 
-    A crashed append strands the index's writer marker and every
-    subsequent batch fails loudly until the documented one-call
-    recovery runs (compact_saved_ann_index(force=True,
-    drop_torn=True)); the stream can then simply be restarted — the
-    crashed batch re-delivers and resume skips its committed
-    survivors. At 100 TB: schedule compact_saved_ann_index
-    periodically anyway (file-count hygiene after many small
-    appends), exactly like the dedup side's compaction contract."""
+    A crashed merge commits nothing, so a restarted stream re-delivers
+    the batch and re-merges all of it. At 100 TB: schedule
+    compact_saved_ann_index periodically (file-count hygiene after
+    many small appends), exactly like the dedup side's compaction
+    contract."""
 
     def _admit(batch_df: DataFrame, batch_id: int) -> None:
         _merge_batch(batch_df, index_path, vec_col)
@@ -114,13 +112,9 @@ def stream_ann_ingest_with_rebuild(
     index; when the corpus has outgrown the frozen quantizers' design
     population (ratio > ``growth_factor``) AND the rebuild cooldown
     has expired, rebuild at auto_ivf_cells over the FULL vector store
-    and publish the new generation (atomic flip; NOTE the ANN store
-    keeps ONLY the live generation — the post-flip sweep removes the
-    superseded one, unlike the counts store's one-mutation grace
-    window — so a reader holding a lazy plan bound before the flip
-    fails loudly on its next action and must reload, exactly
-    load_ann_index's documented "readers coordinate with writers"
-    contract; this loop inherits it rather than changing it).
+    and publish the new generation (atomic flip; a reader holding a
+    lazy plan bound before it stays valid through that one commit —
+    the store keeps the predecessor — and reloads to see the rebuild).
 
     ``vectors_source`` is a callable ``spark -> (vec_id, qv)`` over
     the WHOLE vector corpus: a rebuild re-trains quantizers and

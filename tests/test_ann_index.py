@@ -113,8 +113,15 @@ def test_ann_saved_merge_appends_and_guards_duplicates(spark, sf_dir, tmp_path):
     idx = build_ann_index(base)
     p = str(tmp_path / "ann")
     save_ann_index(idx, p)
+    prev = _live_codes_dir(p)
     merge_into_saved_ann_index(spark, p, batch)
     assert not os.path.exists(os.path.join(p, _ANN_WRITING))
+    # the new generation carries the predecessor's codes by hard links
+    carried = [f for f in os.listdir(prev) if not f.startswith(("_", "._"))]
+    assert carried and all(
+        os.path.samefile(os.path.join(prev, f), os.path.join(_live_codes_dir(p), f))
+        for f in carried
+    )
     loaded = load_ann_index(spark, p)
     assert _codes_set(loaded.codes) == _codes_set(
         merge_into_ann_index(idx, batch).codes
@@ -150,15 +157,14 @@ def test_ann_saved_merge_appends_and_guards_duplicates(spark, sf_dir, tmp_path):
 
 
 def test_ann_marker_blocks_readers_and_writers(spark, sf_dir, tmp_path):
-    """A held _ANN_WRITING marker: load refuses (torn-read guard),
+    """A held _ANN_WRITING marker: load still reads the live generation,
     save refuses without force, forced save rewrites and clears it."""
     v = _vecs(spark, sf_dir)
     idx = build_ann_index(v.filter(F.col("vec_id") < 100))
     p = str(tmp_path / "ann")
     save_ann_index(idx, p)
     open(os.path.join(p, _ANN_WRITING), "w").close()
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        load_ann_index(spark, p)
+    assert _codes_set(load_ann_index(spark, p).codes) == _codes_set(idx.codes)
     with pytest.raises(ValueError, match="_ANN_WRITING is held"):
         save_ann_index(idx, p)
     save_ann_index(idx, p, force=True)
@@ -170,9 +176,8 @@ def test_ann_marker_blocks_readers_and_writers(spark, sf_dir, tmp_path):
 def test_ann_verify_detects_torn_and_duplicated_codes(spark, sf_dir, tmp_path):
     """verify_ann_index is the integrity pass: a vector missing a
     subspace row (torn append) and a vector with doubled rows
-    (double-merge) both raise naming the vec_id; compaction refuses a
-    torn index unless drop_torn=True, which keeps exactly the intact
-    vectors and lets the batch re-merge cleanly."""
+    (double-merge) both raise naming the vec_id; compaction of such an
+    index raises, releases the marker and leaves the store readable."""
     v = _vecs(spark, sf_dir)
     idx = build_ann_index(v.filter(F.col("vec_id") < 200))
     verify_ann_index(idx)
@@ -198,23 +203,8 @@ def test_ann_verify_detects_torn_and_duplicated_codes(spark, sf_dir, tmp_path):
     save_ann_index(torn, p)
     with pytest.raises(ValueError, match="torn or duplicated"):
         compact_saved_ann_index(spark, p)
-    # the refusal STRANDS the marker: it is the only thing keeping a
-    # torn index loud, so readers and non-force writers now refuse
-    assert os.path.exists(os.path.join(p, _ANN_WRITING))
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        load_ann_index(spark, p)
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        compact_saved_ann_index(spark, p, drop_torn=True)
-    # the one-call recovery every error text prescribes
-    compact_saved_ann_index(spark, p, drop_torn=True, force=True)
-    healed = load_ann_index(spark, p)
-    verify_ann_index(healed)
-    # exactly the torn vector was dropped; everyone else intact
-    ids = {r["vec_id"] for r in healed.codes.select("vec_id").distinct().collect()}
-    assert 50 not in ids and len(ids) == 199
-    # and the crashed batch re-merges cleanly (the dropped id is gone)
-    merge_into_saved_ann_index(spark, p, v.filter(F.col("vec_id") == 50))
-    verify_ann_index(load_ann_index(spark, p))
+    assert not os.path.exists(os.path.join(p, _ANN_WRITING))
+    assert _codes_set(load_ann_index(spark, p).codes) == _codes_set(torn.codes)
     release_cached()
 
 
@@ -224,13 +214,13 @@ def _gen_dirs(p):
     return sorted(d for d in os.listdir(p) if re.fullmatch(r"gen-\d+", d))
 
 
-def _codes_files(p):
+def _live_codes_dir(p):
     gen = open(os.path.join(p, "_CURRENT")).read().strip()
-    return [
-        f
-        for f in os.listdir(os.path.join(p, gen, "codes"))
-        if f.endswith(".parquet")
-    ]
+    return os.path.join(p, gen, "codes")
+
+
+def _codes_files(p):
+    return [f for f in os.listdir(_live_codes_dir(p)) if f.endswith(".parquet")]
 
 
 def test_ann_compact_rewrites_one_generation(spark, sf_dir, tmp_path):
@@ -250,17 +240,17 @@ def test_ann_compact_rewrites_one_generation(spark, sf_dir, tmp_path):
     assert _codes_set(after.codes) == before
     assert len(_codes_files(p)) <= n_files_before
     assert not os.path.exists(os.path.join(p, _ANN_WRITING))
-    # the flip swept the superseded generation: exactly one remains
-    assert len(_gen_dirs(p)) == 1
+    # the flip swept all but the live generation and its predecessor
+    assert len(_gen_dirs(p)) == 2
 
 
 def test_ann_crashed_save_leaves_old_generation_live(spark, sf_dir, tmp_path):
     """The generational contract: a save that dies BEFORE the atomic
     _CURRENT flip leaves a stranded marker and an orphan gen directory
-    — but the old generation stays complete and becomes readable again
-    the moment the stranded state is recovered (compact(force=True)
-    writes a fresh generation and sweeps the orphan). Nothing is ever
-    repaired in place and no mixed-generation state can exist."""
+    — but the old generation stays live and readable, and the next
+    forced writer (compact(force=True)) commits a fresh generation and
+    sweeps the orphan. Nothing is ever repaired in place and no
+    mixed-generation state can exist."""
     v = _vecs(spark, sf_dir)
     idx = build_ann_index(v.filter(F.col("vec_id") < 200))
     p = str(tmp_path / "ann")
@@ -270,35 +260,27 @@ def test_ann_crashed_save_leaves_old_generation_live(spark, sf_dir, tmp_path):
     # simulate the crash: a partial next generation + stranded marker
     os.makedirs(os.path.join(p, "gen-2", "cents"))
     open(os.path.join(p, _ANN_WRITING), "w").close()
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        load_ann_index(spark, p)
+    assert _codes_set(load_ann_index(spark, p).codes) == want
     compact_saved_ann_index(spark, p, force=True)
     healed = load_ann_index(spark, p)
     assert _codes_set(healed.codes) == want
-    assert len(_gen_dirs(p)) == 1  # the orphan gen-2 litter is gone
+    # live + predecessor; the orphan gen-2 litter is gone
+    assert _gen_dirs(p) == ["gen-0", "gen-3"]
     assert not os.path.exists(os.path.join(p, _ANN_WRITING))
     release_cached()
 
 
 def test_ann_resume_remerge_skips_committed_ids(spark, sf_dir, tmp_path):
-    """The crashed-append recovery loop closes: vectors whose rows
-    fully committed before the crash survive drop_torn, and the
-    prescribed re-merge with resume=True anti-joins them away instead
-    of tripping the duplicate guard — the recovery text's exact
-    sequence runs end-to-end."""
+    """Replay after a completed partial delivery: ids an earlier merge
+    committed trip the duplicate guard on a plain re-merge, and
+    resume=True anti-joins them away so the rest merges."""
     v = _vecs(spark, sf_dir)
     p = str(tmp_path / "ann")
     save_ann_index(build_ann_index(v.filter(F.col("vec_id") < 400)), p)
     batch = v.filter(F.col("vec_id") >= 400)
-    # the "crash": half the batch committed, then the writer died with
-    # the marker held
+    # an earlier delivery committed half the batch
     merge_into_saved_ann_index(spark, p, batch.filter(F.col("vec_id") < 450))
-    open(os.path.join(p, _ANN_WRITING), "w").close()
-
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        merge_into_saved_ann_index(spark, p, batch)
-    compact_saved_ann_index(spark, p, drop_torn=True, force=True)
-    # plain re-merge trips the guard on the committed survivors...
+    # plain re-merge trips the guard on the committed ids...
     with pytest.raises(ValueError, match="resume=True"):
         merge_into_saved_ann_index(spark, p, batch)
     # ...resume=True skips exactly them

@@ -78,6 +78,9 @@ def test_aggregate_runs_medians_and_spread():
     assert agg["queries_min"] == {"q1": 1.0, "q2": 10.0}
     assert agg["queries_max"] == {"q1": 3.0, "q2": 30.0}
     assert agg["run_totals"] == [11.0, 33.0, 22.0]
+    assert agg["run_queries"] == [
+        {"q1": 1.0, "q2": 10.0}, {"q1": 3.0, "q2": 30.0}, {"q1": 2.0, "q2": 20.0}
+    ]
     # the median line itself must satisfy the stdout contract
     payload = {k: agg[k] for k in ("metric", "value", "unit", "queries", "sf", "runs")}
     line = bench.final_line(payload)

@@ -1,12 +1,12 @@
 """The saved-store protocol (presto_on_ray_spark/store.py) under crash
-injection: every writer that commits generations — ANN save and
+injection: every writer that commits generations — ANN save, merge and
 compact, dedup index save, bands attach, stale and strict merge and
 compact, segment-counts save and merge, classifier-weights save — is
 failed at each protocol step (relation write, pointer flip, sweep).
 Before the flip the pointer, the old rows and the marker must be as
 they were; after it the new generation is live, the failed sweep warns
-and the marker is released. Plus ANN's torn append, and the
-relation stores' own non-local errors."""
+and the marker is released. Plus predecessor retention for a lazily
+loaded ANN index, and the relation stores' own non-local errors."""
 
 from __future__ import annotations
 
@@ -69,6 +69,14 @@ def _ann_save(spark, p):
     sim.save_ann_index(sim.build_ann_index(_vecs(spark, 30)), p)
     return sim._ANN_WRITING, _ann_rows, lambda: sim.save_ann_index(
         sim.build_ann_index(_vecs(spark, 34)), p
+    )
+
+
+def _ann_merge(spark, p):
+    v = _vecs(spark, 34)
+    sim.save_ann_index(sim.build_ann_index(v.filter(F.col("vec_id") < 30)), p)
+    return sim._ANN_WRITING, _ann_rows, lambda: sim.merge_into_saved_ann_index(
+        spark, p, v.filter(F.col("vec_id") >= 30)
     )
 
 
@@ -142,6 +150,7 @@ def _dedup_compact(spark, p):
 
 WRITERS = {
     "ann_save": _ann_save,
+    "ann_merge": _ann_merge,
     "ann_compact": _ann_compact,
     "dedup_save": _dedup_save,
     "dedup_bands": _dedup_bands,
@@ -157,12 +166,12 @@ WRITERS = {
 def _fail_write(monkeypatch):
     real = store.commit
 
-    def commit(os_path, write, keep_predecessor):
+    def commit(os_path, write):
         def torn(gen):
             write(gen)
             raise OSError("injected: relation write")
 
-        return real(os_path, torn, keep_predecessor)
+        return real(os_path, torn)
 
     monkeypatch.setattr(store, "commit", commit)
 
@@ -212,51 +221,16 @@ def test_crash_matrix(spark, tmp_path, monkeypatch, writer, step):
         assert store.live_generation(p) != gen_before
 
 
-def test_ann_torn_append_strands_marker_until_compact(
-    spark, tmp_path, monkeypatch
-):
-    """A merge whose append committed data files before failing is
-    genuinely torn: the marker strands, readers refuse, and the
-    one-call recovery drops the torn vector and releases it."""
-    v = _vecs(spark, 34)
+def test_ann_index_loaded_before_compaction_stays_readable(spark, tmp_path):
+    """A compaction keeps the generation it supersedes, so an index
+    loaded before it still collects the same codes afterwards."""
     p = str(tmp_path / "ann")
-    sim.save_ann_index(sim.build_ann_index(v.filter(F.col("vec_id") < 30)), p)
-    real = sim.encode_into_ann_index
-
-    class TornAppend:
-        def __init__(self, codes):
-            self.codes = codes
-
-        @property
-        def write(self):
-            return self
-
-        def mode(self, _):
-            return self
-
-        def parquet(self, path):
-            # vec_id 31 loses one subspace row: a partially-encoded vector
-            self.codes.filter(
-                ~((F.col("vec_id") == 31) & (F.col("j") == 3))
-            ).write.mode("append").parquet(path)
-            raise OSError("injected: crash after the append committed")
-
-    monkeypatch.setattr(
-        sim, "encode_into_ann_index", lambda b, ix: TornAppend(real(b, ix))
-    )
-    with pytest.raises(OSError, match="append committed"):
-        sim.merge_into_saved_ann_index(spark, p, v.filter(F.col("vec_id") >= 30))
-    monkeypatch.undo()
-
-    assert os.path.exists(os.path.join(p, sim._ANN_WRITING))
-    with pytest.raises(ValueError, match="_ANN_WRITING is held"):
-        sim.load_ann_index(spark, p)
-    sim.compact_saved_ann_index(spark, p, force=True, drop_torn=True)
-    assert not os.path.exists(os.path.join(p, sim._ANN_WRITING))
-    healed = sim.load_ann_index(spark, p)
-    sim.verify_ann_index(healed)
-    ids = {r["vec_id"] for r in healed.codes.select("vec_id").distinct().collect()}
-    assert ids == set(range(34)) - {31}
+    _ann_compact(spark, p)
+    loaded = sim.load_ann_index(spark, p)
+    want = _rows(loaded.codes)
+    sim.compact_saved_ann_index(spark, p)
+    assert _rows(loaded.codes) == want
+    assert _ann_rows(spark, p) == want
 
 
 def test_relation_stores_name_themselves_on_non_local_paths(spark):
