@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, functions as F
 from presto_on_ray_spark import store
 from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
+from presto_on_ray_spark.session import collect_bounded, local_relation
 from presto_on_ray_spark.suite import query
 
 # Deterministic MinHash permutation parameters h_i(x) = (a_i*x + b_i) mod p.
@@ -470,13 +471,19 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     Iterative min-label propagation: each round every node takes the
     minimum label among itself and its neighbors; convergence in
     O(component diameter) rounds (near-dup clusters are tiny — a
-    handful of rounds). Each round is pure DataFrame ops (join +
-    groupBy min); ``localCheckpoint`` truncates the lineage so the
-    plan stays bounded regardless of iteration count (on a cluster,
-    prefer ``checkpoint`` with a durable dir). The driver-side loop is
-    orchestration only — per-round state never leaves the executors
-    except the single convergence scalar (sum of labels, which
-    decreases monotonically until fixpoint).
+    handful of rounds). The symmetric edge set is materialized once;
+    when it has at most ``session.LOCAL_LOOP_ROWS`` rows (and no null
+    node), it is collected as Arrow and the rounds run in numpy on the
+    driver, with pointer jumping (``labels = labels[labels]``) to a
+    fixpoint — the same labels without a Spark job cycle per round.
+    Above the bound each round is pure DataFrame ops (join + groupBy
+    min); ``localCheckpoint`` truncates the lineage so the plan stays
+    bounded regardless of iteration count (on a cluster, prefer
+    ``checkpoint`` with a durable dir), and the driver reads only the
+    convergence scalar (sum of labels, which decreases monotonically
+    until fixpoint). ``max_iterations`` caps the distributed rounds: a
+    loop that reaches it without a fixpoint raises ValueError rather
+    than return partial labels.
 
     This is the stage that completes a dedup pipeline at 100 TB:
     candidate pairs (MinHash-LSH / ngram-Jaccard) → clusters → one
@@ -503,6 +510,9 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     # union, initial labels) derives from it, so the upstream pair-
     # generation DAG executes exactly once regardless of fan-out
     edges = sym.distinct().localCheckpoint()
+    table = collect_bounded(edges)
+    if table is not None and table.column("src").null_count == 0:
+        return _local_components(edges.sparkSession, table, edges.schema["src"])
     nodes = edges.select(F.col("src").alias("node")).distinct()
     # Self-loop edges fold the "own label" term into the neighbor
     # aggregation, so each round is ONE join + ONE min-groupBy (the r4
@@ -544,7 +554,41 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
         if cur_sum == prev_sum:
             break
         prev_sum = cur_sum
+    else:
+        raise ValueError(
+            f"connected_components: no fixpoint after max_iterations="
+            f"{max_iterations} rounds; a component's diameter needs more"
+        )
     return labels.select("node", F.col("label").alias("component_id"))
+
+
+def _local_components(spark, table, field) -> DataFrame:
+    """connected_components' driver-local tier over the collected
+    symmetric edge table (``src``, ``dst``, no nulls): min-label
+    propagation plus pointer jumping over node ranks, so a rank's
+    label is the rank of the smallest node id in its component."""
+    import numpy as np
+    from pyspark.sql.types import StructField, StructType
+
+    ids, ranks = np.unique(
+        np.concatenate([table.column(c).to_numpy() for c in ("src", "dst")]),
+        return_inverse=True,
+    )
+    src, dst = np.split(ranks, 2)
+    labels = np.arange(len(ids))
+    while True:
+        nxt = labels.copy()
+        np.minimum.at(nxt, src, labels[dst])
+        nxt = nxt[nxt]
+        if np.array_equal(nxt, labels):
+            break
+        labels = nxt
+    schema = StructType([
+        StructField("node", field.dataType, field.nullable),
+        # nullable like the distributed tier's min() aggregate
+        StructField("component_id", field.dataType, True),
+    ])
+    return local_relation(spark, zip(ids.tolist(), ids[labels].tolist()), schema)
 
 
 def _keepers(pairs: DataFrame) -> DataFrame:

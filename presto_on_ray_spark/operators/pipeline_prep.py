@@ -1513,8 +1513,7 @@ def load_segment_counts(spark, path: str):
     keeps the immediately superseded generation on disk, so a lazy
     plan bound here survives one concurrent merge/save but fails with
     a missing-file error if it outlives two — re-load for long-lived
-    handles. (The dedup index's in-place appends need the stronger
-    marker protocol; this store's full generations do not.)"""
+    handles."""
     return store.load_relation_generation(spark, path, "counts")
 
 
@@ -1564,9 +1563,9 @@ def merge_into_saved_segment_counts(
     generation's record forward either way) — because the record is
     part of the generation, counts and the admission mark publish in
     ONE atomic flip: there is no crash window in which the merge
-    applied but the admission went unrecorded (the gap the dedup
-    index's in-place appends must bridge with a commit-token
-    handshake)."""
+    applied but the admission went unrecorded (the dedup index's merge
+    records its commit token inside the generation for the same
+    reason)."""
     with store.relation_writer(path, "counts", force) as (spark_path, os_path):
         cur = store.relation_generation(os_path, "counts")
         admitted = _read_batches(os_path, cur)

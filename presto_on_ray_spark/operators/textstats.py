@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators._util import t
-from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.session import collect_bounded, local_relation
 from presto_on_ray_spark.store import (
     load_relation_generation,
     relation_generation,
@@ -529,15 +529,12 @@ def _classifier_oracle() -> str:
 # ("± offset" is not expressible through the origin).
 #
 # Everything is int64 arithmetic — weights, gradients, dots, error
-# counts — so training is bit-reproducible across engines and
-# partitionings (integer sums commute), a chained-CTE oracle replays
-# every epoch exactly, and a NumPy twin pins the algorithm. Scale
-# shape (r15): the feature relation is persisted hash-partitioned and
-# sorted by doc_id, so each epoch is one broadcast of the fixed-width
-# weight relation + ONE exchange-free windowed pass over the cache
-# (per-doc dot + mistake filter) feeding the tiny per-bucket gradient
-# aggregate — the only shuffle left per epoch moves <= 4097 rows per
-# partition.
+# counts — so training is bit-reproducible across engines, partitionings
+# and tiers (integer sums commute), a chained-CTE oracle replays every
+# epoch exactly, and a NumPy twin pins the algorithm. classifier_train
+# runs its epochs on the driver when the persisted feature relation
+# fits under session.LOCAL_LOOP_ROWS, and as Spark jobs over that
+# cache above it (see its docstring).
 
 _TRAIN_EPOCHS = 8
 _CLF_BIAS = _CLF_BUCKETS  # the reserved bias bucket id (4096)
@@ -666,20 +663,24 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
     error hits 0 the weights stop moving, so later val errors tie and
     the earliest epoch wins regardless of pocket source).
 
-    Orchestration: the MODEL is driver data (4097 int64s — the Lloyd-
-    centroid/kcenter pattern: fixed-width by the hashing trick, so the
-    per-epoch gradient collect is bounded by construction), while
-    every corpus-sized relation stays distributed — each epoch is ONE
-    job over the persisted feature relation: broadcast-literal dot →
-    per-doc verdict → mistake filter → per-bucket gradient, with the
-    epoch's ERROR COUNT read off the gradient relation itself (every
-    mistaken doc carries exactly one bias row with tf=1, so the bias
-    bucket's contributing-row count IS the mistake count — no second
-    scoring job). A fully relational epoch chain was measured and
-    rejected: each epoch's logical tree embeds its predecessor's TWICE
-    (scoring + update), so analysis cost grows 2^epochs — the same
-    lineage cliff the kcenter loop hit, here fatal well before
-    execution.
+    Orchestration: the MODEL is driver data (4097 int64s, fixed-width
+    by the hashing trick), and one epoch loop owns the pocket
+    selection, the early-separation break and the trace; only the
+    per-epoch step (weights → gradient, train error, pocket error)
+    depends on the tier. When the persisted feature relation (and the
+    pocket one, if given) has at most ``session.LOCAL_LOOP_ROWS`` rows,
+    it is collected once as Arrow and every epoch runs in int64 numpy
+    on the driver — a Spark job cycle per epoch costs far more than
+    the epoch's arithmetic. Above the bound each epoch is ONE job over
+    the persisted relation: broadcast weights → per-doc windowed dot →
+    mistake filter → per-bucket gradient, with the error count read
+    off the gradient itself (every mistaken doc carries exactly one
+    bias row with tf=1, so the bias bucket's row count IS the mistake
+    count). Both tiers compute the same integers, so the weights and
+    the trace are identical. A fully relational epoch chain was
+    measured and rejected: each epoch's logical tree embeds its
+    predecessor's TWICE (scoring + update), so analysis cost grows
+    2^epochs.
 
     ``trace`` (r15, VERDICT r14 #1a): when a list is passed, one dict
     per epoch is appended — {e, err, wsum, wdot} where err is the
@@ -704,8 +705,6 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
     key scores the val split again after training, so passing vfl lets
     it reuse this cache there too. Only consulted when ``pocket_docs``
     is given; default None builds it internally."""
-    from pyspark.sql import Window
-
     from presto_on_ray_spark.caching import tracked_persist
 
     spark = docs.sparkSession
@@ -715,35 +714,107 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
         vfl = None
     elif vfl is None:
         vfl = tracked_persist(_train_features(pocket_docs, labels))
-    # epoch 1: w0 = 0 → every featured doc is a mistake, so the first
-    # gradient needs no scoring pass. Bounded collect: <= 4097 rows
-    # (the fixed-width model), like refine_cells' centroid collects.
-    w = [0] * (_CLF_BUCKETS + 1)
-    for r in (
-        fl.groupBy("bucket")
-        .agg(F.sum(F.col("y") * F.col("tf")).alias("g"))
-        .collect()
-    ):
-        w[int(r["bucket"])] = int(r["g"])
+    ft = collect_bounded(fl)
+    vft = None if vfl is None or ft is None else collect_bounded(vfl)
+    if ft is not None and (vfl is None or vft is not None):
+        w, step = _local_epochs(ft, vft)
+    else:
+        w, step = _distributed_epochs(fl, vfl)
     best_err, best_w = None, None
+    for epoch in range(1, epochs + 1):
+        g, train_err, err = step(w)
+        if trace is not None:
+            wl = w.tolist()
+            trace.append({
+                "e": epoch, "err": err,
+                "wsum": sum(wl),
+                "wdot": sum(wv * (b + 1) for b, wv in enumerate(wl)),
+            })
+        if best_err is None or err < best_err:
+            best_err, best_w = err, w
+        if train_err == 0:
+            # perfect separation: the weights stop moving, so later
+            # epochs tie on any pocket metric and lose to this one;
+            # pad the trace analytically (constant weights, tied err)
+            if trace is not None:
+                for e2 in range(epoch + 1, epochs + 1):
+                    trace.append({**trace[-1], "e": e2})
+            break
+        w = w + g
+    return local_relation(
+        spark, enumerate(best_w.tolist()), "bucket long, wnum long"
+    )
+
+
+def _local_epochs(ft, vft):
+    """The driver-local tier of classifier_train over the collected
+    feature relations ``ft`` (and pocket ``vft`` or None): returns
+    epoch 1's weights — the gradient under w0 = 0, where every featured
+    doc is a mistake — and ``step(w) -> (gradient, train_err,
+    pocket_err)``. All int64: the per-doc dot sums with ``np.add.at``
+    (``np.bincount(weights=)`` would sum in float64)."""
+    import numpy as np
+
+    def columns(tab):
+        _, doc = np.unique(tab.column("doc_id").to_numpy(), return_inverse=True)
+        return (doc, *(tab.column(c).to_numpy() for c in ("bucket", "tf", "y")))
+
+    def mistaken(rel, w):
+        doc, bucket, tf, y = rel
+        z = np.zeros(len(doc), dtype=np.int64)
+        np.add.at(z, doc, tf * w[bucket])
+        return y * z[doc] <= 0
+
+    def errors(rel, m):
+        # mistaken docs = mistaken bias rows (one per featured doc)
+        return int(np.count_nonzero(m & (rel[1] == _CLF_BIAS)))
+
+    train = columns(ft)
+    val = None if vft is None else columns(vft)
+
+    def step(w):
+        _, bucket, tf, y = train
+        m = mistaken(train, w)
+        g = np.zeros(_CLF_BUCKETS + 1, dtype=np.int64)
+        np.add.at(g, bucket[m], (y * tf)[m])
+        train_err = errors(train, m)
+        if val is None:
+            return g, train_err, train_err
+        return g, train_err, errors(val, mistaken(val, w))
+
+    return step(np.zeros(_CLF_BUCKETS + 1, dtype=np.int64))[0], step
+
+
+def _distributed_epochs(fl, vfl):
+    """The Spark tier of classifier_train over the persisted feature
+    relations ``fl`` (and pocket ``vfl`` or None): the same contract as
+    _local_epochs, one job per epoch (plus one scalar count per epoch
+    for the pocket). Epoch 1's weights need no scoring pass."""
+    import numpy as np
+    from pyspark.sql import Window
+
+    spark = fl.sparkSession
+
+    def dense(rows):
+        g = np.zeros(_CLF_BUCKETS + 1, dtype=np.int64)
+        for r in rows:
+            g[int(r["bucket"])] = int(r["g"])
+        return g
+
     # the per-doc dot as a doc_id-partitioned window over fl's cache
     # partitioning (r15): zero exchanges and zero sorts up to the
     # mistake filter — y and zint are constant across a doc's rows, so
-    # filtering the SCORED ROWS directly replaces the old
-    # groupBy(doc_id) + semi-join-back (two extra exchanges per epoch);
-    # the integer sums are order-independent, so the relation is
-    # unchanged. The only shuffle left per epoch is the tiny per-bucket
-    # gradient aggregate (<= 4097 rows per partition after partial
-    # aggregation).
+    # the SCORED ROWS are filtered directly. The only shuffle per epoch
+    # is the tiny per-bucket gradient aggregate (<= 4097 rows per
+    # partition after partial aggregation); its collect is bounded by
+    # the fixed-width model.
     zin = F.sum(F.col("tf") * F.col("wnum")).over(Window.partitionBy("doc_id"))
-    for epoch in range(1, epochs + 1):
+
+    def step(w):
         wdf = F.broadcast(
-            local_relation(spark, enumerate(w), "bucket long, wnum long")
+            local_relation(spark, enumerate(w.tolist()), "bucket long, wnum long")
         )
-        # one job: mistakes' per-bucket gradient + per-bucket row count
-        # (bounded collect, <= 4097 rows); err = the bias bucket's row
-        # count, since every mistaken doc has exactly one bias row
-        g = (
+        rows = (
             fl.join(wdf, "bucket")
             .withColumn("zint", zin)
             .filter(F.col("y") * F.col("zint") <= 0)
@@ -754,42 +825,26 @@ def classifier_train(docs, labels, epochs: int = _TRAIN_EPOCHS,
             )
             .collect()
         )
-        train_err = next((int(r["n"]) for r in g if r["bucket"] == _CLF_BIAS), 0)
+        train_err = next(
+            (int(r["n"]) for r in rows if r["bucket"] == _CLF_BIAS), 0
+        )
         if vfl is None:
-            err = train_err
-        else:
-            # pocket on the held-out split: one scalar count per epoch —
-            # the same windowed dot; every featured doc carries exactly
-            # one bias row, so counting mistaken BIAS ROWS counts
-            # mistaken docs without a per-doc aggregate
-            err = (
-                vfl.join(wdf, "bucket")
-                .withColumn("zint", zin)
-                .filter(
-                    (F.col("bucket") == _CLF_BIAS)
-                    & (F.col("y") * F.col("zint") <= 0)
-                )
-                .count()
+            return dense(rows), train_err, train_err
+        # pocket on the held-out split: counting mistaken BIAS ROWS
+        # counts mistaken docs without a per-doc aggregate
+        err = (
+            vfl.join(wdf, "bucket")
+            .withColumn("zint", zin)
+            .filter(
+                (F.col("bucket") == _CLF_BIAS)
+                & (F.col("y") * F.col("zint") <= 0)
             )
-        if trace is not None:
-            trace.append({
-                "e": epoch, "err": int(err),
-                "wsum": sum(w),
-                "wdot": sum(wv * (b + 1) for b, wv in enumerate(w)),
-            })
-        if best_err is None or err < best_err:
-            best_err, best_w = err, list(w)
-        if train_err == 0:
-            # perfect separation: the weights stop moving, so later
-            # epochs tie on any pocket metric and lose to this one;
-            # pad the trace analytically (constant weights, tied err)
-            if trace is not None:
-                for e2 in range(epoch + 1, epochs + 1):
-                    trace.append({**trace[-1], "e": e2})
-            break
-        for r in g:
-            w[int(r["bucket"])] += int(r["g"])
-    return local_relation(spark, enumerate(best_w), "bucket long, wnum long")
+            .count()
+        )
+        return dense(rows), train_err, err
+
+    g0 = fl.groupBy("bucket").agg(F.sum(F.col("y") * F.col("tf")).alias("g"))
+    return dense(g0.collect()), step
 
 
 def _train_ctes(

@@ -52,6 +52,27 @@ def local_relation(
     return spark.createDataFrame(table, schema)
 
 
+# The driver-local tier for bounded iterative loops: a loop whose
+# relation has at most this many rows collects it once and iterates on
+# the driver; a larger one runs its distributed rounds. Read at call
+# time, so tests can force either tier by setting it.
+LOCAL_LOOP_ROWS = 1_000_000
+
+
+def collect_bounded(df: DataFrame):
+    """``df`` as a ``pyarrow.Table`` when it has at most
+    ``LOCAL_LOOP_ROWS`` rows, else None.
+
+    Iterative operators (the classifier's epochs, connected components'
+    rounds) call this once before their loop: each distributed round
+    pays a full plan, AQE and collect cycle for milliseconds of work,
+    so a relation that fits is iterated in numpy instead. At most
+    ``LOCAL_LOOP_ROWS + 1`` rows are ever collected.
+    """
+    table = df.limit(LOCAL_LOOP_ROWS + 1).toArrow()
+    return None if table.num_rows > LOCAL_LOOP_ROWS else table
+
+
 def get_spark(
     app_name: str = "presto-on-ray-spark",
     master: str | None = None,

@@ -94,10 +94,8 @@ def stream_segment_counts_admit(
     in one atomic pointer flip — a crash leaves either both or
     neither, and a re-delivered batch whose id is already recorded is
     skipped entirely (no sink call, no merge). The dedup index's admit
-    loop needs a commit-token log and a loud crash window to get the
-    same guarantee over in-place appends; the full-generation store
-    gets it for free, which is exactly why small artifacts should
-    prefer generation flips.
+    loop gets the same guarantee the same way: its merge records the
+    delivery's commit token inside the generation it flips to.
 
     SINK deliveries, by contrast, are AT-LEAST-ONCE across crashes: a
     crash after sink() but before the merge's generation flip leaves

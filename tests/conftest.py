@@ -31,3 +31,22 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def sf_correct():
     return SF_CORRECT
+
+
+@pytest.fixture
+def loop_tiers(monkeypatch):
+    """``run(fn)`` calls ``fn()`` twice, first with the driver-local
+    tier of the iterative operators forced (``session.LOCAL_LOOP_ROWS``
+    above any test input), then with the distributed tier forced (0),
+    and returns ``(local, distributed)``."""
+    from presto_on_ray_spark import session
+
+    def run(fn):
+        default, out = session.LOCAL_LOOP_ROWS, []
+        for rows in (10**9, 0):
+            monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", rows)
+            out.append(fn())
+        monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", default)
+        return tuple(out)
+
+    return run

@@ -225,3 +225,66 @@ def test_holdout_scoring_feature_reuse(spark, sf_dir):
         assert reused.count() == fresh.count()
     finally:
         fl.unpersist()
+
+
+def _train_both_tiers(loop_tiers, docs, labels, epochs, **kw):
+    """classifier_train's (weights, trace) on the driver-local tier and
+    on the distributed tier."""
+    from presto_on_ray_spark.caching import release_cached
+
+    def run():
+        tr = []
+        try:
+            w = sorted(
+                (r.bucket, r.wnum)
+                for r in classifier_train(
+                    docs, labels, epochs=epochs, trace=tr, **kw
+                ).collect()
+            )
+        finally:
+            release_cached()
+        return w, tr
+
+    return loop_tiers(run)
+
+
+def test_local_tier_equals_distributed(spark, sf_dir, loop_tiers):
+    d = t(spark, sf_dir, "documents")
+    local, distributed = _train_both_tiers(
+        loop_tiers, d, langid_labels(d), _TRAIN_EPOCHS
+    )
+    assert local == distributed
+    assert len(local[1]) == _TRAIN_EPOCHS
+
+
+def test_local_tier_equals_distributed_val_pocket(spark, sf_dir, loop_tiers):
+    d = t(spark, sf_dir, "documents")
+    train = d.filter(F.col("doc_id") % 10 < 8)
+    val = d.filter(F.col("doc_id") % 10 >= 8)
+    local, distributed = _train_both_tiers(
+        loop_tiers, train, langid_labels(d), 4, pocket_docs=val
+    )
+    assert local == distributed
+
+
+def test_local_tier_equals_distributed_early_separation(spark, loop_tiers):
+    """A linearly separable doc set: epoch 1's weights already classify
+    every doc, so both tiers take the early-separation break and pad
+    the trace to ``epochs`` rows."""
+    docs = spark.createDataFrame(
+        [
+            (1, "the cat and the dog"),
+            (2, "a tale of kings to come"),
+            (3, "zebra quartz"),
+            (4, "lemon violet"),
+        ],
+        "doc_id long, text string",
+    )
+    local, distributed = _train_both_tiers(
+        loop_tiers, docs, langid_labels(docs), 4
+    )
+    assert local == distributed
+    tr = local[1]
+    assert [r["e"] for r in tr] == [1, 2, 3, 4]
+    assert tr[0]["err"] == 0
+    assert all({**r, "e": 1} == tr[0] for r in tr)

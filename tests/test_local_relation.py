@@ -148,8 +148,13 @@ def test_no_create_dataframe_outside_local_relation():
 def test_classifier_relations_plan_as_local_relations(spark, sf_dir, monkeypatch):
     """classifier_train's weights and every epoch's broadcast weight
     table are LocalRelations, and no job text_classifier_distilled
-    runs scans a Python RDD (``LogicalRDD`` / ``ExistingRDD``)."""
+    runs scans a Python RDD (``LogicalRDD`` / ``ExistingRDD``). The
+    distributed epoch tier is forced: the driver-local tier builds no
+    per-epoch weight tables."""
+    from presto_on_ray_spark import session
     from presto_on_ray_spark.operators import textstats
+
+    monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", 0)
 
     # every job the key runs is a collect() or count(); record the
     # executed plan of each (the session's concrete DataFrame class

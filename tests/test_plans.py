@@ -331,15 +331,18 @@ def test_filtered_ann_plan_shape(spark, sf_dir):
         release_cached()
 
 
-def test_classifier_train_job_count_linear_in_epochs(spark, sf_dir):
-    """The training loop's orchestration contract (round 13): each
-    pocket epoch costs ONE action (dot -> verdicts -> gradient+error
-    fused into a single collect), which AQE executes as a handful of
-    stage-jobs — so the total Spark-job count is LINEAR in epochs with
-    a small constant (measured ~8/epoch under AQE's job-per-stage
-    accounting). This pins against both a second action sneaking back
-    into the epoch (the pre-fusion shape) and any relational-chain
-    regression (whose failure mode is super-linear work per epoch)."""
+def test_classifier_train_job_count_linear_in_epochs(spark, sf_dir, monkeypatch):
+    """The distributed training loop's orchestration contract (round
+    13): each pocket epoch costs ONE action (dot -> verdicts ->
+    gradient+error fused into a single collect), which AQE executes as
+    a handful of stage-jobs — so the total Spark-job count is LINEAR in
+    epochs with a small constant (measured ~8/epoch under AQE's
+    job-per-stage accounting). This pins against both a second action
+    sneaking back into the epoch (the pre-fusion shape) and any
+    relational-chain regression (whose failure mode is super-linear
+    work per epoch). The driver-local tier is forced off: this test
+    keeps checking the path large corpora take."""
+    from presto_on_ray_spark import session
     from presto_on_ray_spark.caching import release_cached
     from presto_on_ray_spark.operators._util import t as _t
     from presto_on_ray_spark.operators.textstats import (
@@ -347,6 +350,7 @@ def test_classifier_train_job_count_linear_in_epochs(spark, sf_dir):
         langid_labels,
     )
 
+    monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", 0)
     sc = spark.sparkContext
     docs = _t(spark, sf_dir, "documents")
 
@@ -364,3 +368,30 @@ def test_classifier_train_job_count_linear_in_epochs(spark, sf_dir):
     per_epoch = (j4 - j2) / 2
     assert per_epoch <= 10, (j2, j4)
     assert j4 <= 10 * 4 + 6, (j2, j4)
+
+
+def test_classifier_train_local_tier_job_count_flat_in_epochs(spark, sf_dir):
+    """Under the driver-local gate the epochs run in numpy on one
+    collected feature relation, so the Spark-job count does not grow
+    with the epoch count."""
+    from presto_on_ray_spark.caching import release_cached
+    from presto_on_ray_spark.operators._util import t as _t
+    from presto_on_ray_spark.operators.textstats import (
+        classifier_train,
+        langid_labels,
+    )
+
+    sc = spark.sparkContext
+    docs = _t(spark, sf_dir, "documents")
+
+    def jobs_for(epochs):
+        group = f"local-train-jobs-{epochs}"
+        try:
+            sc.setJobGroup(group, "count training jobs")
+            classifier_train(docs, langid_labels(docs), epochs=epochs).count()
+        finally:
+            sc.setJobGroup("train-done", "")
+            release_cached()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs_for(2) == jobs_for(4)

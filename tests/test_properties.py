@@ -147,11 +147,12 @@ def test_minhash_lsh_banding_s_curve(spark):
     assert rate_low <= 0.30, f"candidate rate at s=0.3 too high: {rate_low}"
 
 
-def test_connected_components_matches_union_find(spark):
-    """connected_components (distributed min-label propagation) vs a
-    reference union-find on deterministic random graphs — components
-    and min-id labels must agree exactly, including star/chain/cycle
-    shapes longer than one propagation hop."""
+def test_connected_components_matches_union_find(spark, loop_tiers):
+    """connected_components (min-label propagation, on both the
+    driver-local and the distributed tier) vs a reference union-find on
+    deterministic random graphs — components and min-id labels must
+    agree exactly, including star/chain/cycle shapes longer than one
+    propagation hop."""
     import random
 
     from presto_on_ray_spark.operators.dedup import connected_components
@@ -193,11 +194,14 @@ def test_connected_components_matches_union_find(spark):
         expected[n] = find(n)
 
     df = spark.createDataFrame(sorted(edges), ["doc_a", "doc_b"])
-    got = {
-        r.node: r.component_id
-        for r in connected_components(df, max_iterations=50).collect()
-    }
-    assert got == expected
+    local, distributed = loop_tiers(
+        lambda: {
+            r.node: r.component_id
+            for r in connected_components(df, max_iterations=50).collect()
+        }
+    )
+    assert local == expected
+    assert distributed == expected
 
 
 # Known non-fixpoints, by design: renames whose TARGET is itself a

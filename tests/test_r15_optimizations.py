@@ -5,7 +5,8 @@ optimization round introduced must not silently regress.
    over the cached feature relation — no SortMergeJoin semi-join, no
    exchange between the cache scan and the window.
 2. connected_components' lazy-checkpoint rounds still produce exact
-   components (the fusion changed materialization, never the labels).
+   components (the fusion changed materialization, never the labels),
+   and its driver-local tier agrees with them.
 3. _distill_audit_fl (audit from the trainer's cached features) equals
    _distill_audit (audit by re-featurizing) row-for-row.
 """
@@ -15,6 +16,7 @@ from __future__ import annotations
 import io
 import sys
 
+import pytest
 from pyspark.sql import functions as F, Window
 
 from presto_on_ray_spark.caching import release_cached, tracked_persist
@@ -88,25 +90,63 @@ def test_classifier_epoch_job_is_one_windowed_pass(spark, sf_dir):
         release_cached()
 
 
-def test_connected_components_exact_after_lazy_fusion(spark):
+def test_connected_components_exact_after_lazy_fusion(spark, loop_tiers):
     from presto_on_ray_spark.operators.dedup import connected_components
 
     # two components {1,2,3,4} (chain) and {10,11}, plus the singleton
     # self-pair 20-20; min-label propagation needs >1 round on the
-    # chain, so the lazy per-round materialization is exercised
+    # chain, so the lazy per-round materialization is exercised (on the
+    # distributed tier; the driver-local tier must agree)
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 20)],
         "doc_a long, doc_b long",
     )
-    got = {
-        (r["node"], r["component_id"])
-        for r in connected_components(pairs).collect()
-    }
-    assert got == {
+    local, distributed = loop_tiers(
+        lambda: {
+            (r["node"], r["component_id"])
+            for r in connected_components(pairs).collect()
+        }
+    )
+    assert local == distributed == {
         (1, 1), (2, 1), (3, 1), (4, 1),
         (10, 10), (11, 10),
         (20, 20),
     }
+
+
+def test_connected_components_empty_edge_set(spark, loop_tiers):
+    from presto_on_ray_spark.operators.dedup import connected_components
+
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+
+    def run():
+        comp = connected_components(pairs)
+        return comp.schema, comp.collect()
+
+    local, distributed = loop_tiers(run)
+    assert local == distributed
+    assert local[0].fieldNames() == ["node", "component_id"]
+    assert local[1] == []
+
+
+def test_connected_components_raises_without_fixpoint(spark, monkeypatch):
+    """The distributed rounds stop at max_iterations; a 6-node chain
+    needs 5 hops plus a confirming round, so 2 rounds must raise
+    instead of returning partial labels as components."""
+    from presto_on_ray_spark import session
+    from presto_on_ray_spark.operators.dedup import connected_components
+
+    monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", 0)
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
+    )
+    with pytest.raises(ValueError, match="max_iterations=2"):
+        connected_components(chain, max_iterations=2).collect()
+    got = {
+        r["node"]: r["component_id"]
+        for r in connected_components(chain, max_iterations=6).collect()
+    }
+    assert got == {i: 0 for i in range(6)}
 
 
 def test_distill_audit_fl_equals_refeaturized_audit(spark, sf_dir):
