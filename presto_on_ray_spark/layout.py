@@ -23,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
+from presto_on_ray_spark.sources import read_parquet
+
 
 def write_clustered(
     df: DataFrame,
@@ -123,7 +125,7 @@ def layout_scan_demo(spark, sf_dir: str, base_dir: str, num_files: int = 8) -> d
     cut = hi - (hi - lo) // 20  # trailing 5% of the time range
 
     def timed_scan(path: str) -> tuple[float, int]:
-        df = spark.read.parquet(path).filter(F.col("ts_us") >= cut)
+        df = read_parquet(spark, path).filter(F.col("ts_us") >= cut)
         start = time.perf_counter()
         n = df.count()
         return time.perf_counter() - start, n
@@ -507,7 +509,7 @@ def layout_zorder_demo(spark, sf_dir: str, base_dir: str, num_files: int = 32) -
 
     def timed_scan(path: str) -> tuple[float, int]:
         df = (
-            spark.read.parquet(path)
+            read_parquet(spark, path)
             .filter(F.col("ts_us").between(t_lo, t_hi))
             .filter(F.col("user_id").between(u_lo, u_hi))
         )

@@ -52,6 +52,7 @@ from presto_on_ray_spark.operators import (  # noqa: F401
     tpch_full,
     windows as win,
 )
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.streaming import windows as streaming_win  # noqa: F401
 from presto_on_ray_spark.suite import ORACLES, QUERIES, query
 
@@ -726,7 +727,7 @@ def cov_sketch_exact(spark, sf_dir):
         F.lit("hll").alias("src"), F.col("o_orderstatus").alias("k"),
         F.col("approx_customers").alias("c1"), v_null.alias("v1"), v_null.alias("v2"),
     )
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    o = read_parquet(spark, f"{sf_dir}/orders.parquet")
     ep = o.groupBy("o_orderstatus").agg(
         F.round(F.percentile("o_totalprice", F.lit(0.5)), 4).alias("v1"),
         F.round(F.percentile("o_totalprice", F.lit(0.9)), 4).alias("v2"),

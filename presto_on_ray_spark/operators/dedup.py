@@ -27,6 +27,7 @@ from presto_on_ray_spark import store
 from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import collect_bounded, local_relation
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.suite import query
 
 # Deterministic MinHash permutation parameters h_i(x) = (a_i*x + b_i) mod p.
@@ -1755,7 +1756,7 @@ def _index_generation(os_path: str, path: str) -> str:
 
 def _read_index(spark, root: str) -> BaseIndex:
     return BaseIndex(
-        *[spark.read.parquet(f"{root}/{name}") for name in BaseIndex._fields]
+        *[read_parquet(spark, f"{root}/{name}") for name in BaseIndex._fields]
     )
 
 
@@ -1872,7 +1873,7 @@ def save_index_bands(spark, path: str) -> None:
     check= guard verifies per ingest."""
     with _index_writer(path) as (spark_path, os_path):
         live = _index_generation(os_path, path)
-        sho = spark.read.parquet(f"{spark_path}/{live}/shingles")
+        sho = read_parquet(spark, f"{spark_path}/{live}/shingles")
 
         def write(gen):
             store.link_relation(os_path, live, gen, BaseIndex._fields)
@@ -1891,11 +1892,11 @@ def load_saved_bands(spark, path: str):
         gen = _index_generation(os_path, path)
         if not os.path.isdir(os.path.join(os_path, gen, "bands")):
             return None
-        return spark.read.parquet(f"{spark_path}/{gen}/bands")
+        return read_parquet(spark, f"{spark_path}/{gen}/bands")
     # shared store: no os-level existence probe — try the read and map
     # only the path-missing failure to None
     try:
-        return spark.read.parquet(f"{path}/bands")
+        return read_parquet(spark, f"{path}/bands")
     except Exception as e:  # AnalysisException: PATH_NOT_FOUND
         if "PATH_NOT_FOUND" in str(e) or "Path does not exist" in str(e):
             return None
@@ -2319,7 +2320,7 @@ def compact_saved_index(spark, path: str) -> None:
             # every recomputation reads the compacted shingles (few
             # files), not the live directory's per-admission appends
             index.shingles.write.parquet(f"{root}/shingles")
-            sho = spark.read.parquet(f"{root}/shingles")
+            sho = read_parquet(spark, f"{root}/shingles")
             side = [(sho.groupBy("doc_id").agg(F.count("*").alias("n_o")), "counts")]
             if has_bands:
                 side.append((lsh_bands(sho), "bands"))
@@ -2333,7 +2334,7 @@ def compact_saved_index(spark, path: str) -> None:
                 sho.groupBy("sh").agg(F.count("*").alias("df")).write.parquet(
                     f"{root}/df"
                 )
-                df_rel = spark.read.parquet(f"{root}/df")
+                df_rel = read_parquet(spark, f"{root}/df")
                 _ranked_prefix(sho, df_rel, tn, td).write.parquet(f"{root}/prefix")
                 for f in futures:
                     f.result()

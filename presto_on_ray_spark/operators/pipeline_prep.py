@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from presto_on_ray_spark import store
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.suite import query
 
 # Knuth multiplicative hash: id · 2654435761 mod 2³²; ids ≤ ~2³⁰ keep
@@ -1572,7 +1573,7 @@ def merge_into_saved_segment_counts(
         if admit_batch_id is not None:
             admitted.add(int(admit_batch_id))
         merged = merge_segment_counts(
-            spark.read.parquet(f"{spark_path}/{cur}/counts"), batch, w
+            read_parquet(spark, f"{spark_path}/{cur}/counts"), batch, w
         )
         store.publish_relation(
             spark_path, os_path, merged, "counts", _batches_sidecar(admitted)

@@ -23,6 +23,7 @@ from presto_on_ray_spark import store
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.suite import query
 
 
@@ -1989,7 +1990,7 @@ def _ann_generation(os_path: str, path: str) -> str:
 
 def _load_ann_relations(spark, rel_root: str) -> AnnIndex:
     return AnnIndex(
-        *[spark.read.parquet(f"{rel_root}/{name}") for name in _ANN_RELATIONS]
+        *[read_parquet(spark, f"{rel_root}/{name}") for name in _ANN_RELATIONS]
     )
 
 

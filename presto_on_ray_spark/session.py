@@ -129,6 +129,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.sql.timeType.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # Generated-class LRU (static conf). Spark's 100 entries are
+        # fewer than one corpus pass compiles (~108 classes for the
+        # three corpus keys, ~178 for a perfbench pass): the LRU would
+        # evict a pass's own classes and every repeat of a plan would
+        # pay 1.2-2.2 s of Janino again. 1000 holds a session's plans.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     # Deployment-specific overrides without code edits (r15): a JSON
     # object of conf key/values in $SPARK_GRAFT_EXTRA_CONF — how a
@@ -164,7 +170,11 @@ def apply_session_defaults(spark: SparkSession) -> SparkSession:
     The driver hands ``entry(spark)`` a session we did not construct
     (mirroring how the reference attaches its CLI to an already-running
     coordinator, presto-mgr.py:268-273). Static conf (memory, master)
-    cannot change post-launch, but these SQL confs can.
+    cannot change post-launch, but these SQL confs can. The
+    generated-class cache size ``get_spark`` sets
+    (``spark.sql.codegen.cache.maxEntries``) is static conf too: a
+    session built elsewhere, like the one handed to ``entry(spark)``,
+    keeps its own value.
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")

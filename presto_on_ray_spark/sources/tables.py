@@ -21,6 +21,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from presto_on_ray_spark.sources.parquet import read_parquet
+
 # The fixture star schema + extension tables (TESTDATA.md / FIXTURES.md).
 TABLES = [
     "region",
@@ -57,7 +59,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+        df = read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
         from pyspark.sql import functions as F
 
         ts_type = dict(df.dtypes).get("ts", "")
@@ -70,7 +72,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             # session-TZ timestamp the oracles expect.
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    return read_parquet(spark, os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def register_tables(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:

@@ -55,6 +55,8 @@ import re
 import shutil
 import warnings
 
+from presto_on_ray_spark.sources import read_parquet
+
 POINTER = "_CURRENT"
 _GEN = re.compile(r"gen-(\d+)")
 
@@ -357,4 +359,4 @@ def load_relation_generation(
     spark_path, os_path = relation_paths(path, relname)
     if generation is None:
         generation = relation_generation(os_path, relname)
-    return spark.read.parquet(f"{spark_path}/{generation}/{relname}")
+    return read_parquet(spark, f"{spark_path}/{generation}/{relname}")

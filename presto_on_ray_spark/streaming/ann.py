@@ -31,6 +31,7 @@ from presto_on_ray_spark.operators.similarity import (
     semantic_cells,
     semantic_ingest_verdicts,
 )
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.store import local_paths, write_atomic
 from presto_on_ray_spark.streaming.ingest import _start
 
@@ -319,7 +320,7 @@ def stream_semantic_admit(
             # footer must fail the trigger loudly, never admit the
             # batch wholesale past the dedup rule and the replay probe
             try:
-                store = spark.read.parquet(store_path)
+                store = read_parquet(spark, store_path)
             except Exception as e:  # AnalysisException: PATH_NOT_FOUND
                 if not _path_missing(e):
                     raise
@@ -340,7 +341,7 @@ def stream_semantic_admit(
                 # overwritten — self-healing; any other failure
                 # raises.
                 try:
-                    cents = spark.read.parquet(cents_path)
+                    cents = read_parquet(spark, cents_path)
                     if cents.isEmpty():
                         # a zero-row sidecar (e.g. a maintenance pass
                         # gone wrong before rebuild_semantic_cells
@@ -364,7 +365,7 @@ def stream_semantic_admit(
                         derived.coalesce(1).write.mode(
                             "overwrite"
                         ).parquet(cents_path)
-                        cents = spark.read.parquet(cents_path)
+                        cents = read_parquet(spark, cents_path)
             if store is not None and cents is not None:
                 replayed = store.select("vec_id").join(
                     F.broadcast(v.select("vec_id")), "vec_id"
@@ -424,9 +425,9 @@ def semantic_cells_advice(spark, store_path: str, growth_factor: float = 4.0) ->
     trigger derives a fresh one at the current auto dial anyway)."""
     from presto_on_ray_spark.operators.similarity import auto_ivf_cells
 
-    vectors = spark.read.parquet(store_path).count()
+    vectors = read_parquet(spark, store_path).count()
     try:
-        cells = spark.read.parquet(store_path.rstrip("/") + "/_cents").count()
+        cells = read_parquet(spark, store_path.rstrip("/") + "/_cents").count()
     except Exception as e:  # only a MISSING sidecar is quiet; a torn or
         # unreadable one is exactly the state that needs maintenance
         # attention and must raise, not report rebuild_due=False
@@ -489,7 +490,7 @@ def rebuild_semantic_cells(
         semantic_probe_dial,
     )
 
-    store = spark.read.parquet(store_path).select("vec_id", "qv")
+    store = read_parquet(spark, store_path).select("vec_id", "qv")
     if store.isEmpty():
         raise ValueError(
             f"rebuild_semantic_cells: the store at {store_path!r} is "
@@ -517,7 +518,7 @@ def rebuild_semantic_cells(
     if target_recall is not None:
         dial = semantic_probe_dial(
             store, tau=tau, target_recall=target_recall,
-            cents=spark.read.parquet(cents_path),
+            cents=read_parquet(spark, cents_path),
         )
         write_atomic(probe_os, json.dumps(
             {"nprobe": dial["nprobe"], "target_recall": target_recall}

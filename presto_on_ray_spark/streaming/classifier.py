@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from presto_on_ray_spark.operators.textstats import classifier_score_biased
 from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.store import write_atomic
 from presto_on_ray_spark.streaming.ingest import _start
 
@@ -365,7 +366,7 @@ def stream_classifier_retrain_windowed(
         bootstrap = not _weights_store_live(weights_path)
         if bootstrap or (breached and not in_cooldown):
             window_docs = (
-                spark.read.parquet(spool).dropDuplicates(["doc_id"])
+                read_parquet(spark, spool).dropDuplicates(["doc_id"])
             )
             save_classifier_weights(
                 retrain(window_docs), weights_path, force=True

@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from presto_on_ray_spark.sources import read_parquet
+
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events fixture (parquet source, schema from a
@@ -27,7 +29,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     load_table(spark, sf_dir, "events")  # sets the nanosAsLong conf + UTC TZ
     path = f"{sf_dir}/events.parquet"
-    raw_schema = spark.read.parquet(path).schema
+    raw_schema = read_parquet(spark, path).schema
     # layout probe through Hadoop's FS so URI/remote paths (file:/,
     # hdfs://, s3a://) classify correctly — os.path.isdir would fall
     # through to the glob branch for those and silently stream 0 rows
