@@ -17,6 +17,11 @@ from user``). This module is that surface on Spark:
 Scale note: the REPL collects at most --max-rows (default 100) rows to
 the driver — it is a human window onto a result, never a transfer
 path; CTAS / INSERT (sources.tables) is the bulk egress.
+
+Transport: the shell's session comes from ``get_spark``, so result
+partitions reach Python over AF_UNIX sockets, not loopback TCP (whose
+delayed ACK held each paged partition pull ~40 ms). ``main`` stops the
+session on exit, EOF or SIGTERM, which removes those socket files.
 """
 
 from __future__ import annotations
@@ -177,21 +182,25 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = parser.parse_args(argv)
 
+    import signal
+
     from presto_on_ray_spark.engine import Engine
     from presto_on_ray_spark.session import get_spark
 
+    # a terminated shell still runs spark.stop(), which removes the
+    # session's socket files (a killed process leaves them behind)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     spark = get_spark(
         app_name="presto-on-ray-spark-cli",
         master=args.master,
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    engine = Engine(spark)
-    if args.sf_dir:
-        engine.register_tables(args.sf_dir)
-        print(f"catalog: {args.sf_dir}", file=sys.stdout)
-
     try:
+        spark.sparkContext.setLogLevel("ERROR")
+        engine = Engine(spark)
+        if args.sf_dir:
+            engine.register_tables(args.sf_dir)
+            print(f"catalog: {args.sf_dir}", file=sys.stdout)
         if args.execute is not None:
             import io
 

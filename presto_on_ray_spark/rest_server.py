@@ -22,7 +22,10 @@ Protocol fidelity (the subset real clients depend on):
 - results stream in ``page_rows``-sized chunks through successive
   ``nextUri`` pages backed by ``DataFrame.toLocalIterator()``, so the
   driver never materializes more than one page plus one Spark
-  partition at a time (Presto's protocol pages the same way);
+  partition at a time (Presto's protocol pages the same way); each
+  partition comes from the JVM over an AF_UNIX socket in a
+  ``get_spark`` session (``session._socket_dir``), where loopback TCP
+  held every pull ~40 ms on a delayed ACK;
 - the most recent page of each query is retryable (the client
   protocol allows re-fetching a failed transfer); older pages are
   gone once the client advances;
@@ -503,6 +506,7 @@ def main(argv: list[str] | None = None) -> int:
             --sf-dir /root/testdata/sf0.01 --port 8080
     """
     import argparse
+    import signal
     import sys
 
     parser = argparse.ArgumentParser(prog="python -m presto_on_ray_spark.rest_server")
@@ -529,21 +533,26 @@ def main(argv: list[str] | None = None) -> int:
     from presto_on_ray_spark.engine import Engine
     from presto_on_ray_spark.session import get_spark
 
+    # a terminated server still runs spark.stop(), which removes the
+    # session's socket files (a killed process leaves them behind)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     spark = get_spark(app_name="presto-on-ray-spark-rest")
-    spark.sparkContext.setLogLevel("ERROR")
-    eng = Engine(spark)
-    if args.sf_dir:
-        eng.register_tables(args.sf_dir)
-    srv = PrestoRestServer(eng, host=args.host, port=args.port,
-                           max_rows=args.max_rows, page_rows=args.page_rows,
-                           read_only=args.read_only)
-    print(f"serving Presto REST protocol at {srv.url}/v1/statement")
     try:
-        srv._httpd.serve_forever()
-    except KeyboardInterrupt:
-        pass
+        spark.sparkContext.setLogLevel("ERROR")
+        eng = Engine(spark)
+        if args.sf_dir:
+            eng.register_tables(args.sf_dir)
+        srv = PrestoRestServer(eng, host=args.host, port=args.port,
+                               max_rows=args.max_rows, page_rows=args.page_rows,
+                               read_only=args.read_only)
+        print(f"serving Presto REST protocol at {srv.url}/v1/statement")
+        try:
+            srv._httpd.serve_forever()
+        except KeyboardInterrupt:
+            pass
+        finally:
+            srv.stop()
     finally:
-        srv.stop()
         spark.stop()
     return 0
 

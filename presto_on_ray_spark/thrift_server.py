@@ -68,6 +68,8 @@ def beeline_argv(port: int, sql: str, outputformat: str = "csv2") -> list[str]:
 
 def main(argv: list[str] | None = None) -> int:
     import argparse
+    import signal
+    import sys
     import time
 
     parser = argparse.ArgumentParser(prog="python -m presto_on_ray_spark.thrift_server")
@@ -79,6 +81,9 @@ def main(argv: list[str] | None = None) -> int:
     from presto_on_ray_spark.engine import Engine
     from presto_on_ray_spark.session import get_spark
 
+    # a terminated server still runs spark.stop(), which removes the
+    # session's socket files (a killed process leaves them behind)
+    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     spark = get_spark(
         app_name="presto-on-ray-spark-thrift",
         master=args.master,
@@ -87,14 +92,14 @@ def main(argv: list[str] | None = None) -> int:
             **thrift_server_conf(args.port),
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
-    eng = Engine(spark)
-    if args.sf_dir:
-        eng.register_tables(args.sf_dir)
-    start_thrift_server(spark)
-    print(f"Thrift JDBC server on jdbc:hive2://localhost:{args.port} "
-          f"(catalog: {args.sf_dir or 'session only'}); Ctrl-C to stop")
     try:
+        spark.sparkContext.setLogLevel("ERROR")
+        eng = Engine(spark)
+        if args.sf_dir:
+            eng.register_tables(args.sf_dir)
+        start_thrift_server(spark)
+        print(f"Thrift JDBC server on jdbc:hive2://localhost:{args.port} "
+              f"(catalog: {args.sf_dir or 'session only'}); Ctrl-C to stop")
         while True:
             time.sleep(60)
     except KeyboardInterrupt:
