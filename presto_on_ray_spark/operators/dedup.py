@@ -23,7 +23,7 @@ from typing import NamedTuple
 
 from pyspark.sql import DataFrame, functions as F
 
-from presto_on_ray_spark import store
+from presto_on_ray_spark import session, store
 from presto_on_ray_spark.caching import tracked_persist, tracked_reuse
 from presto_on_ray_spark.operators._util import t
 from presto_on_ray_spark.session import collect_bounded, local_relation
@@ -86,6 +86,18 @@ def shingles(col, n: int = 3):
     """Distinct word n-gram shingles, hashed to i64 (xxhash64 — JVM
     side)."""
     return F.array_distinct(_rolling_windows(col, n, F.xxhash64))
+
+
+def _doc_shingles(d: DataFrame) -> DataFrame:
+    """The persisted (doc_id, sh) relation of the (doc_id, text)
+    relation ``d``: one row per distinct 3-gram shingle of each
+    document. Every near-dup tier over ``d`` ranks, verifies or
+    measures this relation; repeated calls do NOT leak, because Spark's
+    CacheManager dedupes by analyzed-plan equality, so calls over one
+    ``d`` plan share one cache entry."""
+    return tracked_persist(
+        d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
+    )
 
 
 def minhash_signature(shingle_col, n_hashes: int = _NUM_HASHES):
@@ -261,11 +273,8 @@ def _ngram_jaccard_pairs(d: DataFrame) -> DataFrame:
     # fixture scale, and any collision would be data-, not engine-,
     # dependent); the prefix guarantee needs only SOME consistent
     # global shingle order, which (df, hash) provides.
-    grams = shingles(F.col("text"))
     # persisted: reused by ranking, the candidate join, and verification.
-    # (Repeated invocations do NOT leak: Spark's CacheManager dedupes by
-    # analyzed-plan equality, so an identical call reuses this entry.)
-    sh = tracked_persist(d.select("doc_id", F.explode(grams).alias("sh")))
+    sh = _doc_shingles(d)
     freq = sh.groupBy("sh").agg(F.count("*").alias("df"))
     w = Window.partitionBy("doc_id").orderBy("df", "sh")
     ranked = (
@@ -667,15 +676,109 @@ def dedup_neardup_clusters(spark, sf_dir):
 
 def _neardup_exact(d: DataFrame) -> DataFrame:
     """dedup_neardup_clusters over the documents relation ``d``. The
-    pair join, exact verify and connected-components rounds run once
-    per ``d`` plan until the next release_cached() (tracked_reuse), so
-    every consumer of the exact tier in a session — this key, the
-    adaptive dispatch, dedup_keep_best, split_leakage_safe — shares one
-    component relation."""
-    return tracked_reuse(
-        "neardup_exact", d,
-        lambda: _keepers(_ngram_jaccard_pairs(d).select("doc_a", "doc_b")),
+    pairs and connected-components rounds run once per ``d`` plan until
+    the next release_cached() (tracked_reuse), so every consumer of the
+    exact tier in a session — this key, the adaptive dispatch,
+    dedup_keep_best, split_leakage_safe — shares one component relation.
+
+    The tier is chosen here, on the collected shingle relation: when it
+    and its prefix collisions fit the driver-local bound
+    (``session.LOCAL_LOOP_ROWS``), the pairs come from
+    _local_jaccard_pairs in one collect; otherwise — and when the
+    collected table has a NULL doc_id or a repeated (doc_id, sh) row,
+    which the Spark pipeline's window counts and joins treat their own
+    way — from the Spark pipeline (_ngram_jaccard_pairs). Either tier's
+    pairs go through connected_components unchanged."""
+
+    def build():
+        pairs = _local_jaccard_pairs(_doc_shingles(d), 0.6)
+        if pairs is None:
+            pairs = _ngram_jaccard_pairs(d).select("doc_a", "doc_b")
+        return _keepers(pairs)
+
+    return tracked_reuse("neardup_exact", d, build)
+
+
+def _local_jaccard_pairs(sh: DataFrame, t_thresh: float) -> DataFrame | None:
+    """_ngram_jaccard_pairs' (doc_a, doc_b) relation computed on the
+    driver from one collect of the persisted shingle relation ``sh``, as
+    a local_relation; None when the Spark pipeline must run instead.
+
+    Same candidate rule: prefixes under the global (df, sh) order, the
+    AllPairs length filter, then every candidate verified by its exact
+    intersection count with the pipeline's float64 test
+    ``c / (na + nb - c) >= t``. (The PPJoin positional bound only
+    prunes candidates the verify rejects anyway, so it is left out.)
+    Returns None when ``sh`` has more than ``session.LOCAL_LOOP_ROWS``
+    rows (``sh`` stays persisted for its later readers), a NULL doc_id
+    or a repeated (doc_id, sh) row, or more prefix collisions than the
+    bound, counted before they are generated; the verify probes in
+    chunks, so no array the tier builds exceeds the bound either."""
+    import numpy as np
+    from pyspark.sql.types import StructField, StructType
+
+    table = collect_bounded(sh)
+    if table is None or table.column("doc_id").null_count:
+        return None
+    bound = session.LOCAL_LOOP_ROWS
+    ids, doc = np.unique(table.column("doc_id").to_numpy(), return_inverse=True)
+    _, shr, df = np.unique(
+        table.column("sh").to_numpy(), return_inverse=True, return_counts=True
     )
+    n_docs, n_sh = len(ids), len(df)
+    # each shingle's rank in the global (df, sh) order; np.unique sorted
+    # the hashes as signed longs, as Spark's orderBy does
+    grank = np.empty(n_sh, np.int64)
+    grank[np.lexsort((np.arange(n_sh), df))] = np.arange(n_sh)
+    # rows sorted by (doc, global rank): each doc's shingles in prefix order
+    keys = np.sort(doc * n_sh + grank[shr])
+    if np.any(keys[1:] == keys[:-1]):
+        return None
+    sdoc, sg = keys // n_sh, keys % n_sh
+    n = np.bincount(sdoc, minlength=n_docs)
+    start = np.cumsum(n) - n
+    pos = np.arange(len(keys)) - start[sdoc] + 1
+    in_prefix = pos <= (n - np.ceil(n * t_thresh).astype(np.int64) + 1)[sdoc]
+    # prefix rows grouped by shingle: each row collides with the later
+    # rows of its group
+    pkeys = np.sort(sg[in_prefix] * n_docs + sdoc[in_prefix])
+    pg, pdoc = pkeys // n_docs, pkeys % n_docs
+    later = np.searchsorted(pg, pg, side="right") - np.arange(len(pg)) - 1
+    if later.sum() > bound:
+        return None
+    left = np.repeat(np.arange(len(pg)), later)
+    right = left + 1 + _ragged_offsets(later)
+    a, b = pdoc[left], pdoc[right]
+    fits = (n[b] * t_thresh <= n[a]) & (n[a] * t_thresh <= n[b])
+    cand = np.unique(a[fits] * n_docs + b[fits])
+    a, b = cand // n_docs, cand % n_docs
+    # verify: probe the longer doc's rows with each of the shorter doc's
+    # shingles, at most `bound` probes per chunk (a doc has at most
+    # `bound` rows, so every chunk takes at least one candidate)
+    short = np.where(n[a] <= n[b], a, b)
+    long_, m, row0 = a + b - short, n[short], start[short]
+    ends, c, lo = np.cumsum(m), np.empty(len(cand), np.int64), 0
+    while lo < len(cand):
+        hi = np.searchsorted(ends, ends[lo] - m[lo] + bound, side="right")
+        probe = np.repeat(np.arange(lo, hi), m[lo:hi])
+        want = long_[probe] * n_sh + sg[row0[probe] + _ragged_offsets(m[lo:hi])]
+        hit = keys[np.minimum(np.searchsorted(keys, want), len(keys) - 1)] == want
+        c[lo:hi] = np.bincount(probe[hit] - lo, minlength=hi - lo)
+        lo = hi
+    keep = c.astype(np.float64) / (n[a] + n[b] - c) >= t_thresh
+    field = sh.schema["doc_id"]
+    schema = StructType([
+        StructField(name, field.dataType, field.nullable) for name in ("doc_a", "doc_b")
+    ])
+    rows = zip(ids[a[keep]].tolist(), ids[b[keep]].tolist())
+    return local_relation(sh.sparkSession, rows, schema)
+
+
+def _ragged_offsets(lengths):
+    """0, 1, ..., k-1 for each k in ``lengths``, concatenated."""
+    import numpy as np
+
+    return np.arange(lengths.sum()) - np.repeat(np.cumsum(lengths) - lengths, lengths)
 
 
 def verify_jaccard(cand: DataFrame, sh: DataFrame, t_thresh: float) -> DataFrame:
@@ -723,10 +826,7 @@ def dedup_lsh_keepers(spark, sf_dir):
     t_thresh = 0.6
     cand = dedup_minhash_lsh(spark, sf_dir)
     d = t(spark, sf_dir, "documents")
-    # same persisted shingle relation shape as dedup_ngram_jaccard; the
-    # CacheManager dedupes by analyzed-plan equality across invocations
-    sh = tracked_persist(d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh")))
-    return _keepers(verify_jaccard(cand, sh, t_thresh))
+    return _keepers(verify_jaccard(cand, _doc_shingles(d), t_thresh))
 
 
 @query("dedup_minhash_clusters")
@@ -884,10 +984,7 @@ def _lsh_keepers_dialed(d: DataFrame, j: float, target_recall: float):
 
     def build():
         cand = lsh_candidates(d, n_bands, rows)
-        sh = tracked_persist(
-            d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
-        )
-        return _keepers(verify_jaccard(cand, sh, j))
+        return _keepers(verify_jaccard(cand, _doc_shingles(d), j))
 
     return tracked_reuse(f"lsh_keepers:{n_bands}x{rows}@{j}", d, build)
 
@@ -948,13 +1045,9 @@ def dedup_neardup_adaptive(spark, sf_dir, target_recall: float = _LSH_TARGET_REC
     split_leakage_safe and dedup_neardup_clusters reuse one build
     instead of re-running the pair join and connected components."""
     d = t(spark, sf_dir, "documents")
-    # the same persisted shingle relation both tiers build (the
-    # CacheManager dedupes by analyzed-plan equality, so the stat pass
-    # and the chosen tier share one cache entry)
-    sh = tracked_persist(
-        d.select("doc_id", F.explode(shingles(F.col("text"))).alias("sh"))
-    )
-    if shingle_saturation(sh) < _SATURATION_AVG_DF:
+    # the same persisted shingle relation both tiers build, so the stat
+    # pass and the chosen tier share one cache entry
+    if shingle_saturation(_doc_shingles(d)) < _SATURATION_AVG_DF:
         return _neardup_exact(d)
     return _lsh_keepers_dialed(d, j=0.6, target_recall=target_recall)
 

@@ -52,10 +52,11 @@ def local_relation(
     return spark.createDataFrame(table, schema)
 
 
-# The driver-local tier for bounded iterative loops: a loop whose
-# relation has at most this many rows collects it once and iterates on
-# the driver; a larger one runs its distributed rounds. Read at call
-# time, so tests can force either tier by setting it.
+# The driver-local tier for bounded iterative loops and the near-dup
+# exact tier: an operator whose relation has at most this many rows
+# collects it once and computes on the driver (the near-dup tier also
+# caps its prefix collisions at it); a larger one runs its distributed
+# jobs. Read at call time, so tests can force either tier by setting it.
 LOCAL_LOOP_ROWS = 1_000_000
 
 
@@ -66,8 +67,11 @@ def collect_bounded(df: DataFrame):
     Iterative operators (the classifier's epochs, connected components'
     rounds) call this once before their loop: each distributed round
     pays a full plan, AQE and collect cycle for milliseconds of work,
-    so a relation that fits is iterated in numpy instead. At most
-    ``LOCAL_LOOP_ROWS + 1`` rows are ever collected.
+    so a relation that fits is iterated in numpy instead. The near-dup
+    exact tier (``dedup._local_jaccard_pairs``) calls it on its
+    persisted shingle relation in place of the prefix join, verify and
+    their ~25 jobs. At most ``LOCAL_LOOP_ROWS + 1`` rows are ever
+    collected.
     """
     table = df.limit(LOCAL_LOOP_ROWS + 1).toArrow()
     return None if table.num_rows > LOCAL_LOOP_ROWS else table

@@ -36,9 +36,9 @@ def sf_correct():
 @pytest.fixture
 def loop_tiers(monkeypatch):
     """``run(fn)`` calls ``fn()`` twice, first with the driver-local
-    tier of the iterative operators forced (``session.LOCAL_LOOP_ROWS``
-    above any test input), then with the distributed tier forced (0),
-    and returns ``(local, distributed)``."""
+    tier of the iterative operators and the near-dup exact tier forced
+    (``session.LOCAL_LOOP_ROWS`` above any test input), then with the
+    distributed tier forced (0), and returns ``(local, distributed)``."""
     from presto_on_ray_spark import session
 
     def run(fn):

@@ -127,6 +127,25 @@ def test_split_after_clusters_reuses_component_relation(spark, sf_dir, monkeypat
     release_cached()
 
 
+# dedup_neardup_clusters' jobs when its shingle relation fits the
+# driver-local bound: the shingle collect, connected components' edge
+# checkpoint and collect, and the write (5 measured at sf0.001; 25
+# when the prefix join and verify ran as Spark jobs)
+NEARDUP_LOCAL_MAX_JOBS = 6
+
+
+def test_neardup_clusters_job_count_on_local_tier(spark, sf_dir):
+    clusters = suite.QUERIES["dedup_neardup_clusters"]
+    clusters(spark, sf_dir).collect()  # the documents table's first read infers
+    release_cached()
+    jobs, _ = _jobs_in_group(
+        spark, "neardup-local",
+        lambda: clusters(spark, sf_dir).write.format("noop").mode("overwrite").save(),
+    )
+    release_cached()
+    assert jobs <= NEARDUP_LOCAL_MAX_JOBS
+
+
 def test_release_cached_forces_recompute(spark, sf_dir, monkeypatch):
     release_cached()
     cc = _count_cc(monkeypatch)
