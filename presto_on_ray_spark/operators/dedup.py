@@ -487,11 +487,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     driver, with pointer jumping (``labels = labels[labels]``) to a
     fixpoint — the same labels without a Spark job cycle per round.
     Above the bound each round is pure DataFrame ops (join + groupBy
-    min); ``localCheckpoint`` truncates the lineage so the plan stays
-    bounded regardless of iteration count (on a cluster, prefer
-    ``checkpoint`` with a durable dir), and the driver reads only the
-    convergence scalar (sum of labels, which decreases monotonically
-    until fixpoint). ``max_iterations`` caps the distributed rounds: a
+    min); each round's labels are persisted (tracked, like the edge
+    set, so ``release_cached()`` frees every round) and the cached
+    relation stands in for its plan in the next round; the driver reads
+    only the convergence scalar (sum of labels, which decreases
+    monotonically until fixpoint). ``max_iterations`` caps the distributed rounds: a
     loop that reaches it without a fixpoint raises ValueError rather
     than return partial labels.
 
@@ -516,10 +516,12 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
             )
         ).alias("e")
     ).select("e.src", "e.dst")
-    # checkpoint the edge set FIRST: everything below (nodes, self-loop
-    # union, initial labels) derives from it, so the upstream pair-
-    # generation DAG executes exactly once regardless of fan-out
-    edges = sym.distinct().localCheckpoint()
+    # persist the edge set FIRST, materialized by the bounded collect
+    # (its one eager action, which computes every partition): everything
+    # below (the local tier, or nodes, self-loop union, initial labels)
+    # reads it, so the upstream pair-generation DAG executes exactly once
+    # regardless of fan-out; tracked, so release_cached() frees it
+    edges = tracked_persist(sym.distinct())
     table = collect_bounded(edges)
     if table is not None and table.column("src").null_count == 0:
         return _local_components(edges.sparkSession, table, edges.schema["src"])
@@ -529,22 +531,19 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     # form re-joined the result back onto labels — a second join and
     # coalesce per round, pure overhead since min(self ∪ neighbors)
     # says the same thing).
-    # eplus/labels/per-round checkpoints are LAZY (eager=False): the
-    # round's convergence collect below is the materializing action, so
-    # each round costs ONE job (compute + persist + sum in a single
-    # pass) instead of two (eager checkpoint job + sum job), and the
-    # two seed relations materialize inside round 1's job instead of
-    # two more up-front jobs (r15 optimization: guide §1.2/§2.4 —
-    # fewer sequential actions; lineage truncation is identical, the
-    # LogicalRDD plan barrier exists as soon as localCheckpoint
-    # returns, eager or not). Only ``edges`` stays eager: it fences the
-    # potentially expensive upstream pair DAG exactly once.
-    eplus = edges.unionAll(
+    # eplus/labels/per-round persists are LAZY: the round's convergence
+    # collect below is the materializing action, so each round costs
+    # ONE job (compute + persist + sum in a single pass), and the two
+    # seed relations materialize inside round 1's job instead of two
+    # more up-front jobs (r15 optimization: guide §1.2/§2.4 — fewer
+    # sequential actions). Only ``edges`` is materialized up front: it
+    # fences the potentially expensive upstream pair DAG exactly once.
+    # Persists, not localCheckpoints: release_cached() cannot free a
+    # checkpointed RDD, so each build would pin it for the session.
+    eplus = tracked_persist(edges.unionAll(
         nodes.select(F.col("node").alias("src"), F.col("node").alias("dst"))
-    ).localCheckpoint(eager=False)
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint(
-        eager=False
-    )
+    ))
+    labels = tracked_persist(nodes.select("node", F.col("node").alias("label")))
 
     # One hop per materialization round. (A two-hop-per-round variant
     # was measured at sf0.1 and is SLOWER here: near-dup clusters have
@@ -553,12 +552,11 @@ def connected_components(pairs: DataFrame, a_col: str = "doc_a", b_col: str = "d
     # high-diameter graphs — not this workload.)
     prev_sum = None
     for _ in range(max_iterations):
-        labels = (
+        labels = tracked_persist(
             eplus.join(labels, eplus.dst == labels.node)
             .groupBy("src")
             .agg(F.min("label").alias("label"))
             .select(F.col("src").alias("node"), "label")
-            .localCheckpoint(eager=False)
         )
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:

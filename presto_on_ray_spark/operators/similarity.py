@@ -19,10 +19,10 @@ from typing import NamedTuple
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from presto_on_ray_spark import store
+from presto_on_ray_spark import session, store
 from presto_on_ray_spark.caching import tracked_persist
 from presto_on_ray_spark.operators._util import t
-from presto_on_ray_spark.session import local_relation
+from presto_on_ray_spark.session import collect_bounded, local_relation
 from presto_on_ray_spark.sources import read_parquet
 from presto_on_ray_spark.suite import query
 
@@ -1045,7 +1045,15 @@ def encode_into_ann_index(batch_v, index: AnnIndex):
     append: quantizers are sample-trained artifacts that do not move
     with corpus growth (retraining them is a REBUILD — a new index
     generation — exactly like the dedup side's rebuild-vs-merge
-    split)."""
+    split).
+
+    This is the Spark plan. merge_into_saved_ann_index chooses its tier
+    on the collected batch and quantizers: when they fit
+    ``session.LOCAL_LOOP_ROWS`` it encodes the same rows in numpy
+    (_local_codes), and it calls this above the bound and on each
+    fallback it names (a NULL vector or element, a wrong dimension, a
+    NULL or repeated cell or (j, c), ...). Called directly, as by
+    merge_into_ann_index, it always runs on Spark."""
     asg = _ivfpq_residuals(batch_v, index.cents)
     return _encode_sub(
         _pq_subvectors(asg, vec_col="rv", carry=("cell",)), index.codebook
@@ -1118,6 +1126,178 @@ def _ivfpq_scores(v, index: AnnIndex, n_queries: int, nprobe: int):
     )
 
 
+# ---------------------------------------------------------------------------
+# The IVF-PQ driver-local tier (merge_into_saved_ann_index's admit and
+# ivfpq_topk): relations with at most session.LOCAL_LOOP_ROWS rows are
+# collected once and the encode and the ADC scores run in int64 numpy —
+# the Spark plans' integers, ties and row multisets without their job
+# cycles. The helpers return None where the Spark plan must run instead.
+# ---------------------------------------------------------------------------
+def _np_vectors(col, dim: int = _PQ_M * _PQ_SUB):
+    """A collected array<integer> column as an (n, dim) int64 matrix;
+    None when a vector or an element is NULL or a vector's length is not
+    ``dim`` (the Spark plans' zip_with would pad it with NULLs)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = col.combine_chunks()
+    if (
+        not pa.types.is_integer(col.type.value_type)
+        or col.null_count
+        or pc.any(pc.not_equal(pc.list_value_length(col), dim)).as_py()
+    ):
+        return None
+    flat = pc.list_flatten(col)
+    if flat.null_count:
+        return None
+    return flat.to_numpy().astype(np.int64).reshape(-1, dim)
+
+
+def _sq_dists(a, b):
+    """Exact int64 squared L2 between every row of ``a`` and every row
+    of ``b``, computed in row chunks of at most ~4M differences."""
+    import numpy as np
+
+    out = np.empty((len(a), len(b)), np.int64)
+    step = max(1, (1 << 22) // max(1, b.size))
+    for i in range(0, len(a), step):
+        out[i : i + step] = ((a[i : i + step, None, :] - b[None]) ** 2).sum(-1)
+    return out
+
+
+def _np_quantizers(index: AnnIndex):
+    """The index's collected quantizers as numpy arrays ``(cell, cv, j,
+    c, cw)``: cents sorted by cell, codebook rows sorted by (j, c), the
+    rows whose j names no subspace dropped (no subvector joins them).
+    None when either relation is over the bound or has a NULL, a wrong
+    dimension or a repeated cell or (j, c), or cents is empty."""
+    import numpy as np
+
+    cents = collect_bounded(index.cents)
+    book = None if cents is None else collect_bounded(index.codebook)
+    if book is None or cents.num_rows == 0:
+        return None
+    if cents.column("cell").null_count or any(
+        book.column(n).null_count for n in ("j", "c")
+    ):
+        return None
+    cv, cw = _np_vectors(cents.column("cv")), _np_vectors(book.column("cw"), _PQ_SUB)
+    if cv is None or cw is None:
+        return None
+    cell = cents.column("cell").to_numpy().astype(np.int64)
+    j, c = (book.column(n).to_numpy().astype(np.int64) for n in ("j", "c"))
+    o, p = np.argsort(cell, kind="stable"), np.lexsort((c, j))
+    cell, cv, j, c, cw = cell[o], cv[o], j[p], c[p], cw[p]
+    if np.any(cell[1:] == cell[:-1]) or np.any((j[1:] == j[:-1]) & (c[1:] == c[:-1])):
+        return None
+    keep = (j >= 0) & (j < _PQ_M)
+    return cell, cv, j[keep], c[keep], cw[keep]
+
+
+def _local_codes(x, quant):
+    """encode_into_ann_index in numpy: ``x``'s rows (an (n, _PQ_M x
+    _PQ_SUB) int64 matrix) assigned to their integer-L2-nearest cell
+    (smallest-cell ties) and their residual subvectors to the nearest
+    codeword (smallest-c ties). Returns (row, cell, j, code) arrays, one
+    entry per row and subspace that has codewords."""
+    import numpy as np
+
+    cell, cv, bj, bc, cw = quant
+    near = np.argmin(_sq_dists(x, cv), axis=1)
+    res = x - cv[near]
+    rows, parts = np.arange(len(x)), [(np.empty(0, np.int64),) * 4]
+    for j in np.unique(bj).tolist():
+        sel = bj == j
+        d2 = _sq_dists(res[:, j * _PQ_SUB : (j + 1) * _PQ_SUB], cw[sel])
+        parts.append((rows, cell[near], np.full(len(x), j), bc[sel][np.argmin(d2, axis=1)]))
+    return [np.concatenate(p) for p in zip(*parts)]
+
+
+def _local_ivfpq_topk(v, index: AnnIndex, n_queries: int, k: int, nprobe: int):
+    """ivfpq_topk's driver-local tier: _ivfpq_scores plus the rank, in
+    numpy over one collect each of the query vectors, the codes and the
+    quantizers, returned as a local_relation; None when the Spark plan
+    must run (see ivfpq_topk). Probes are each query's nprobe nearest
+    cells by (d2, cell); the ADC table entry of a probe and codeword is
+    the integer squared L2 of the query residual's subvector; a code row
+    adds the entry its (cell, j, code) matches, so rows naming an unknown
+    cell or codeword add nothing and duplicated rows add twice, as in
+    the Spark join. Self-pairs are skipped; sums are int64 ``np.add.at``."""
+    import numpy as np
+    from pyspark.sql.types import LongType, StructField, StructType
+
+    bound = session.LOCAL_LOOP_ROWS
+    q = collect_bounded(v.filter(F.col("vec_id") < n_queries))
+    codes = None if q is None else collect_bounded(index.codes)
+    quant = None if codes is None else _np_quantizers(index)
+    if quant is None or any(col.null_count for col in codes.columns):
+        return None
+    qv, qid = _np_vectors(q.column("qv")), q.column("vec_id").to_numpy()
+    if qv is None or len(np.unique(qid)) < len(qid):
+        return None
+    cell, cv, bj, bc, cw = quant
+    nq, npr = len(qid), min(max(nprobe, 0), len(cell))
+    if nq * (len(cell) + npr * len(bj)) > bound:
+        return None
+    probe = np.argsort(_sq_dists(qv, cv), axis=1, kind="stable")[:, :npr]
+    # the code rows that match a table entry, grouped by cell rank
+    vid, ccell, cj, ccode = (
+        codes.column(n).to_numpy().astype(np.int64) for n in ("vec_id", "cell", "j", "code")
+    )
+    ci = np.minimum(np.searchsorted(cell, ccell), len(cell) - 1)
+    vals = np.unique(np.concatenate([bc, ccode]))
+    bkey = bj * len(vals) + np.searchsorted(vals, bc)
+    ckey = cj * len(vals) + np.searchsorted(vals, ccode)
+    w = np.minimum(np.searchsorted(bkey, ckey), max(len(bkey) - 1, 0))
+    ok = (cell[ci] == ccell) & (cj >= 0) & (cj < _PQ_M)
+    ok &= (bkey[w] == ckey) if len(bkey) else False
+    order = np.flatnonzero(ok)[np.argsort(ci[ok], kind="stable")]
+    per_cell = np.bincount(ci[order], minlength=len(cell))
+    starts = np.cumsum(per_cell) - per_cell
+    # every (query, probe) x code-row-in-the-probed-cell candidate
+    lengths = per_cell[probe].ravel()
+    if lengths.sum() > bound:
+        return None
+    qp = np.repeat(np.arange(nq * npr), lengths)
+    rows = order[
+        np.arange(len(qp))
+        - np.repeat(np.cumsum(lengths) - lengths, lengths)
+        + np.repeat(starts[probe].ravel(), lengths)
+    ]
+    qi = qp // max(npr, 1)
+    keep = vid[rows] != qid[qi]
+    qp, qi, rows = qp[keep], qi[keep], rows[keep]
+    # ADC tables: qd2[query, probe, codeword row]
+    res = (qv[:, None, :] - cv[probe]).reshape(nq * npr, _PQ_M, _PQ_SUB)
+    qd2 = np.empty((nq * npr, len(bkey)), np.int64)
+    for j in np.unique(bj).tolist():
+        qd2[:, bj == j] = _sq_dists(res[:, j], cw[bj == j])
+    d = qd2[qp, w[rows]]
+    # sum per (query, vec_id), then rank by (adc_dist, vec_id)
+    cid = vid[rows]
+    o = np.lexsort((cid, qi))
+    qi, cid, d = qi[o], cid[o], d[o]
+    first = np.ones(len(qi), bool)
+    first[1:] = (qi[1:] != qi[:-1]) | (cid[1:] != cid[:-1])
+    dist = np.zeros(int(first.sum()), np.int64)
+    np.add.at(dist, np.cumsum(first) - 1, d)
+    gq, gc = qi[first], cid[first]
+    o = np.lexsort((gc, dist, gq))
+    gq, gc, dist = gq[o], gc[o], dist[o]
+    top = np.arange(len(gq)) - np.searchsorted(gq, gq) < k
+    schema = StructType([
+        StructField("qid", v.schema["vec_id"].dataType),
+        StructField("cid", index.codes.schema["vec_id"].dataType),
+        StructField("adc_dist", LongType()),
+    ])
+    return local_relation(
+        v.sparkSession,
+        zip(qid[gq[top]].tolist(), gc[top].tolist(), dist[top].tolist()),
+        schema,
+    )
+
+
 def ivfpq_topk(
     spark,
     sf_dir,
@@ -1127,11 +1307,25 @@ def ivfpq_topk(
     index: AnnIndex | None = None,
 ):
     """IVF-PQ ADC top-k: build (or accept) the index, score via
-    _ivfpq_scores, rank per query by (adc_dist, vec_id)."""
+    _ivfpq_scores, rank per query by (adc_dist, vec_id).
+
+    The tier is chosen here, on the collected relations: when the query
+    vectors (vec_id < n_queries), the codes and both quantizers each
+    have at most ``session.LOCAL_LOOP_ROWS`` rows, _local_ivfpq_topk
+    scores and ranks in numpy and the result is a local_relation. The
+    Spark plan runs over the bound, and on a NULL vector or element, a
+    dimension other than _PQ_M x _PQ_SUB, a NULL or repeated cell or
+    (j, c) in the quantizers, an empty cents relation, a repeated query
+    id, a NULL in a codes column, or a candidate or ADC table larger
+    than the bound. _ivfpq_scores' other callers (the rerank, filtered
+    and refined keys) always run on Spark."""
     e = t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", quantized(F.col("embedding")).alias("qv"))
     if index is None:
         index = build_ann_index(v)
+    top = _local_ivfpq_topk(v, index, n_queries, k, nprobe)
+    if top is not None:
+        return top
     score = _ivfpq_scores(v, index, n_queries, nprobe)
     w = Window.partitionBy("qid").orderBy(F.col("adc_dist"), F.col("vec_id"))
     return (
@@ -2051,17 +2245,61 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     )
 
 
+def _ann_null_ids(where: str) -> str:
+    return (
+        f"merge into {where}: the batch contains NULL vec_ids — "
+        f"they would encode into code rows no query, guard, or "
+        f"resume probe can ever match. Filter or key them first."
+    )
+
+
+def _ann_repeated_id(where: str, vec_id, k: int) -> str:
+    return (
+        f"merge into {where}: batch vec_id {vec_id} "
+        f"appears {k} times in the batch — the encode "
+        f"argmin would silently keep one arbitrary vector. "
+        f"Deduplicate the batch first."
+    )
+
+
+def _ann_hit_probe(index: AnnIndex, ids, where: str) -> None:
+    """Refuse a batch vec_id already in the index — re-merged ids
+    duplicate code rows and silently DOUBLE ADC scores — via an early-
+    terminating limit-1 scan of codes against the BROADCAST ``ids``
+    relation (never a shuffle or full aggregate of the codes relation;
+    the dedup side's _check_new_doc_ids is the reference shape)."""
+    hit = index.codes.join(F.broadcast(ids), "vec_id").limit(1).collect()
+    if hit:
+        raise ValueError(
+            f"merge into {where}: batch vec_id {hit[0]['vec_id']} is "
+            f"already in the saved index — re-merging duplicates code "
+            f"rows and silently doubles ADC scores. Deduplicate the "
+            f"batch against the index first, or pass resume=True if "
+            f"this is a replayed delivery (it skips ids an earlier "
+            f"merge already committed)."
+        )
+
+
+def _ann_committed_ids(index: AnnIndex, ids) -> list:
+    """The vec_ids of the ``ids`` relation already in the index: ONE
+    bounded codes scan (broadcast ids semi-join), collected — batch-
+    sized by construction."""
+    return [
+        r["vec_id"]
+        for r in index.codes.join(F.broadcast(ids), "vec_id")
+        .select("vec_id")
+        .distinct()
+        .collect()
+    ]
+
+
 def _ann_batch_guard(index: AnnIndex, batch_v, where: str, skip_hit: bool = False):
     """Two BOUNDED probes dispatching the admission hazards. (1) a
     vec_id that is NULL (neither probe's join can see it, and it
     would encode into untraceable NULL-keyed code rows) or duplicated
     WITHIN the batch (the encode argmin would silently collapse the
     duplicates to one arbitrary vector) — via a batch-sized groupBy;
-    (2) a batch vec_id already in the index — re-merged ids duplicate
-    code rows and silently DOUBLE ADC scores — via an early-
-    terminating limit-1 scan of codes against the BROADCAST batch ids
-    (never a shuffle or full aggregate of the codes relation; the
-    dedup side's _check_new_doc_ids is the reference shape).
+    (2) a batch vec_id already in the index (_ann_hit_probe).
     ``skip_hit=True`` elides probe (2) when the caller just resume-
     filtered the batch against the SAME snapshotted codes listing —
     the probe would be a guaranteed-empty second full scan."""
@@ -2075,35 +2313,10 @@ def _ann_batch_guard(index: AnnIndex, batch_v, where: str, skip_hit: bool = Fals
     if dup:
         r = dup[0]
         if r["vec_id"] is None:
-            raise ValueError(
-                f"merge into {where}: the batch contains NULL vec_ids — "
-                f"they would encode into code rows no query, guard, or "
-                f"resume probe can ever match. Filter or key them first."
-            )
-        raise ValueError(
-            f"merge into {where}: batch vec_id {r['vec_id']} "
-            f"appears {r['k']} times in the batch — the encode "
-            f"argmin would silently keep one arbitrary vector. "
-            f"Deduplicate the batch first."
-        )
-    if skip_hit:
-        return
-    hit = (
-        index.codes.join(
-            F.broadcast(batch_v.select("vec_id").distinct()), "vec_id"
-        )
-        .limit(1)
-        .collect()
-    )
-    if hit:
-        raise ValueError(
-            f"merge into {where}: batch vec_id {hit[0]['vec_id']} is "
-            f"already in the saved index — re-merging duplicates code "
-            f"rows and silently doubles ADC scores. Deduplicate the "
-            f"batch against the index first, or pass resume=True if "
-            f"this is a replayed delivery (it skips ids an earlier "
-            f"merge already committed)."
-        )
+            raise ValueError(_ann_null_ids(where))
+        raise ValueError(_ann_repeated_id(where, r["vec_id"], r["k"]))
+    if not skip_hit:
+        _ann_hit_probe(index, batch_v.select("vec_id").distinct(), where)
 
 
 def merge_into_saved_ann_index(
@@ -2117,7 +2330,19 @@ def merge_into_saved_ann_index(
     run inside the _ANN_WRITING marker (a guard probed before acquiring
     would race a concurrent merge: both probes pass, both commit, scores
     silently double). ``resume=True`` skips batch ids already in the
-    index — a replayed delivery whose earlier merge committed them."""
+    index — a replayed delivery whose earlier merge committed them.
+
+    The tier is chosen here, inside the marker, on the collected batch
+    and quantizers (_local_admit): when each has at most
+    ``session.LOCAL_LOOP_ROWS`` rows, the guard's NULL and repeated-id
+    checks and the encode run in numpy on the driver, the already-in-
+    index (or resume's committed-ids) probe stays one bounded Spark
+    probe, and the code rows are appended as one file. The Spark plan
+    (_ann_batch_guard + encode_into_ann_index) runs over the bound, and
+    on a batch vec_id type other than the codes', a NULL vector or
+    element, a dimension other than _PQ_M x _PQ_SUB, an empty cents
+    relation, or a NULL or repeated cell or (j, c) in the quantizers.
+    Both tiers raise the same errors and append the same code rows."""
     spark_path, os_path = store.local_paths(
         path,
         "merge_into_saved_ann_index requires the local generational "
@@ -2128,43 +2353,84 @@ def merge_into_saved_ann_index(
     with store.writer(os_path, _ANN_WRITING, _ann_held(os_path)):
         live = _ann_generation(os_path, path)
         index = _load_ann_relations(spark, f"{spark_path}/{live}")
-        if resume:
-            # ONE bounded codes scan (broadcast batch-ids semi-join),
-            # COLLECTED — batch-sized by construction — so the filter
-            # below costs nothing downstream: a lazy committed plan
-            # would re-run its codes scan at every subsequent action.
-            # The collected ids go back in as a parallelized broadcast
-            # anti-join, NOT an isin() literal list: a backlog replay
-            # can re-deliver ~10^6 committed ids in one batch, and a
-            # million-node IN expression breaks analysis long before
-            # the data would. (The anti-join also keeps NULL-id rows
-            # for the guard to refuse by name — ~isin(NULLs) would
-            # drop or keep them depending on what ELSE was committed.)
-            committed = (
-                index.codes.join(
-                    F.broadcast(batch_v.select("vec_id").distinct()),
-                    "vec_id",
+        new_codes = _local_admit(spark, index, batch_v, path, resume)
+        if new_codes is None:
+            if resume:
+                # The committed ids are COLLECTED, so the filter below
+                # costs nothing downstream: a lazy committed plan would
+                # re-run its codes scan at every subsequent action. They
+                # go back in as a parallelized broadcast anti-join, NOT
+                # an isin() literal list: a backlog replay can re-deliver
+                # ~10^6 committed ids in one batch, and a million-node IN
+                # expression breaks analysis long before the data would.
+                # (The anti-join also keeps NULL-id rows for the guard to
+                # refuse by name — ~isin(NULLs) would drop or keep them
+                # depending on what ELSE was committed.)
+                committed = _ann_committed_ids(
+                    index, batch_v.select("vec_id").distinct()
                 )
-                .select("vec_id")
-                .distinct()
-                .collect()
-            )
-            if committed:
-                batch_v = batch_v.join(
-                    F.broadcast(
-                        local_relation(spark, committed, "vec_id long")
-                    ),
-                    "vec_id",
-                    "left_anti",
-                )
-        _ann_batch_guard(index, batch_v, path, skip_hit=resume)
-        new_codes = encode_into_ann_index(batch_v, index)
+                if committed:
+                    batch_v = batch_v.join(
+                        F.broadcast(
+                            local_relation(
+                                spark, [(i,) for i in committed], "vec_id long"
+                            )
+                        ),
+                        "vec_id",
+                        "left_anti",
+                    )
+            _ann_batch_guard(index, batch_v, path, skip_hit=resume)
+            new_codes = encode_into_ann_index(batch_v, index)
 
         def write(gen):
             store.link_relation(os_path, live, gen, _ANN_RELATIONS)
             new_codes.write.mode("append").parquet(f"{spark_path}/{gen}/codes")
 
         store.commit(os_path, write)
+
+
+def _local_admit(spark, index: AnnIndex, batch_v, where: str, resume: bool):
+    """merge_into_saved_ann_index's driver-local tier: the batch's code
+    rows, encoded in numpy, as a one-partition local_relation in the
+    codes' own schema; None when the Spark plan must run instead (see
+    merge_into_saved_ann_index). Raises the Spark plan's guard errors:
+    NULL and repeated ids are checked on the collected batch (after
+    resume drops the committed ids, keeping NULL ids), the already-in-
+    index probe is one bounded Spark probe against the broadcast ids."""
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    schema = index.codes.schema
+    if batch_v.schema["vec_id"].dataType != schema["vec_id"].dataType:
+        return None
+    batch = collect_bounded(batch_v.select("vec_id", "qv"))
+    x = None if batch is None else _np_vectors(batch.column("qv"))
+    quant = None if x is None else _np_quantizers(index)
+    if quant is None:
+        return None
+    if batch.column("vec_id").null_count:
+        raise ValueError(_ann_null_ids(where))
+    ids = batch.column("vec_id").to_numpy()
+
+    def id_relation(vec_ids):
+        return local_relation(
+            spark, [(i,) for i in vec_ids.tolist()], StructType([schema["vec_id"]])
+        )
+
+    if resume:
+        keep = ~np.isin(ids, _ann_committed_ids(index, id_relation(np.unique(ids))))
+        ids, x = ids[keep], x[keep]
+    uniq, n = np.unique(ids, return_counts=True)
+    if np.any(n > 1):
+        i = int(np.argmax(n > 1))
+        raise ValueError(_ann_repeated_id(where, int(uniq[i]), int(n[i])))
+    if not resume:
+        _ann_hit_probe(index, id_relation(uniq), where)
+    row, cell, j, code = _local_codes(x, quant)
+    cols = {"vec_id": ids[row], "cell": cell, "j": j, "code": code}
+    return local_relation(
+        spark, zip(*(cols[f.name].tolist() for f in schema)), schema
+    ).coalesce(1)
 
 
 def verify_ann_index(index: AnnIndex, n_cells: int | None = None) -> dict:

@@ -52,10 +52,11 @@ def local_relation(
     return spark.createDataFrame(table, schema)
 
 
-# The driver-local tier for bounded iterative loops and the near-dup
-# exact tier: an operator whose relation has at most this many rows
-# collects it once and computes on the driver (the near-dup tier also
-# caps its prefix collisions at it); a larger one runs its distributed
+# The driver-local tier for bounded iterative loops, the near-dup exact
+# tier and the saved ANN index's admit and top-k: an operator whose
+# relation has at most this many rows collects it once and computes on
+# the driver (the near-dup tier also caps its prefix collisions at it,
+# the ANN top-k its candidate pairs); a larger one runs its distributed
 # jobs. Read at call time, so tests can force either tier by setting it.
 LOCAL_LOOP_ROWS = 1_000_000
 
@@ -70,8 +71,12 @@ def collect_bounded(df: DataFrame):
     so a relation that fits is iterated in numpy instead. The near-dup
     exact tier (``dedup._local_jaccard_pairs``) calls it on its
     persisted shingle relation in place of the prefix join, verify and
-    their ~25 jobs. At most ``LOCAL_LOOP_ROWS + 1`` rows are ever
-    collected.
+    their ~25 jobs. The saved ANN index's admit
+    (``similarity._local_admit``) calls it on the batch and the
+    quantizers, and ``ivfpq_topk`` (``similarity._local_ivfpq_topk``) on
+    the query vectors, the codes and the quantizers, in place of the
+    encode and ADC scoring plans. At most ``LOCAL_LOOP_ROWS + 1`` rows
+    are ever collected.
     """
     table = df.limit(LOCAL_LOOP_ROWS + 1).toArrow()
     return None if table.num_rows > LOCAL_LOOP_ROWS else table

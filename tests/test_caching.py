@@ -129,8 +129,9 @@ def test_split_after_clusters_reuses_component_relation(spark, sf_dir, monkeypat
 
 # dedup_neardup_clusters' jobs when its shingle relation fits the
 # driver-local bound: the shingle collect, connected components' edge
-# checkpoint and collect, and the write (5 measured at sf0.001; 25
-# when the prefix join and verify ran as Spark jobs)
+# collect (which fills the edge persist), and the write (5 measured at
+# sf0.001, as with the earlier eager edge checkpoint; 25 when the
+# prefix join and verify ran as Spark jobs)
 NEARDUP_LOCAL_MAX_JOBS = 6
 
 
@@ -144,6 +145,57 @@ def test_neardup_clusters_job_count_on_local_tier(spark, sf_dir):
     )
     release_cached()
     assert jobs <= NEARDUP_LOCAL_MAX_JOBS
+
+
+def test_component_builds_leave_no_persistent_rdds(spark, sf_dir, loop_tiers):
+    """connected_components' edge set and rounds are tracked persists:
+    after a build on either tier, release_cached() frees them all."""
+    from presto_on_ray_spark.operators.dedup import _neardup_exact
+    from presto_on_ray_spark.sources.tables import load_table
+
+    def run():
+        release_cached()
+        _neardup_exact(load_table(spark, sf_dir, "documents")).collect()
+        release_cached()
+        return _n_persistent_rdds(spark)
+
+    assert loop_tiers(run) == (0, 0)
+
+
+# The saved ANN admit and top-k when their relations fit the driver-local
+# bound: the merge's batch, cents and codebook collects, the
+# already-in-index probe and the one-file write (6 measured at sf0.01;
+# 10 on the Spark plans); the top-k's query, codes, cents and codebook
+# collects (4; 7 on the Spark plans).
+ANN_MERGE_LOCAL_MAX_JOBS = 8
+ANN_TOPK_LOCAL_MAX_JOBS = 4
+
+
+def test_ann_admit_and_topk_job_counts_on_local_tier(spark, sf_correct, tmp_path):
+    from pyspark.sql import functions as F
+
+    from presto_on_ray_spark.operators import similarity
+    from presto_on_ray_spark.sources.tables import load_table
+
+    v = load_table(spark, sf_correct, "embeddings").select(
+        "vec_id", similarity.quantized(F.col("embedding")).alias("qv"))
+    p = str(tmp_path / "ann")
+    similarity.save_ann_index(similarity.build_ann_index(v.filter(F.col("vec_id") < 400)), p)
+    release_cached()
+    merge_jobs, _ = _jobs_in_group(
+        spark, "ann-merge-local",
+        lambda: similarity.merge_into_saved_ann_index(
+            spark, p, v.filter(F.col("vec_id") >= 400)),
+    )
+    topk_jobs, top = _jobs_in_group(
+        spark, "ann-topk-local",
+        lambda: similarity.ivfpq_topk(
+            spark, sf_correct, index=similarity.load_ann_index(spark, p)).collect(),
+    )
+    release_cached()
+    assert top
+    assert merge_jobs <= ANN_MERGE_LOCAL_MAX_JOBS
+    assert topk_jobs <= ANN_TOPK_LOCAL_MAX_JOBS
 
 
 def test_release_cached_forces_recompute(spark, sf_dir, monkeypatch):

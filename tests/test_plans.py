@@ -272,7 +272,7 @@ def test_pq_plan_shape(spark, sf_dir):
         release_cached()  # the PQ pipeline tracked-persists its subvectors
 
 
-def test_ivfpq_plan_shape(spark, sf_dir):
+def test_ivfpq_plan_shape(spark, sf_dir, monkeypatch):
     """The IVF-PQ scale contract: the ONLY nested-loop passes are the
     two bounded centroid argmins (vectors x n_cells and queries x
     n_cells — an 8-row broadcast side by construction), codebook and
@@ -283,11 +283,14 @@ def test_ivfpq_plan_shape(spark, sf_dir):
     formatted plan's NUMBERED node section, where each physical node
     appears exactly once (the tree rendering above it repeats shared
     subtrees; counting there double-counts — the vacuous/inflated
-    plan-pin trap)."""
+    plan-pin trap). The fixtures fit ivfpq_topk's driver-local tier,
+    so the Spark tier, the plan that runs above the bound, is forced."""
     import re
 
+    from presto_on_ray_spark import session
     from presto_on_ray_spark.caching import release_cached
 
+    monkeypatch.setattr(session, "LOCAL_LOOP_ROWS", 0)
     try:
         for name in ("similarity_ivfpq_adc_topk", "similarity_ivfpq_rerank_topk"):
             plan = explain_formatted(suite.QUERIES[name](spark, sf_dir))
