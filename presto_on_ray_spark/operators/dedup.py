@@ -338,30 +338,8 @@ def _ngram_jaccard_pairs(d: DataFrame) -> DataFrame:
         .filter((F.col("op") + suffix_min) * 8 >= 3 * (F.col("na") + F.col("nb")))
         .select("doc_a", "doc_b")
     )
-    # Exact verification via co-occurrence counts: fan candidate pairs
-    # out to doc_a's shingles, keep those doc_b also has (shingle-key
-    # join), count matches per pair. Shuffle volume is bounded by
-    # |candidates| x shingles-per-doc -- the prefix filter already made
-    # |candidates| small -- and the aggregation state is one counter
-    # per pair (vs the old per-doc collect_list array).
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    sh_a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
-    sh_b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
-    common = (
-        cand.join(sh_a, "doc_a")
-        .join(sh_b, ["doc_b", "sh"])
-        .groupBy("doc_a", "doc_b")
-        .agg(F.count("*").alias("c"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n").alias("nb"))
-    jac = F.col("c").cast("double") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        common.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .filter(jac >= t_thresh)
-        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
-    )
+    # the prefix filter already made |candidates| small
+    return verify_jaccard(cand, sh, t_thresh)
 
 
 def lsh_candidates(d: DataFrame, n_bands: int = _LSH_BANDS,
@@ -781,11 +759,14 @@ def _ragged_offsets(lengths):
 
 def verify_jaccard(cand: DataFrame, sh: DataFrame, t_thresh: float) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs against the shingle
-    relation ``sh`` (doc_id, sh): count co-occurring shingles per pair
-    (O(1) aggregation state — never a per-document array), join sizes,
-    keep pairs with true Jaccard >= t. The standard verify stage every
-    LSH candidate generator feeds into; shuffle volume is bounded by
-    |candidates| x shingles-per-doc."""
+    relation ``sh`` (doc_id, sh): fan each pair out to doc_a's shingles,
+    keep those doc_b also has (a shingle-key join) and count them per
+    pair (O(1) aggregation state — never a per-document array), join
+    sizes, keep pairs with true Jaccard >= t. Returns (doc_a, doc_b,
+    jaccard), jaccard rounded to 4 places; readers of the pairs alone
+    select them, and Catalyst prunes the score. The one verify stage
+    both the prefix-filter and the LSH candidate generators feed into;
+    shuffle volume is bounded by |candidates| x shingles-per-doc."""
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     sh_a = sh.select(F.col("doc_id").alias("doc_a"), "sh")
     sh_b = sh.select(F.col("doc_id").alias("doc_b"), "sh")
@@ -802,7 +783,7 @@ def verify_jaccard(cand: DataFrame, sh: DataFrame, t_thresh: float) -> DataFrame
         common.join(sa, "doc_a")
         .join(sb, "doc_b")
         .filter(jac >= t_thresh)
-        .select("doc_a", "doc_b")
+        .select("doc_a", "doc_b", F.round(jac, 4).alias("jaccard"))
     )
 
 
@@ -821,10 +802,9 @@ def dedup_lsh_keepers(spark, sf_dir):
     this oracle), so the output equals the exact keeper set computed by
     the recursive-CTE oracle. Same relation as dedup_neardup_clusters
     via a completely independent candidate path."""
-    t_thresh = 0.6
-    cand = dedup_minhash_lsh(spark, sf_dir)
-    d = t(spark, sf_dir, "documents")
-    return _keepers(verify_jaccard(cand, _doc_shingles(d), t_thresh))
+    return _lsh_keepers(
+        t(spark, sf_dir, "documents"), _LSH_BANDS, _NUM_HASHES // _LSH_BANDS, 0.6
+    )
 
 
 @query("dedup_minhash_clusters")
@@ -969,22 +949,26 @@ def lsh_dial(
     return best
 
 
-def _lsh_keepers_dialed(d: DataFrame, j: float, target_recall: float):
-    """dedup_lsh_keepers over the documents relation ``d`` with the
-    recall-bounded dial: lsh_dial-chosen banded candidates →
-    exact-Jaccard verify (precision exact by construction) → connected
-    components → min-id keeper. Per-pair candidate recall at the
-    threshold is >= target_recall by the S-curve bound; keeper recall
-    through connected components is higher still (a cluster is lost
-    only if EVERY pair linking it is missed). Built once per session
-    for each (dial, ``d`` plan), like _neardup_exact."""
-    n_bands, rows = lsh_dial(j, target_recall)
+def _lsh_keepers(d: DataFrame, n_bands: int, rows: int, j: float):
+    """LSH keepers over the documents relation ``d``: (n_bands x rows)
+    banded candidates → exact-Jaccard verify at ``j`` (precision exact
+    by construction) → connected components → min-id keeper. Built once
+    per session for each (dial, ``d`` plan), like _neardup_exact."""
 
     def build():
         cand = lsh_candidates(d, n_bands, rows)
         return _keepers(verify_jaccard(cand, _doc_shingles(d), j))
 
     return tracked_reuse(f"lsh_keepers:{n_bands}x{rows}@{j}", d, build)
+
+
+def _lsh_keepers_dialed(d: DataFrame, j: float, target_recall: float):
+    """_lsh_keepers on the recall-bounded dial lsh_dial(j,
+    target_recall). Per-pair candidate recall at the threshold is >=
+    target_recall by the S-curve bound; keeper recall through connected
+    components is higher still (a cluster is lost only if EVERY pair
+    linking it is missed)."""
+    return _lsh_keepers(d, *lsh_dial(j, target_recall), j)
 
 
 @query("dedup_lsh_keepers_bounded", oracle=_KEEPER_CC_ORACLE)

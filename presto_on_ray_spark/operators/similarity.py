@@ -536,10 +536,26 @@ def _pq_l2sq(a, b):
     )
 
 
-@query(
-    "similarity_pq_adc_topk",
-    oracle="""
-    WITH e AS (
+def _fold(sql: str, *steps: tuple[str, str]) -> str:
+    """``sql`` with each (old, new) step applied in order, where each
+    ``old`` must occur exactly once in the text it is applied to. A
+    derived oracle is its base oracle plus named substitutions, so a
+    reshaped base fails the import instead of silently pinning another
+    pipeline."""
+    for old, new in steps:
+        n = sql.count(old)
+        if n != 1:
+            raise ValueError(f"oracle anchor occurs {n} times, not once: {old!r}")
+        sql = sql.replace(old, new)
+    return sql
+
+
+# The flat-PQ oracle pipeline: quantize, the sampled codebook, encode, the
+# query ADC tables and the summed scores without self-pairs, ending in
+# score(qid, cid, adc_dist) like _IVFPQ_ORACLE_PIPELINE. Both PQ families
+# end in one of the two tails that follow it.
+_PQ_ORACLE_PIPELINE = """
+    e AS (
       SELECT vec_id,
              LIST_TRANSFORM(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT)) AS qv
       FROM embeddings
@@ -571,16 +587,54 @@ def _pq_l2sq(a, b):
     score AS (
       SELECT qt.qid, enc.vec_id AS cid, SUM(qt.qd2) AS adc_dist
       FROM enc JOIN qt ON enc.j = qt.j AND enc.c = qt.c
+      WHERE enc.vec_id <> qt.qid
       GROUP BY qt.qid, enc.vec_id
     )
+"""
+
+# The ADC top-4 per query, ranked by (adc_dist, cid).
+_ADC_TOPK_ORACLE_TAIL = """
     SELECT qid, cid, CAST(adc_dist AS BIGINT) AS adc_dist
     FROM (SELECT qid, cid, adc_dist,
                  ROW_NUMBER() OVER (PARTITION BY qid
                                     ORDER BY adc_dist, cid) AS rn
-          FROM score
-          WHERE qid <> cid)
+          FROM score)
     WHERE rn <= 4
-    """,
+    """
+
+# The 64-deep ADC shortlist per query, reranked by exact quantized cosine
+# to the top 4 (_pq_shortlist_rerank).
+_RERANK_ORACLE_TAIL = """
+    , shortlist AS (
+      SELECT qid, cid
+      FROM (SELECT qid, cid,
+                   ROW_NUMBER() OVER (PARTITION BY qid
+                                      ORDER BY adc_dist, cid) AS rn
+            FROM score)
+      WHERE rn <= 64
+    ),
+    rer AS (
+      SELECT s.qid, s.cid,
+             CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(q.qv) + 1),
+                           i -> q.qv[i] * c.qv[i])) AS DOUBLE)
+               / (SQRT(CAST(LIST_SUM(LIST_TRANSFORM(q.qv, x -> x * x)) AS DOUBLE))
+                  * SQRT(CAST(LIST_SUM(LIST_TRANSFORM(c.qv, x -> x * x)) AS DOUBLE))) AS cos
+      FROM shortlist s
+      JOIN e q ON q.vec_id = s.qid
+      JOIN e c ON c.vec_id = s.cid
+    )
+    SELECT qid, cid, ROUND(cos, 6) AS cosine
+    FROM (SELECT qid, cid, cos,
+                 ROW_NUMBER() OVER (PARTITION BY qid
+                                    ORDER BY cos DESC, cid) AS rn
+          FROM rer)
+    WHERE rn <= 4
+    """
+
+
+@query(
+    "similarity_pq_adc_topk",
+    oracle="WITH " + _PQ_ORACLE_PIPELINE + _ADC_TOPK_ORACLE_TAIL,
 )
 def similarity_pq_adc_topk(spark, sf_dir):
     """Product-quantization ANN, hash-verified end-to-end: encode
@@ -674,63 +728,7 @@ _PQ_SHORTLIST = 64
 
 @query(
     "similarity_pq_rerank_topk",
-    oracle="""
-    WITH e AS (
-      SELECT vec_id,
-             LIST_TRANSFORM(embedding, x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT)) AS qv
-      FROM embeddings
-    ),
-    sub AS (
-      SELECT vec_id, j, qv[(j * 8 + 1):(j * 8 + 8)] AS s
-      FROM e, (SELECT UNNEST(RANGE(0, 8)) AS j)
-    ),
-    cb AS (
-      SELECT j, vec_id AS c, s AS cw FROM sub WHERE vec_id < 16
-    ),
-    dists AS (
-      SELECT sub.vec_id, sub.j, cb.c,
-             LIST_SUM(LIST_TRANSFORM(RANGE(1, 9),
-                      i -> (s[i] - cw[i]) * (s[i] - cw[i]))) AS d2
-      FROM sub JOIN cb ON sub.j = cb.j
-    ),
-    enc AS (
-      SELECT vec_id, j, c
-      FROM (SELECT vec_id, j, c,
-                   ROW_NUMBER() OVER (PARTITION BY vec_id, j
-                                      ORDER BY d2, c) AS rn
-            FROM dists)
-      WHERE rn = 1
-    ),
-    qt AS (
-      SELECT vec_id AS qid, j, c, d2 AS qd2 FROM dists WHERE vec_id < 8
-    ),
-    shortlist AS (
-      SELECT qid, cid
-      FROM (SELECT qt.qid, enc.vec_id AS cid,
-                   ROW_NUMBER() OVER (PARTITION BY qt.qid
-                                      ORDER BY SUM(qt.qd2), enc.vec_id) AS rn
-            FROM enc JOIN qt ON enc.j = qt.j AND enc.c = qt.c
-            WHERE enc.vec_id <> qt.qid
-            GROUP BY qt.qid, enc.vec_id)
-      WHERE rn <= 64
-    ),
-    rer AS (
-      SELECT s.qid, s.cid,
-             CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(q.qv) + 1),
-                           i -> q.qv[i] * c.qv[i])) AS DOUBLE)
-               / (SQRT(CAST(LIST_SUM(LIST_TRANSFORM(q.qv, x -> x * x)) AS DOUBLE))
-                  * SQRT(CAST(LIST_SUM(LIST_TRANSFORM(c.qv, x -> x * x)) AS DOUBLE))) AS cos
-      FROM shortlist s
-      JOIN e q ON q.vec_id = s.qid
-      JOIN e c ON c.vec_id = s.cid
-    )
-    SELECT qid, cid, ROUND(cos, 6) AS cosine
-    FROM (SELECT qid, cid, cos,
-                 ROW_NUMBER() OVER (PARTITION BY qid
-                                    ORDER BY cos DESC, cid) AS rn
-          FROM rer)
-    WHERE rn <= 4
-    """,
+    oracle="WITH " + _PQ_ORACLE_PIPELINE + _RERANK_ORACLE_TAIL,
 )
 def similarity_pq_rerank_topk(spark, sf_dir):
     """The production PQ pattern, hash-verified end-to-end: ADC over
@@ -1415,16 +1413,7 @@ _IVFPQ_ORACLE_PIPELINE = """
 
 @query(
     "similarity_ivfpq_adc_topk",
-    oracle="WITH "
-    + _IVFPQ_ORACLE_PIPELINE
-    + """
-    SELECT qid, cid, CAST(adc_dist AS BIGINT) AS adc_dist
-    FROM (SELECT qid, cid, adc_dist,
-                 ROW_NUMBER() OVER (PARTITION BY qid
-                                    ORDER BY adc_dist, cid) AS rn
-          FROM score)
-    WHERE rn <= 4
-    """,
+    oracle="WITH " + _IVFPQ_ORACLE_PIPELINE + _ADC_TOPK_ORACLE_TAIL,
 )
 def similarity_ivfpq_adc_topk(spark, sf_dir):
     """IVF-PQ ANN (IVFADC), hash-verified end-to-end: the coarse
@@ -1459,39 +1448,9 @@ def similarity_ivfpq_adc_topk(spark, sf_dir):
     return ivfpq_topk(spark, sf_dir)
 
 
-# shared by the frozen explicit-dial key and the auto-depth key: at
-# every fixture SF the auto depth resolves to the same 64 (n_codes
-# <= 2000 → max(64, ceil(0.03*n)) = 64), so ONE oracle pins both.
-_IVFPQ_RERANK_ORACLE = (
-    "WITH "
-    + _IVFPQ_ORACLE_PIPELINE
-    + """
-    , shortlist AS (
-      SELECT qid, cid
-      FROM (SELECT qid, cid,
-                   ROW_NUMBER() OVER (PARTITION BY qid
-                                      ORDER BY adc_dist, cid) AS rn
-            FROM score)
-      WHERE rn <= 64
-    ),
-    rer AS (
-      SELECT s.qid, s.cid,
-             CAST(LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(q.qv) + 1),
-                           i -> q.qv[i] * c.qv[i])) AS DOUBLE)
-               / (SQRT(CAST(LIST_SUM(LIST_TRANSFORM(q.qv, x -> x * x)) AS DOUBLE))
-                  * SQRT(CAST(LIST_SUM(LIST_TRANSFORM(c.qv, x -> x * x)) AS DOUBLE))) AS cos
-      FROM shortlist s
-      JOIN e q ON q.vec_id = s.qid
-      JOIN e c ON c.vec_id = s.cid
-    )
-    SELECT qid, cid, ROUND(cos, 6) AS cosine
-    FROM (SELECT qid, cid, cos,
-                 ROW_NUMBER() OVER (PARTITION BY qid
-                                    ORDER BY cos DESC, cid) AS rn
-          FROM rer)
-    WHERE rn <= 4
-    """
-)
+# the base the auto-dial, filtered and lifecycle oracles below are
+# folded from
+_IVFPQ_RERANK_ORACLE = "WITH " + _IVFPQ_ORACLE_PIPELINE + _RERANK_ORACLE_TAIL
 
 
 @query("similarity_ivfpq_rerank_topk", oracle=_IVFPQ_RERANK_ORACLE)
@@ -1507,11 +1466,10 @@ def similarity_ivfpq_rerank_topk(spark, sf_dir):
     _pq_shortlist_rerank the flat-PQ keys use: at 100 TB it fetches
     _PQ_SHORTLIST raw vectors per query by id — a semi-join against
     the vector store — while everything before it reads codes."""
-    n_queries, k = 5, 4
-    e = t(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", quantized(F.col("embedding")).alias("qv"))
-    score = _ivfpq_scores(v, build_ann_index(v), n_queries, _IVFPQ_NPROBE)
-    return _pq_shortlist_rerank(score, v, n_queries, k)
+    return ivfpq_rerank_topk(
+        spark, sf_dir,
+        nprobe=_IVFPQ_NPROBE, shortlist=_PQ_SHORTLIST, n_cells=_IVFPQ_CELLS,
+    )
 
 
 # -- auto shortlist depth (round 13) ------------------------------------
@@ -1528,8 +1486,8 @@ def auto_shortlist_depth_n(n: int, floor_depth: int = _PQ_SHORTLIST,
                            frac: float = _AUTO_SHORTLIST_FRAC) -> int:
     """The ONE Python home of the shortlist dial (ADVICE r14):
     shortlist = max(floor_depth, ceil(frac * n)) for an already-known
-    corpus/filtered-set size n. Every entry point (auto_shortlist_depth
-    over a relation, ivfpq_rerank_topk, ivfpq_filtered_topk) delegates
+    corpus/filtered-set size n. auto_shortlist_depth (over a relation)
+    and ivfpq_rerank_topk (over the predicate-passing set) delegate
     here; the SQL oracles fold the same formula in verbatim."""
     import math
 
@@ -1585,6 +1543,7 @@ def auto_ivf_nprobe(n: int, n_cells: int, shortlist: int,
 def ivfpq_rerank_topk(
     spark,
     sf_dir,
+    predicate=None,
     n_queries: int = 5,
     k: int = 4,
     nprobe: int | None = None,
@@ -1593,27 +1552,41 @@ def ivfpq_rerank_topk(
     n_cells: int | None = None,
 ):
     """The production IVF-PQ entry point: IVFADC codes-only scoring →
-    shortlist → exact rerank. Every dial DEFAULTS to its corpus-sized
-    auto formula — shortlist = auto_shortlist_depth (r13), n_cells =
-    auto_ivf_cells (~sqrt n), nprobe = auto_ivf_nprobe (coverage
-    target over the shortlist) — from ONE bounded count; pass explicit
-    values to pin (the frozen oracle keys do). When ``index`` is
-    passed, its cell count is read from the broadcast-sized cents
-    relation (n_cells rows) rather than re-derived, so nprobe adapts
-    to the index actually being queried."""
+    shortlist → exact rerank, optionally among the vectors passing
+    ``predicate`` (a Column over the embeddings table's metadata; queries
+    need not pass it). The predicate-passing id set prunes the CODES
+    relation before ADC, so the shortlist is drawn from passing
+    candidates and cannot starve as the predicate gets selective.
+
+    Every unset dial defaults to its auto formula. shortlist =
+    auto_shortlist_depth_n and nprobe = auto_ivf_nprobe (a coverage
+    target over the shortlist) are sized on the passing set, the whole
+    corpus without a predicate; at a selective predicate nprobe reaches
+    its n_cells cap, ADC scores every passing code and the rerank
+    returns the exact cosine top-k over the passing set. A built
+    index's n_cells = auto_ivf_cells over the FULL corpus, since the
+    index serves every predicate; a passed ``index`` without
+    ``n_cells`` has its cell count read from its cents relation. Only
+    the relations an unset dial needs are counted, so a call with every
+    dial pinned (the frozen oracle keys) runs no job to build its plan."""
     e = t(spark, sf_dir, "embeddings")
     v = e.select("vec_id", quantized(F.col("embedding")).alias("qv"))
-    n = v.count() if (index is None or shortlist is None or nprobe is None) else 0
+    passing = v if predicate is None else e.filter(predicate).select("vec_id")
+    n = v.count() if index is None and n_cells is None else None
     if index is None:
         if n_cells is None:
             n_cells = auto_ivf_cells(n)
         index = build_ann_index(v, n_cells)
-    elif n_cells is None:
-        n_cells = index.cents.count()
-    if shortlist is None:
-        shortlist = auto_shortlist_depth_n(n)
-    if nprobe is None:
-        nprobe = auto_ivf_nprobe(n, n_cells, shortlist)
+    if predicate is not None:
+        index = index._replace(codes=index.codes.join(passing, "vec_id", "left_semi"))
+    if shortlist is None or nprobe is None:
+        nf = n if predicate is None and n is not None else passing.count()
+        if shortlist is None:
+            shortlist = auto_shortlist_depth_n(nf)
+        if nprobe is None:
+            if n_cells is None:
+                n_cells = index.cents.count()
+            nprobe = auto_ivf_nprobe(nf, n_cells, shortlist)
     score = _ivfpq_scores(v, index, n_queries, nprobe)
     return _pq_shortlist_rerank(score, v, n_queries, k, shortlist=shortlist)
 
@@ -1623,15 +1596,15 @@ def _ivfpq_auto_oracle() -> str:
     shortlist cut becomes max(64, ceil(0.03 * n_codes)) computed from
     the same relation, so the oracle is exact at ANY scale — not just
     the fixture SFs where the depth resolves to the 64 floor (sf1
-    verified: depth 600, hash-exact). Surgical insertion with a shape
-    assert, like the filtered key's."""
-    out = _IVFPQ_RERANK_ORACLE.replace(
-        "WHERE rn <= 64",
-        "WHERE rn <= GREATEST(64, CAST(CEIL(0.03 * "
-        "(SELECT COUNT(*) FROM e)) AS BIGINT))",
+    verified: depth 600, hash-exact)."""
+    return _fold(
+        _IVFPQ_RERANK_ORACLE,
+        (
+            "WHERE rn <= 64",
+            "WHERE rn <= GREATEST(64, CAST(CEIL(0.03 * "
+            "(SELECT COUNT(*) FROM e)) AS BIGINT))",
+        ),
     )
-    assert out != _IVFPQ_RERANK_ORACLE, "shortlist cut not found"
-    return out
 
 
 @query("similarity_ivfpq_rerank_auto", oracle=_ivfpq_auto_oracle())
@@ -1654,10 +1627,7 @@ def similarity_ivfpq_rerank_auto(spark, sf_dir):
 
 def _ivfpq_auto_cells_oracle() -> str:
     """The rerank oracle with ALL THREE dial formulas folded in
-    (VERDICT r13 #3, the same surgical-insertion discipline as the
-    auto-shortlist and filtered oracles — every replacement asserts it
-    changed something, so a reshaped base oracle fails the import
-    instead of silently pinning the wrong pipeline):
+    (VERDICT r13 #3):
 
       nc = GREATEST(8,  CEIL(SQRT(n)))            -- auto_ivf_cells
       sl = GREATEST(64, CEIL(0.03 * n))           -- auto_shortlist_depth
@@ -1677,9 +1647,9 @@ def _ivfpq_auto_cells_oracle() -> str:
             FROM e)
     ),
     cent AS ("""
-    out = _IVFPQ_RERANK_ORACLE.replace("cent AS (", dial)
-    assert out != _IVFPQ_RERANK_ORACLE, "cent CTE not found"
-    steps = [
+    return _fold(
+        _IVFPQ_RERANK_ORACLE,
+        ("cent AS (", dial),
         # centroid sample: first nc vec_ids
         ("WHERE vec_id < 8", "WHERE vec_id < (SELECT nc FROM dial)"),
         # residual codebook sample: the _PQ_K ids after the centroids
@@ -1696,12 +1666,7 @@ def _ivfpq_auto_cells_oracle() -> str:
         ("WHERE rn <= 3", "WHERE rn <= (SELECT np FROM dial)"),
         # shortlist depth
         ("WHERE rn <= 64", "WHERE rn <= (SELECT sl FROM dial)"),
-    ]
-    for old, new in steps:
-        nxt = out.replace(old, new)
-        assert nxt != out, f"auto-cells oracle anchor not found: {old!r}"
-        out = nxt
-    return out
+    )
 
 
 @query("similarity_ivfpq_auto_cells", oracle=_ivfpq_auto_cells_oracle())
@@ -1726,75 +1691,16 @@ def similarity_ivfpq_auto_cells(spark, sf_dir):
 # -- filtered ANN: metadata predicate + IVF-PQ top-k (round 13) ----------
 # The one similarity shape a real corpus pipeline hits that the suite
 # lacked (VERDICT r12 #5): "top-k neighbors WHERE label = X /
-# quality > t". The predicate-passing id set prunes the CODES relation
-# BEFORE ADC (a left-semi join Catalyst/AQE turns into a broadcast
-# when the set is small and a shuffled semi-join when it is not), so
-# every downstream stage — ADC tables, shortlist, rerank — works on
-# the filtered corpus: unlike post-filtering an unfiltered top-k, the
-# result can never starve when the predicate is selective, because the
-# shortlist is drawn FROM predicate-passing candidates.
+# quality > t". The predicate-passing id set (ivfpq_rerank_topk's
+# ``predicate``) prunes the CODES relation BEFORE ADC (a left-semi
+# join Catalyst/AQE turns into a broadcast when the set is small and a
+# shuffled semi-join when it is not), so every downstream stage — ADC
+# tables, shortlist, rerank — works on the filtered corpus: unlike
+# post-filtering an unfiltered top-k, the result can never starve when
+# the predicate is selective, because the shortlist is drawn FROM
+# predicate-passing candidates.
 
 _FILTER_LABEL = 3  # the frozen key's predicate (≈10% selectivity)
-
-
-def ivfpq_filtered_topk(
-    spark,
-    sf_dir,
-    predicate,
-    n_queries: int = 5,
-    k: int = 4,
-    nprobe: int | None = None,
-    shortlist: int | None = None,
-    index: AnnIndex | None = None,
-    n_cells: int | None = None,
-):
-    """Filtered IVF-PQ top-k: exact quantized-cosine top-``k`` among
-    the vectors passing ``predicate`` (a Column over the embeddings
-    table's metadata), selected by ADC over the PRE-FILTERED codes
-    relation + shortlist + exact rerank. Queries are NOT required to
-    pass the predicate (query anything; neighbors must pass).
-    ``shortlist`` defaults to auto_shortlist_depth over the FILTERED
-    id set — the corpus the shortlist actually ranks.
-
-    ``nprobe`` defaults to the ADAPTIVE formula over the FILTERED set
-    (VERDICT r13 #4): auto_ivf_nprobe(n_passing, n_cells, shortlist)
-    widens probing exactly as the predicate gets selective — a 0.1%
-    predicate leaves each probed cell nearly empty, and a fixed
-    nprobe=3 would leave k unfillable while unprobed cells hold all
-    the passing vectors. At the selective limit the formula hits its
-    n_cells cap, ADC degrades gracefully to EXHAUSTIVE scoring of the
-    filtered codes (which is tiny by definition — brute force emerges
-    from the same formula, no discrete fallback branch), and the
-    shortlist (>= its 64 floor >= n_passing) covers every passing
-    candidate: the rerank then returns the EXACT cosine top-k over
-    the whole filtered set. Recall@k vs selectivity is pinned flat in
-    tests/test_similarity.py's sweep.
-
-    When no ``index`` is passed, the built index's ``n_cells``
-    defaults to auto_ivf_cells over the FULL corpus (same as
-    ivfpq_rerank_topk — the index serves every predicate, so its
-    layout is sized to the corpus, not to any one filter); the frozen
-    oracle keys pin n_cells=8 explicitly."""
-    e = t(spark, sf_dir, "embeddings")
-    v = e.select("vec_id", quantized(F.col("embedding")).alias("qv"))
-    if index is None:
-        if n_cells is None:
-            n_cells = auto_ivf_cells(v.count())
-        index = build_ann_index(v, n_cells)
-    passing = e.filter(predicate).select("vec_id")
-    fidx = AnnIndex(
-        index.cents,
-        index.codebook,
-        index.codes.join(passing, "vec_id", "left_semi"),
-    )
-    if shortlist is None or nprobe is None:
-        nf = passing.count()
-        if shortlist is None:
-            shortlist = auto_shortlist_depth_n(nf)
-        if nprobe is None:
-            nprobe = auto_ivf_nprobe(nf, index.cents.count(), shortlist)
-    score = _ivfpq_scores(v, fidx, n_queries, nprobe)
-    return _pq_shortlist_rerank(score, v, n_queries, k, shortlist=shortlist)
 
 
 def _ivfpq_filtered_oracle() -> str:
@@ -1805,27 +1711,24 @@ def _ivfpq_filtered_oracle() -> str:
     FILTERED set — the corpus the Spark default actually sizes the
     shortlist on (max(64, ceil(0.03 * n_passing)); ADVICE r13: the
     frozen 'rn <= 64' cut silently diverged once the passing set
-    exceeded ~2133 rows). Built by surgical insertion so the two
-    pipelines can never drift apart silently; the asserts fail the
-    import if the base oracle's shape changes."""
+    exceeded ~2133 rows)."""
     lab = (
         f"lab AS (SELECT vec_id FROM embeddings "
         f"WHERE label = {_FILTER_LABEL}),\n    score AS ("
     )
-    out = _IVFPQ_RERANK_ORACLE.replace("score AS (", lab)
-    assert out != _IVFPQ_RERANK_ORACLE, "score CTE not found"
-    joined = out.replace(
-        "FROM enc JOIN qt ON",
-        "FROM enc JOIN lab ON enc.vec_id = lab.vec_id JOIN qt ON",
+    return _fold(
+        _IVFPQ_RERANK_ORACLE,
+        ("score AS (", lab),
+        (
+            "FROM enc JOIN qt ON",
+            "FROM enc JOIN lab ON enc.vec_id = lab.vec_id JOIN qt ON",
+        ),
+        (
+            "WHERE rn <= 64",
+            "WHERE rn <= GREATEST(64, CAST(CEIL(0.03 * "
+            "(SELECT COUNT(*) FROM lab)) AS BIGINT))",
+        ),
     )
-    assert joined != out, "enc/qt join not found"
-    depth = joined.replace(
-        "WHERE rn <= 64",
-        "WHERE rn <= GREATEST(64, CAST(CEIL(0.03 * "
-        "(SELECT COUNT(*) FROM lab)) AS BIGINT))",
-    )
-    assert depth != joined, "shortlist cut not found"
-    return depth
 
 
 @query("similarity_ivfpq_filtered_topk", oracle=_ivfpq_filtered_oracle())
@@ -1843,10 +1746,10 @@ def similarity_ivfpq_filtered_topk(spark, sf_dir):
     default is pinned by similarity_ivfpq_filtered_adaptive below.
     Pre- vs post-filter recall at low selectivity is measured in
     SCALING.md round 13."""
-    return ivfpq_filtered_topk(
+    return ivfpq_rerank_topk(
         spark,
         sf_dir,
-        F.col("label") == _FILTER_LABEL,
+        predicate=F.col("label") == _FILTER_LABEL,
         nprobe=_IVFPQ_NPROBE,
         n_cells=_IVFPQ_CELLS,
     )
@@ -1877,21 +1780,16 @@ def _ivfpq_filtered_adaptive_oracle() -> str:
     ),
     score AS ("""
     )
-    out = _IVFPQ_RERANK_ORACLE.replace("score AS (", lab)
-    assert out != _IVFPQ_RERANK_ORACLE, "score CTE not found"
-    steps = [
+    return _fold(
+        _IVFPQ_RERANK_ORACLE,
+        ("score AS (", lab),
         (
             "FROM enc JOIN qt ON",
             "FROM enc JOIN lab ON enc.vec_id = lab.vec_id JOIN qt ON",
         ),
         ("WHERE rn <= 3", "WHERE rn <= (SELECT np FROM fdial)"),
         ("WHERE rn <= 64", "WHERE rn <= (SELECT sl FROM fdial)"),
-    ]
-    for old, new in steps:
-        nxt = out.replace(old, new)
-        assert nxt != out, f"adaptive filtered oracle anchor not found: {old!r}"
-        out = nxt
-    return out
+    )
 
 
 @query(
@@ -1900,7 +1798,7 @@ def _ivfpq_filtered_adaptive_oracle() -> str:
 def similarity_ivfpq_filtered_adaptive(spark, sf_dir):
     """Filtered ANN under a SELECTIVE (~1%) predicate on the ADAPTIVE
     nprobe default (VERDICT r13 #4): vec_id % 100 = 7 passes ~1% of
-    vectors, and ivfpq_filtered_topk's defaults size the shortlist on
+    vectors, and ivfpq_rerank_topk's defaults size the shortlist on
     the filtered set and widen nprobe until the expected probed,
     filtered candidate pool covers 2x the shortlist — at this
     selectivity the fixture resolves to nprobe = n_cells (probe
@@ -1911,10 +1809,10 @@ def similarity_ivfpq_filtered_adaptive(spark, sf_dir):
     so the key pins the adaptive path hash-exact at any scale; the
     no-decay recall sweep across 10% / 1% / 0.1% selectivities lives
     in tests/test_similarity.py."""
-    return ivfpq_filtered_topk(
+    return ivfpq_rerank_topk(
         spark,
         sf_dir,
-        (F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
+        predicate=(F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
         n_cells=_IVFPQ_CELLS,
     )
 
@@ -1951,10 +1849,10 @@ def similarity_ivfpq_filtered_saved(spark, sf_dir):
         f"por_spark_ann_idx_{getpass.getuser()}_{tag}",
     )
     save_ann_index(build_ann_index(v, n_cells=_IVFPQ_CELLS), store, force=True)
-    return ivfpq_filtered_topk(
+    return ivfpq_rerank_topk(
         spark,
         sf_dir,
-        (F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
+        predicate=(F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
         index=load_ann_index(spark, store),
     )
 
@@ -1968,10 +1866,7 @@ def _ivfpq_lifecycle_oracle() -> str:
     full-corpus dial). Matches the Spark side because the rebuild
     produces exactly build_ann_index(v, auto_ivf_cells(n)) — the same
     index similarity_ivfpq_auto_cells queries — and
-    ivfpq_filtered_topk's defaults size sl/np on the filtered set.
-    Same surgical-insertion discipline: every replacement asserts it
-    changed something."""
-    base = _ivfpq_auto_cells_oracle()
+    ivfpq_rerank_topk's defaults size sl/np on the filtered set."""
     lab = (
         f"""lab AS (SELECT vec_id FROM embeddings
       WHERE vec_id % {_ADAPT_FILTER_MOD} = 7),
@@ -1986,9 +1881,9 @@ def _ivfpq_lifecycle_oracle() -> str:
     ),
     cent AS ("""
     )
-    out = base.replace("cent AS (", lab)
-    assert out != base, "cent CTE not found"
-    steps = [
+    return _fold(
+        _ivfpq_auto_cells_oracle(),
+        ("cent AS (", lab),
         (
             "FROM enc JOIN qt ON",
             "FROM enc JOIN lab ON enc.vec_id = lab.vec_id JOIN qt ON",
@@ -1997,12 +1892,7 @@ def _ivfpq_lifecycle_oracle() -> str:
          "WHERE rn <= (SELECT np FROM fdial)"),
         ("WHERE rn <= (SELECT sl FROM dial)",
          "WHERE rn <= (SELECT sl FROM fdial)"),
-    ]
-    for old, new in steps:
-        nxt = out.replace(old, new)
-        assert nxt != out, f"lifecycle oracle anchor not found: {old!r}"
-        out = nxt
-    return out
+    )
 
 
 @query(
@@ -2113,10 +2003,10 @@ def similarity_ivfpq_lifecycle_rebuild(spark, sf_dir):
             if attempt:
                 raise
     # (6) the production filtered query through the rebuilt index
-    return ivfpq_filtered_topk(
+    return ivfpq_rerank_topk(
         spark,
         sf_dir,
-        (F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
+        predicate=(F.col("vec_id") % _ADAPT_FILTER_MOD) == 7,
         index=rebuilt,
     )
 
@@ -2724,9 +2614,7 @@ _SEM_COS_SQL = """
 """
 
 
-@query(
-    "dedup_semantic",
-    oracle=f"""
+_SEM_ORACLE = f"""
     WITH e AS (
       SELECT vec_id,
              LIST_TRANSFORM(embedding,
@@ -2754,8 +2642,10 @@ _SEM_COS_SQL = """
     )
     SELECT asg.vec_id, CAST(asg.cell AS BIGINT) AS cell, dup.dup_of
     FROM asg LEFT JOIN dup USING (vec_id)
-    """,
-)
+    """
+
+
+@query("dedup_semantic", oracle=_SEM_ORACLE)
 def dedup_semantic(spark, sf_dir):
     """SemDeDup semantic dedup over the embeddings table, hash-exact
     end-to-end: 8 (= _SEM_CELLS) sampled centroids, integer-L2 cell
@@ -2771,43 +2661,19 @@ def dedup_semantic(spark, sf_dir):
 
 @query(
     "dedup_semantic_auto_cells",
-    oracle=f"""
-    WITH e AS (
-      SELECT vec_id,
-             LIST_TRANSFORM(embedding,
-               x -> CAST(ROUND(CAST(x AS DOUBLE) * 1000, 0) AS BIGINT)) AS qv
-      FROM embeddings
-    ),
-    dial AS (
+    oracle=_fold(
+        _SEM_ORACLE,
+        (
+            "cents AS (",
+            f"""dial AS (
       SELECT GREATEST({_SEM_CELLS},
                       CAST(CEIL(SQRT(COUNT(*))) AS BIGINT)) AS nc
       FROM e
     ),
-    cents AS (
-      SELECT vec_id AS cell, qv AS cv FROM e
-      WHERE vec_id < (SELECT nc FROM dial)
+    cents AS (""",
+        ),
+        (f"WHERE vec_id < {_SEM_CELLS}", "WHERE vec_id < (SELECT nc FROM dial)"),
     ),
-    dists AS (
-      SELECT e.vec_id, e.qv, c.cell,
-             LIST_SUM(LIST_TRANSFORM(RANGE(1, LEN(e.qv) + 1),
-               i -> (e.qv[i] - c.cv[i]) * (e.qv[i] - c.cv[i]))) AS d2
-      FROM e CROSS JOIN cents c
-    ),
-    asg AS (
-      SELECT vec_id, qv, cell FROM (
-        SELECT vec_id, qv, cell,
-               ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
-        FROM dists) WHERE rn = 1
-    ),
-    dup AS (
-      SELECT b.vec_id AS vec_id, MIN(a.vec_id) AS dup_of
-      FROM asg a JOIN asg b ON a.cell = b.cell AND a.vec_id < b.vec_id
-      WHERE {_SEM_COS_SQL} >= {_SEM_TAU}
-      GROUP BY b.vec_id
-    )
-    SELECT asg.vec_id, CAST(asg.cell AS BIGINT) AS cell, dup.dup_of
-    FROM asg LEFT JOIN dup USING (vec_id)
-    """,
 )
 def dedup_semantic_auto_cells(spark, sf_dir):
     """SemDeDup on the AUTO cell dial (VERDICT r13 #3's 'extend to

@@ -569,11 +569,11 @@ def biased_features(docs):
     made Catalyst expand the self-reference into a SECOND full
     explode + per-term hash + aggregate subtree under the union — a
     whole corpus pass computing md5s only to be projected away (guide
-    §2.3 'don't compute what you throw away'; plan diff in plans/r15/
-    text_classifier_distilled_*.txt: the union's second branch lost
-    its Exchange + Generate). Callers pass unique-doc_id relations
-    (the corpus or a split of it), which is what keeps the two
-    derivations row-for-row equal."""
+    §2.3 'don't compute what you throw away'; plan diff in
+    plans/r15/text_classifier_distilled_*.txt, recoverable from commit
+    09f58c5: the union's second branch lost its Exchange + Generate).
+    Callers pass unique-doc_id relations (the corpus or a split of it),
+    which is what keeps the two derivations row-for-row equal."""
     feats = hashed_features(docs)
     has_term = F.exists(
         F.split("text", " "), lambda w: F.length(w) > 0

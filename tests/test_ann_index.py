@@ -327,7 +327,7 @@ def test_filtered_topk_over_loaded_index(spark, sf_dir, tmp_path):
     from presto_on_ray_spark.operators._util import t
     from presto_on_ray_spark.operators.similarity import (
         build_ann_index,
-        ivfpq_filtered_topk,
+        ivfpq_rerank_topk,
         quantized,
     )
 
@@ -338,8 +338,8 @@ def test_filtered_topk_over_loaded_index(spark, sf_dir, tmp_path):
     save_ann_index(built, p)
     loaded = load_ann_index(spark, p)
     pred = F.col("label") == 3
-    a = ivfpq_filtered_topk(spark, sf_dir, pred, index=built)
-    b = ivfpq_filtered_topk(spark, sf_dir, pred, index=loaded)
+    a = ivfpq_rerank_topk(spark, sf_dir, predicate=pred, index=built)
+    b = ivfpq_rerank_topk(spark, sf_dir, predicate=pred, index=loaded)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 

@@ -765,7 +765,7 @@ def test_ivfpq_filtered_topk_respects_predicate(spark, sf_dir):
     pre-filter holds 0.2-0.55)."""
     from presto_on_ray_spark.operators.similarity import (
         _FILTER_LABEL,
-        ivfpq_filtered_topk,
+        ivfpq_rerank_topk,
         similarity_ivfpq_filtered_topk,
     )
 
@@ -786,10 +786,10 @@ def test_ivfpq_filtered_topk_respects_predicate(spark, sf_dir):
     # the predicate itself — at nprobe<n_cells a passing vector in an
     # unprobed cell is correctly pruned, which is ANN cell pruning,
     # not post-filter starvation)
-    tiny = ivfpq_filtered_topk(
+    tiny = ivfpq_rerank_topk(
         spark,
         sf_dir,
-        (F.col("label") == _FILTER_LABEL) & (F.col("vec_id") % 5 == 0),
+        predicate=(F.col("label") == _FILTER_LABEL) & (F.col("vec_id") % 5 == 0),
     )
     per_q = tiny.groupBy("qid").count().collect()
     assert len(per_q) == 5 and all(r["count"] == 4 for r in per_q)
@@ -797,17 +797,48 @@ def test_ivfpq_filtered_topk_respects_predicate(spark, sf_dir):
 
 def test_ivfpq_filtered_matches_unfiltered_on_true_predicate(spark, sf_dir):
     """A predicate passing EVERY vector reduces the filtered pipeline
-    to the auto-dial unfiltered one exactly: both entry points now
-    default to the same auto-sized index build, and the depth AND
-    adaptive-nprobe formulas see the same n."""
-    from presto_on_ray_spark.operators.similarity import (
-        ivfpq_filtered_topk,
-        ivfpq_rerank_topk,
-    )
+    to the auto-dial unfiltered one exactly: both default to the same
+    auto-sized index build, and the depth AND adaptive-nprobe formulas
+    see the same n."""
+    from presto_on_ray_spark.operators.similarity import ivfpq_rerank_topk
 
-    a = ivfpq_filtered_topk(spark, sf_dir, F.lit(True))
+    a = ivfpq_rerank_topk(spark, sf_dir, predicate=F.lit(True))
     b = ivfpq_rerank_topk(spark, sf_dir)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_ivfpq_rerank_with_pinned_dials_runs_no_job(spark, sf_dir):
+    """With the index's cell count, nprobe and shortlist all given, no
+    dial needs a count, so building the plan starts no Spark job."""
+    from presto_on_ray_spark.caching import release_cached
+    from presto_on_ray_spark.operators.similarity import ivfpq_rerank_topk
+    from tests.test_caching import _jobs_in_group
+
+    t(spark, sf_dir, "embeddings")
+    try:
+        jobs, _ = _jobs_in_group(
+            spark, "ivfpq-pinned",
+            lambda: ivfpq_rerank_topk(
+                spark, sf_dir, nprobe=3, shortlist=64, n_cells=8
+            ),
+        )
+    finally:
+        release_cached()
+    assert jobs == 0
+
+
+def test_fold_substitutes_each_anchor_once_in_order():
+    from presto_on_ray_spark.operators.similarity import _fold
+
+    # each step reads the text the previous one left
+    assert _fold("a b c", ("a", "x y"), ("x", "z")) == "z y b c"
+    with pytest.raises(ValueError, match="0 times"):
+        _fold("a b c", ("d", "e"))
+    with pytest.raises(ValueError, match="2 times"):
+        _fold("a b a", ("a", "e"))
+    # a later step sees an anchor an earlier one introduced twice
+    with pytest.raises(ValueError, match="2 times"):
+        _fold("a b", ("a", "b"), ("b", "c"))
 
 
 # -- round 14: auto cell/probe dials + adaptive filtered ANN --------------
@@ -873,7 +904,7 @@ def test_filtered_adaptive_recall_sweep_no_decay(spark, sf_dir):
     fixed nprobe=3, where a 0.1% predicate leaves probed cells empty."""
     import numpy as np
 
-    from presto_on_ray_spark.operators.similarity import ivfpq_filtered_topk
+    from presto_on_ray_spark.operators.similarity import ivfpq_rerank_topk
 
     e = t(spark, sf_dir, "embeddings")
     rows = e.select("vec_id", "embedding").collect()
@@ -888,7 +919,7 @@ def test_filtered_adaptive_recall_sweep_no_decay(spark, sf_dir):
         assert passing, f"sweep predicate mod={mod} passes nothing"
         got = {
             (r["qid"], r["cid"])
-            for r in ivfpq_filtered_topk(spark, sf_dir, pred).collect()
+            for r in ivfpq_rerank_topk(spark, sf_dir, predicate=pred).collect()
         }
         hits = total = 0
         for qid in range(5):
@@ -906,20 +937,20 @@ def test_filtered_adaptive_recall_sweep_no_decay(spark, sf_dir):
 
 
 def test_filtered_adaptive_key_equals_explicit_dials(spark, sf_dir):
-    """similarity_ivfpq_filtered_adaptive == ivfpq_filtered_topk with
+    """similarity_ivfpq_filtered_adaptive == ivfpq_rerank_topk with
     the filtered-set formulas pre-resolved (nf=5 at the fixture: sl=64
     floor, nprobe capped at the 8-cell index — the emergent
     brute-force limit)."""
     from presto_on_ray_spark.operators.similarity import (
         _ADAPT_FILTER_MOD,
-        ivfpq_filtered_topk,
+        ivfpq_rerank_topk,
         similarity_ivfpq_filtered_adaptive,
     )
 
     pred = (F.col("vec_id") % _ADAPT_FILTER_MOD) == 7
     a = similarity_ivfpq_filtered_adaptive(spark, sf_dir)
-    b = ivfpq_filtered_topk(
-        spark, sf_dir, pred, nprobe=8, shortlist=64, n_cells=8
+    b = ivfpq_rerank_topk(
+        spark, sf_dir, predicate=pred, nprobe=8, shortlist=64, n_cells=8
     )
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
